@@ -142,6 +142,15 @@ object BlackScholes {
 
   /** American option price on a CRR binomial tree (the reference's
     * second IV basis, Organizers.py:138-147).
+    *
+    * Cost per tree: `2·steps+1` `pow` calls plus O(steps²)
+    * multiply-adds. A node at depth `step`, index `j` sits on lattice
+    * level `m = 2j - step ∈ [-steps, steps]`, so the exercise payoff of
+    * each level is computed once into `ex(m + steps)` from the same
+    * `s * pow(u, m)` a per-node evaluation would use, and backward
+    * induction reads it from the table. The result is bit-identical to
+    * evaluating `pow` at every node (same operands, same order; JDK 17
+    * doubles are strict, so nothing is contracted to FMA).
     */
   def binomialPrice(isCall: Boolean, s: Double, k: Double, t: Double,
       r: Double, q: Double, sigma: Double, steps: Int = 100): Double = {
@@ -153,21 +162,27 @@ object BlackScholes {
     val disc = math.exp(-r * dt)
     val p = (math.exp((r - q) * dt) - d) / (u - d)
     if (p <= 0.0 || p >= 1.0) return 0.0
+    val pd = 1.0 - p
+    val ex = new Array[Double](2 * steps + 1)
+    var m = 0
+    while (m <= 2 * steps) {
+      val st = s * math.pow(u, m - steps)
+      ex(m) = if (isCall) math.max(st - k, 0.0) else math.max(k - st, 0.0)
+      m += 1
+    }
     val values = new Array[Double](steps + 1)
     var i = 0
     while (i <= steps) {
-      val st = s * math.pow(u, 2 * i - steps)
-      values(i) = if (isCall) math.max(st - k, 0.0) else math.max(k - st, 0.0)
+      values(i) = ex(2 * i)
       i += 1
     }
     var step = steps - 1
     while (step >= 0) {
+      val off = steps - step
       var j = 0
       while (j <= step) {
-        val cont = disc * (p * values(j + 1) + (1.0 - p) * values(j))
-        val st = s * math.pow(u, 2 * j - step)
-        val ex = if (isCall) math.max(st - k, 0.0) else math.max(k - st, 0.0)
-        values(j) = math.max(cont, ex)
+        val cont = disc * (p * values(j + 1) + pd * values(j))
+        values(j) = math.max(cont, ex(2 * j + off))
         j += 1
       }
       step -= 1
@@ -179,7 +194,4 @@ object BlackScholes {
   def binomialImpliedVol(isCall: Boolean, price: Double, s: Double,
       k: Double, t: Double, r: Double, q: Double, steps: Int = 100): Double =
     impliedVol(price, sigma => binomialPrice(isCall, s, k, t, r, q, sigma, steps))
-
-  /** Year-fraction time distance (Organizers.py:131 `time_distance_helper`). */
-  def yearFraction(days: Double): Double = days / 365.0
 }

@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   * built-in exists). The UDF returns ONE struct per price basis so
   * each row pays a single kernel invocation per basis, not one per
   * output column; Catalyst expands the struct into columns for free.
+  *
+  * Per row and basis the cost is dominated by the binomial IV solve:
+  * about 40 CRR trees of 100 steps (bisection plus bracket and root
+  * checks), each `2·steps+1` `pow` calls plus O(steps²) multiply-adds
+  * (see [[BlackScholes.binomialPrice]]). The BS solve and greeks are
+  * closed-form by comparison. The missing-vol rescue reads only the BS
+  * IV, so it calls [[bsIvOf]] and builds no tree.
   */
 object RiskKernels {
 
@@ -27,24 +34,40 @@ object RiskKernels {
       gamma: Double, theta: Double, vega: Double, rho: Double,
       dollar_delta: Double)
 
+  private def isCallRight(right: String): Boolean =
+    right != null && right.nonEmpty &&
+      Character.toUpperCase(right.charAt(0)) == 'C'
+
+  private def anyNull(right: String, xs: java.lang.Double*): Boolean =
+    right == null || xs.contains(null)
+
+  /** ±inf/NaN→0 cleanup (Organizers.py:288-292). */
+  private def z(x: Double): Double = if (java.lang.Double.isFinite(x)) x else 0.0
+
   def riskOf(right: String, price: java.lang.Double, s: java.lang.Double,
       k: java.lang.Double, t: java.lang.Double, r: java.lang.Double,
       q: java.lang.Double): Risk = {
-    if (right == null || price == null || s == null || k == null ||
-      t == null || r == null || q == null)
+    if (anyNull(right, price, s, k, t, r, q))
       return Risk(0, 0, 0, 0, 0, 0, 0, 0)
-    val isCall = right.nonEmpty && Character.toUpperCase(right.charAt(0)) == 'C'
+    val isCall = isCallRight(right)
     val iv = bsImpliedVol(isCall, price, s, k, t, r, q)
     val binIv = binomialImpliedVol(isCall, price, s, k, t, r, q)
     val g =
       if (iv > 0.0) bsGreeks(isCall, s, k, t, r, q, iv)
       else Greeks(0, 0, 0, 0, 0)
-    def z(x: Double) = if (java.lang.Double.isFinite(x)) x else 0.0
     Risk(z(iv), z(binIv), z(g.delta), z(g.gamma), z(g.theta), z(g.vega),
       z(g.rho), z(g.delta * s))
   }
 
+  /** `riskOf(...).bs_iv` without the binomial solve and greeks. */
+  def bsIvOf(right: String, price: java.lang.Double, s: java.lang.Double,
+      k: java.lang.Double, t: java.lang.Double, r: java.lang.Double,
+      q: java.lang.Double): Double =
+    if (anyNull(right, price, s, k, t, r, q)) 0.0
+    else z(bsImpliedVol(isCallRight(right), price, s, k, t, r, q))
+
   private val riskUdf = udf(riskOf _)
+  private val bsIvUdf = udf(bsIvOf _)
 
   /** Self-verification of the risk kernel, per row: each boolean holds
     * whenever the kernels are internally consistent, independent of
@@ -70,8 +93,7 @@ object RiskKernels {
 
   def verifyRisk(right: String, price: Double, s: Double, k: Double,
       t: Double, r: Double, q: Double, risk: Risk): RiskCheck = {
-    val isCall = right != null && right.nonEmpty &&
-      Character.toUpperCase(right.charAt(0)) == 'C'
+    val isCall = isCallRight(right)
     val bsOk = risk.bs_iv == 0.0 ||
       math.abs(bsPrice(isCall, s, k, t, r, q, risk.bs_iv) - price) < 1e-6
     val binOk = risk.binomial_iv == 0.0 ||
@@ -92,8 +114,7 @@ object RiskKernels {
       s: java.lang.Double, k: java.lang.Double, t: java.lang.Double,
       r: java.lang.Double, q: java.lang.Double): RiskVerified = {
     val risk = riskOf(right, price, s, k, t, r, q)
-    if (right == null || price == null || s == null || k == null ||
-      t == null || r == null || q == null)
+    if (anyNull(right, price, s, k, t, r, q))
       RiskVerified(risk, RiskCheck(bs_roundtrip_ok = true,
         binomial_roundtrip_ok = true, delta_in_range = true,
         gamma_nonneg = true, vega_nonneg = true, dollar_delta_exact = true))
@@ -122,15 +143,17 @@ object RiskKernels {
     * primary-price IV solved to 0 are re-solved with a fallback price
     * column (the reference retries with the midpoint). Declarative
     * `when` over a second kernel call on the SAME row — no second
-    * pass over the data, no union.
+    * pass over the data, no union. The re-solve is BS-only
+    * ([[bsIvOf]]): it yields exactly `riskOf(...).bs_iv` without the
+    * binomial solve and greeks nobody reads.
     */
   def rescueMissingVol(df: DataFrame, ivCol: String,
       fallbackPriceCol: String): DataFrame = {
-    val rescued = riskUdf(col("right"), col(fallbackPriceCol),
+    val rescued = bsIvUdf(col("right"), col(fallbackPriceCol),
       col("underlier_price"), col("strike"), col("year_frac"),
       col("rf_rate"), col("div_yield"))
     df.withColumn(ivCol,
-      when(col(ivCol) === 0.0, rescued("bs_iv")).otherwise(col(ivCol)))
+      when(col(ivCol) === 0.0, rescued).otherwise(col(ivCol)))
   }
 
   /** Enrich `df` with IV/greeks columns for each (prefix → price

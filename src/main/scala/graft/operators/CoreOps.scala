@@ -195,15 +195,6 @@ object CoreOps {
       .select(col("__row.*"))
   }
 
-  /** Keep-first variant (Organizers.py:126 dedups keep="first"). */
-  def dedupKeepFirst(df: DataFrame, keys: Seq[String], orderCols: Seq[String]): DataFrame = {
-    val payload = struct(df.columns.toIndexedSeq.map(col): _*)
-    val ord = struct(orderCols.map(col): _*)
-    df.groupBy(keys.map(col): _*)
-      .agg(min_by(payload, ord).as("__row"))
-      .select(col("__row.*"))
-  }
-
   // -------------------------------------------------------------------
   // W3 — forward fill (last observation carried forward).
   // Reference: utils.py:322,396-399 (resample default method "ffill"),

@@ -116,9 +116,6 @@ object Store {
     */
   def truncate(df: DataFrame): DataFrame = df.filter(lit(false))
 
-  /** K6 — whole-table dedup rewrite (SQLHelpers.py:370-405). */
-  def dedupRewrite(df: DataFrame): DataFrame = df.dropDuplicates()
-
   /** K7 — pre-save filter (SQLHelpers.py:894-924 `__filter_data`):
     * lowercase column names, drop rows that are entirely null, drop
     * full-row duplicates, drop repeated column names (keep first).
