@@ -80,9 +80,12 @@ object ProbeHarness {
     killed
   }
 
-  /** Listener-bus quiescence barrier — see
-    * [[org.apache.spark.sql.graftshim.ListenerShim]].
+  /** Listener-bus quiescence barrier: the bus delivers events
+    * asynchronously, so a probe that resets its counters between
+    * passes (or reads them at collect return) drains it first. Without
+    * it a previous pass's late task-failure events would be credited
+    * to the current pass and could attest a kill that missed. See
+    * [[TaskMetricsProbe.drain]].
     */
-  def drainListeners(spark: SparkSession): Unit =
-    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+  def drainListeners(spark: SparkSession): Unit = TaskMetricsProbe.drain(spark)
 }

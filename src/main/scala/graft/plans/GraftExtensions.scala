@@ -2,12 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions with any session built with
+/** SparkSessionExtensions entry point: registers the engine's SQL
+  * functions ([[GraftExtensions.Functions]]) with any session built with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`), so cluster users get
-  * `simhash64` / `rolling_hash64` / `trading_day_roll` /
-  * `bounded_top_k` in SQL without code changes, plus the
+  * `.withExtensions(new GraftExtensions)`), so cluster users reach the
+  * native expressions from SQL without code changes, plus the
   * [[RewriteRankLimitToBoundedTopK]] optimizer rule that turns the
   * `row_number()/rank()/dense_rank() <= k` window idiom (including
   * conjunctive filters and `= c` equality bounds) into the bounded
@@ -16,38 +15,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteRankLimitToBoundedTopK)
-    e.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash64"),
-      new ExpressionInfo(classOf[RollingHash64].getName, "rolling_hash64"),
-      (exprs: Seq[Expression]) => RollingHash64(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("byte_entropy"),
-      new ExpressionInfo(classOf[ByteEntropy].getName, "byte_entropy"),
-      (exprs: Seq[Expression]) => ByteEntropy(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("trading_day_roll"),
-      new ExpressionInfo(classOf[TradingDayRoll].getName, "trading_day_roll"),
-      (exprs: Seq[Expression]) => GraftExtensions.buildTradingDayRoll(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("bounded_top_k"),
-      new ExpressionInfo(classOf[BoundedTopK].getName, "bounded_top_k"),
-      (exprs: Seq[Expression]) => GraftExtensions.buildBoundedTopK(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("bounded_rank_top_k"),
-      new ExpressionInfo(classOf[BoundedRankTopK].getName, "bounded_rank_top_k"),
-      (exprs: Seq[Expression]) => GraftExtensions.buildBoundedRankTopK(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (exprs: Seq[Expression]) => BpeMerges.build(exprs)))
+    GraftExtensions.Functions.foreach { case (name, cls, build) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }
 
@@ -56,11 +31,21 @@ object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   import org.apache.spark.sql.catalyst.util.ArrayData
 
+  /** The SQL functions: name, the expression class, and its builder. */
+  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("simhash64", classOf[SimHash64], e => SimHash64(e.head)),
+    ("rolling_hash64", classOf[RollingHash64], e => RollingHash64(e.head)),
+    ("byte_entropy", classOf[ByteEntropy], e => ByteEntropy(e.head)),
+    ("trading_day_roll", classOf[TradingDayRoll], buildTradingDayRoll),
+    ("bounded_top_k", classOf[BoundedTopK], buildBoundedTopK),
+    ("bounded_rank_top_k", classOf[BoundedRankTopK], buildBoundedRankTopK),
+    ("bpe_encode", classOf[BpeEncode], BpeMerges.build))
+
   /** `trading_day_roll(dateCol, array('yyyy-MM-dd', ...))` — the
     * holiday argument must be a foldable literal (it parameterizes the
     * expression, like a format string).
     */
-  private[plans] def buildTradingDayRoll(exprs: Seq[Expression]): TradingDayRoll = {
+  private def buildTradingDayRoll(exprs: Seq[Expression]): TradingDayRoll = {
     val holidays: Array[Int] = exprs.lift(1) match {
       case None => Array.empty
       case Some(h) if h.foldable =>
@@ -110,7 +95,7 @@ object GraftExtensions {
     * default when absent), so SQL reaches everything the Column API
     * does.
     */
-  private[plans] def buildBoundedTopK(exprs: Seq[Expression]): BoundedTopK = {
+  private def buildBoundedTopK(exprs: Seq[Expression]): BoundedTopK = {
     val k = exprs.lift(1) match {
       case Some(Literal(k: Int, _)) => k
       case Some(other) if other.foldable =>
@@ -129,7 +114,7 @@ object GraftExtensions {
     * arrays address the leading key fields exactly as in
     * `bounded_top_k`.
     */
-  private[plans] def buildBoundedRankTopK(exprs: Seq[Expression]): BoundedRankTopK = {
+  private def buildBoundedRankTopK(exprs: Seq[Expression]): BoundedRankTopK = {
     def intArg(i: Int, name: String): Int = exprs.lift(i) match {
       case Some(e) if e.foldable => e.eval().asInstanceOf[Number].intValue()
       case _ => throw new IllegalArgumentException(

@@ -1,26 +1,30 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the two text-fingerprint kernels
-  * that built-in functions cannot express without exploding rows:
+/** The engine's native Catalyst kernels: per-row computations that
+  * built-in functions express only through interpreted higher-order
+  * functions or exploded rows. Every kernel runs inside whole-stage
+  * codegen (no `CodegenFallback`, no UDF serialization), and all of
+  * them share one scaffold:
   *
-  *  - [[SimHash64]] — 64-bit SimHash over a token array (per-bit
-  *    majority vote of token hashes): the classic near-dup signature
-  *    whose pairwise Hamming distance approximates cosine similarity
-  *    of the token multisets.
-  *  - [[RollingHash64]] — polynomial rolling hash over a string's
-  *    UTF-8 bytes (document fingerprinting, SURVEY §7.5).
-  *
-  * Both implement `doGenCode` by emitting a call to a static kernel,
-  * so they run inside whole-stage codegen (no interpreted fallback,
-  * no UDF serialization) — the preferred extension point per the
-  * build rules (custom Expression > UDF).
+  *  - Eval and codegen come from one method. A kernel extends
+  *    [[UnaryKernel]] or [[BinaryKernel]] and states its per-row
+  *    method `kernel` over the children's non-null values. Interpreted
+  *    eval calls it; generated code calls the same method on the
+  *    kernel object, carried in as a codegen reference, or, where the
+  *    kernel overrides `javaCall`, the static function `kernel` wraps.
+  *    A null input gives null without calling the kernel.
+  *  - A [[BoxedResult]] kernel returns a boxed value, and null from
+  *    `kernel` is a null result.
+  *  - A kernel with array parameters mixes in [[ContentEquality]], so
+  *    its arrays compare by content and plan canonicalization treats
+  *    kernels built from equal arrays as equal.
   */
 object Kernels {
 
@@ -169,15 +173,102 @@ object Kernels {
   }
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
+/** What both kernel bases share: the generated code's handle on the
+  * kernel object, and the statement that stores a call's result.
+  */
+trait Kernel extends Expression {
+
+  protected def reference(ctx: CodegenContext): String =
+    ctx.addReferenceObj(prettyName, this, getClass.getName)
+
+  /** The statement that stores the result of the Java expression `call`. */
+  protected def store(ctx: CodegenContext, ev: ExprCode, call: String): String =
+    s"${ev.value} = $call;"
+}
+
+/** A one-child kernel: `kernel` maps the child's non-null value to the
+  * result, in eval and in generated code alike.
+  */
+abstract class UnaryKernel[A, R] extends UnaryExpression with Kernel {
+  def kernel(input: A): R
+
+  /** The Java expression computing the result from the child's value:
+    * by default a call of `kernel` on this object.
+    */
+  protected def javaCall(ctx: CodegenContext): String => String = {
+    val ref = reference(ctx)
+    c => s"$ref.kernel($c)"
+  }
+
+  override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[A])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = javaCall(ctx)
+    nullSafeCodeGen(ctx, ev, c => store(ctx, ev, call(c)))
+  }
+}
+
+/** The two-child [[UnaryKernel]]. */
+abstract class BinaryKernel[A, B, R] extends BinaryExpression with Kernel {
+  def kernel(left: A, right: B): R
+
+  protected def javaCall(ctx: CodegenContext): (String, String) => String = {
+    val ref = reference(ctx)
+    (a, b) => s"$ref.kernel($a, $b)"
+  }
+
+  override protected def nullSafeEval(left: Any, right: Any): Any =
+    kernel(left.asInstanceOf[A], right.asInstanceOf[B])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = javaCall(ctx)
+    nullSafeCodeGen(ctx, ev, (a, b) => store(ctx, ev, call(a, b)))
+  }
+}
+
+/** A kernel whose `kernel` returns a boxed value, null meaning a null
+  * result (a length mismatch or a null element).
+  */
+trait BoxedResult extends Kernel {
+  override def nullable: Boolean = true
+
+  /** Prefix of the generated local that holds the boxed result. */
+  protected def boxName: String
+
+  override protected def store(ctx: CodegenContext, ev: ExprCode, call: String): String = {
+    val tmp = ctx.freshName(boxName)
+    s"""
+       |java.lang.${CodeGenerator.boxedType(dataType)} $tmp = $call;
+       |if ($tmp == null) { ${ev.isNull} = true; }
+       |else { ${ev.value} = $tmp.${CodeGenerator.javaType(dataType)}Value(); }
+       """.stripMargin
+  }
+}
+
+/** Equality over the case-class fields with arrays compared by
+  * content. An `Array` field compares by reference, so without this two
+  * kernels built from equal arrays would differ to plan
+  * canonicalization and dedup.
+  */
+trait ContentEquality extends Product {
+  private def fields: Array[AnyRef] = productIterator.map(_.asInstanceOf[AnyRef]).toArray
+
+  override def equals(other: Any): Boolean = other match {
+    case o: ContentEquality =>
+      (o.getClass eq getClass) && java.util.Arrays.deepEquals(fields, o.fields)
+    case _ => false
+  }
+
+  override def hashCode(): Int = java.util.Arrays.deepHashCode(fields)
+}
+
+case class SimHash64(child: Expression) extends UnaryKernel[ArrayData, Long] {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.simhash($c)")
+  def kernel(tokens: ArrayData): Long = Kernels.simhash(tokens)
+  override protected def javaCall(ctx: CodegenContext): String => String =
+    c => s"graft.plans.Kernels.simhash($c)"
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -186,8 +277,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 /** Trading-calendar roll: date → the first trading day on-or-after it
   * (weekends + the holiday set skipped) — the codegen promotion of the
   * business-day bucket (SURVEY §4 custom-work item 1; bus_range
-  * semantics, dbase/utils.py:52-68). `d` is a trading day iff
-  * `roll(d) == d`, so the predicate replaces the broadcast holiday
+  * semantics, dbase/utils.py:52-68). `d` is a trading day iff it
+  * rolls to itself, so the predicate replaces the broadcast holiday
   * anti-join with pure column arithmetic that stays inside
   * whole-stage codegen.
   *
@@ -197,11 +288,11 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * so per-task duplication is nil).
   */
 case class TradingDayRoll(child: Expression, holidays: Array[Int])
-  extends UnaryExpression {
+  extends UnaryKernel[Int, Int] with ContentEquality {
   override def dataType: DataType = org.apache.spark.sql.types.DateType
   override def prettyName: String = "trading_day_roll"
 
-  def roll(epochDay: Int): Int = {
+  def kernel(epochDay: Int): Int = {
     var d = epochDay
     // epoch day 0 = 1970-01-01, a Thursday: (d+4)%7 gives 0=Sunday…6=Saturday
     var dow = java.lang.Math.floorMod(d + 4, 7)
@@ -212,26 +303,8 @@ case class TradingDayRoll(child: Expression, holidays: Array[Int])
     d
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    roll(input.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("roller", this, classOf[TradingDayRoll].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.roll($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TradingDayRoll =
     copy(child = newChild)
-
-  // Array[Int] equality is by reference; compare holiday contents so
-  // plan canonicalization/dedup treats equal calendars as equal.
-  override def equals(other: Any): Boolean = other match {
-    case t: TradingDayRoll =>
-      child == t.child && java.util.Arrays.equals(holidays, t.holidays)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() + java.util.Arrays.hashCode(holidays)
 }
 
 /** Exact int64 dot product over two quantized `array<bigint>` vectors
@@ -243,23 +316,14 @@ case class TradingDayRoll(child: Expression, holidays: Array[Int])
   * loop inside whole-stage codegen.
   */
 case class IntDotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, ArrayData, java.lang.Long] with BoxedResult {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "int_dot"
+  override protected def boxName: String = "dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.intDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("dot")
-      s"""
-         |java.lang.Long $tmp = graft.plans.Kernels.intDot($a, $b);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.longValue(); }
-       """.stripMargin
-    })
+  def kernel(a: ArrayData, b: ArrayData): java.lang.Long = Kernels.intDot(a, b)
+  override protected def javaCall(ctx: CodegenContext): (String, String) => String =
+    (a, b) => s"graft.plans.Kernels.intDot($a, $b)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDotProduct =
@@ -274,32 +338,19 @@ case class IntDotProduct(left: Expression, right: Expression)
   * object, exactly like [[TradingDayRoll]]'s holiday set.
   */
 case class RhpSignature(child: Expression, signs: Array[Long],
-    dim: Int = 64) extends UnaryExpression {
+    dim: Int = 64) extends UnaryKernel[ArrayData, UTF8String] with ContentEquality {
   require(dim > 0 && signs.length % dim == 0, "signs must be nPlanes x dim")
   override def dataType: DataType = StringType
   override def prettyName: String = "rhp_signature"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.rhp(input.asInstanceOf[ArrayData], signs, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  def kernel(q: ArrayData): UTF8String = Kernels.rhp(q, signs, dim)
+  override protected def javaCall(ctx: CodegenContext): String => String = {
     val ref = ctx.addReferenceObj("rhpSigns", signs, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.rhp($c, $ref, $dim)")
+    c => s"graft.plans.Kernels.rhp($c, $ref, $dim)"
   }
 
   override protected def withNewChildInternal(newChild: Expression): RhpSignature =
     copy(child = newChild)
-
-  // Array[Long] equality is by reference; compare sign contents so
-  // plan canonicalization treats equal plane sets as equal.
-  override def equals(other: Any): Boolean = other match {
-    case r: RhpSignature =>
-      child == r.child && dim == r.dim &&
-        java.util.Arrays.equals(signs, r.signs)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + java.util.Arrays.hashCode(signs)) + dim
 }
 
 /** Byte-distribution Shannon entropy of a string, in bits — the
@@ -307,15 +358,13 @@ case class RhpSignature(child: Expression, signs: Array[Long],
   * high = natural prose or random noise) as a single codegen kernel:
   * built-ins would need an explode-to-characters + groupBy per row.
   */
-case class ByteEntropy(child: Expression) extends UnaryExpression {
+case class ByteEntropy(child: Expression) extends UnaryKernel[UTF8String, Double] {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "byte_entropy"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.byteEntropy(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.byteEntropy($c)")
+  def kernel(s: UTF8String): Double = Kernels.byteEntropy(s)
+  override protected def javaCall(ctx: CodegenContext): String => String =
+    c => s"graft.plans.Kernels.byteEntropy($c)"
 
   override protected def withNewChildInternal(newChild: Expression): ByteEntropy =
     copy(child = newChild)
@@ -342,7 +391,7 @@ case class ByteEntropy(child: Expression) extends UnaryExpression {
   * token); null propagates as null.
   */
 case class HashedBagScore(child: Expression, weights: Seq[Double], bias: Double)
-  extends UnaryExpression {
+  extends UnaryKernel[UTF8String, Double] {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "hashed_bag_score"
 
@@ -353,7 +402,7 @@ case class HashedBagScore(child: Expression, weights: Seq[Double], bias: Double)
   @transient private lazy val w: Array[Double] = weights.toArray
   @transient private lazy val dim: Long = weights.size.toLong
 
-  def score(text: UTF8String): Double = {
+  def kernel(text: UTF8String): Double = {
     // precompiled pattern: String.split("\\s+") re-compiles the regex
     // per ROW, in the one expression the whole query's cost lives in
     val words = HashedBagScore.Whitespace.split(text.toString)
@@ -371,14 +420,6 @@ case class HashedBagScore(child: Expression, weights: Seq[Double], bias: Double)
       i += 1
     }
     if (n == 0) bias else bias + sum / n
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    score(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bagScore", this, classOf[HashedBagScore].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.score($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): HashedBagScore =
@@ -414,7 +455,7 @@ object HashedBagScore {
   * vector (callers filter zero-norm rows out of cosine).
   */
 case class HashedBagEmbed(child: Expression, weights: Seq[Double], k: Int)
-  extends UnaryExpression {
+  extends UnaryKernel[UTF8String, ArrayData] {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hashed_bag_embed"
@@ -422,7 +463,7 @@ case class HashedBagEmbed(child: Expression, weights: Seq[Double], k: Int)
   @transient private lazy val w: Array[Double] = weights.toArray
   @transient private lazy val dim: Long = (weights.size / k).toLong
 
-  def embed(text: UTF8String): ArrayData = {
+  def kernel(text: UTF8String): ArrayData = {
     val words = HashedBagScore.Whitespace.split(text.toString)
     val sums = new Array[Double](k)
     var n = 0
@@ -450,14 +491,6 @@ case class HashedBagEmbed(child: Expression, weights: Seq[Double], k: Int)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    embed(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bagEmbed", this, classOf[HashedBagEmbed].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.embed($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): HashedBagEmbed =
     copy(child = newChild)
 }
@@ -471,15 +504,13 @@ object HashedBagEmbed {
     .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
 }
 
-case class RollingHash64(child: Expression) extends UnaryExpression {
+case class RollingHash64(child: Expression) extends UnaryKernel[UTF8String, Long] {
   override def dataType: DataType = LongType
   override def prettyName: String = "rolling_hash64"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.rollingHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.rollingHash($c)")
+  def kernel(s: UTF8String): Long = Kernels.rollingHash(s)
+  override protected def javaCall(ctx: CodegenContext): String => String =
+    c => s"graft.plans.Kernels.rollingHash($c)"
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash64 =
     copy(child = newChild)
@@ -492,13 +523,13 @@ case class RollingHash64(child: Expression) extends UnaryExpression {
   * short docs (< k tokens) yield an empty array, grams join with a
   * single space, distinct keeps FIRST-occurrence order.
   */
-case class Shingles(child: Expression, k: Int) extends UnaryExpression {
+case class Shingles(child: Expression, k: Int) extends UnaryKernel[ArrayData, ArrayData] {
   require(k >= 1, s"Shingles needs k >= 1, got $k")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingles"
 
-  def shingle(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     if (n < k)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
@@ -523,14 +554,6 @@ case class Shingles(child: Expression, k: Int) extends UnaryExpression {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    shingle(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingles", this, classOf[Shingles].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.shingle($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Shingles =
     copy(child = newChild)
 }
@@ -544,13 +567,13 @@ case class Shingles(child: Expression, k: Int) extends UnaryExpression {
   * array yields n NULLs, exactly `array_min(transform([]))`.
   */
 case class MinHashes(child: Expression, seedFrom: Int, n: Int)
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, ArrayData] {
   require(n >= 1, s"MinHashes needs n >= 1, got $n")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = true)
   override def prettyName: String = "min_hashes"
 
-  def minHashes(sh: ArrayData): ArrayData = {
+  def kernel(sh: ArrayData): ArrayData = {
     val m = sh.numElements()
     val out = new Array[Any](n)
     if (m == 0)
@@ -584,14 +607,6 @@ case class MinHashes(child: Expression, seedFrom: Int, n: Int)
       s += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    minHashes(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minHashes", this, classOf[MinHashes].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.minHashes($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashes =
@@ -628,7 +643,7 @@ object MinHashes {
   * equals the global distinct because doc_id is unique per input row.
   */
 case class WinnowSelect(child: Expression, k: Int, w: Int)
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, ArrayData] {
   require(k >= 1 && w >= 1, s"WinnowSelect needs k,w >= 1, got $k/$w")
   override def dataType: DataType = {
     import org.apache.spark.sql.types._
@@ -638,7 +653,7 @@ case class WinnowSelect(child: Expression, k: Int, w: Int)
   }
   override def prettyName: String = "winnow_select"
 
-  def select(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     if (n < k)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
@@ -700,14 +715,6 @@ case class WinnowSelect(child: Expression, k: Int, w: Int)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    select(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnow", this, classOf[WinnowSelect].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.select($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WinnowSelect =
     copy(child = newChild)
 }
@@ -737,7 +744,7 @@ object WinnowSelect {
   * chain it replaces, null elements propagated.
   */
 case class QuantizeVec(child: Expression, scale: Double)
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, ArrayData] {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType)
   override def prettyName: String = "quantize_vec"
@@ -746,7 +753,7 @@ case class QuantizeVec(child: Expression, scale: Double)
     child.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.FloatType
 
-  def quantize(v: ArrayData): ArrayData = {
+  def kernel(v: ArrayData): ArrayData = {
     val n = v.numElements()
     val out = new Array[Any](n)
     var i = 0
@@ -761,14 +768,6 @@ case class QuantizeVec(child: Expression, scale: Double)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    quantize(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("quantizeVec", this, classOf[QuantizeVec].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.quantize($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): QuantizeVec =
     copy(child = newChild)
 }
@@ -781,23 +780,14 @@ case class QuantizeVec(child: Expression, scale: Double)
   * null-propagation semantics).
   */
 case class IntSqDist(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, ArrayData, java.lang.Long] with BoxedResult {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "int_sqdist"
+  override protected def boxName: String = "sqd"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.intSqDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("sqd")
-      s"""
-         |java.lang.Long $tmp = graft.plans.Kernels.intSqDist($a, $b);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.longValue(); }
-       """.stripMargin
-    })
+  def kernel(a: ArrayData, b: ArrayData): java.lang.Long = Kernels.intSqDist(a, b)
+  override protected def javaCall(ctx: CodegenContext): (String, String) => String =
+    (a, b) => s"graft.plans.Kernels.intSqDist($a, $b)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntSqDist =
@@ -952,78 +942,52 @@ object PqKernels {
 
 /** PQ encode as one codegen kernel — see [[PqKernels.encode]]. */
 case class PqEncode(child: Expression, book: Array[Long], m: Int,
-    d: Int, ks: Int) extends UnaryExpression {
+    d: Int, ks: Int) extends UnaryKernel[ArrayData, ArrayData] with ContentEquality {
   require(book.length == m * ks * d, "book must be M x KS x D")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.encode(input.asInstanceOf[ArrayData], book, m, d, ks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  def kernel(vec: ArrayData): ArrayData = PqKernels.encode(vec, book, m, d, ks)
+  override protected def javaCall(ctx: CodegenContext): String => String = {
     val ref = ctx.addReferenceObj("pqBook", book, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.PqKernels.encode($c, $ref, $m, $d, $ks)")
+    c => s"graft.plans.PqKernels.encode($c, $ref, $m, $d, $ks)"
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
-
-  // content equality for plan canonicalization (the RhpSignature rule)
-  override def equals(other: Any): Boolean = other match {
-    case e: PqEncode => child == e.child && m == e.m && d == e.d &&
-      ks == e.ks && java.util.Arrays.equals(book, e.book)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(m), Integer.valueOf(d),
-      Integer.valueOf(ks), Integer.valueOf(java.util.Arrays.hashCode(book)))
 }
 
 /** Per-query ADC table as one codegen kernel — see
   * [[PqKernels.adcTable]].
   */
 case class PqAdcTable(child: Expression, book: Array[Long], m: Int,
-    d: Int, ks: Int) extends UnaryExpression {
+    d: Int, ks: Int) extends UnaryKernel[ArrayData, ArrayData] with ContentEquality {
   require(book.length == m * ks * d, "book must be M x KS x D")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pq_adc_table"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.adcTable(input.asInstanceOf[ArrayData], book, m, d, ks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  def kernel(vec: ArrayData): ArrayData = PqKernels.adcTable(vec, book, m, d, ks)
+  override protected def javaCall(ctx: CodegenContext): String => String = {
     val ref = ctx.addReferenceObj("pqBook", book, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.PqKernels.adcTable($c, $ref, $m, $d, $ks)")
+    c => s"graft.plans.PqKernels.adcTable($c, $ref, $m, $d, $ks)"
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqAdcTable =
     copy(child = newChild)
-
-  override def equals(other: Any): Boolean = other match {
-    case e: PqAdcTable => child == e.child && m == e.m && d == e.d &&
-      ks == e.ks && java.util.Arrays.equals(book, e.book)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(m), Integer.valueOf(d),
-      Integer.valueOf(ks), Integer.valueOf(java.util.Arrays.hashCode(book)))
 }
 
 /** ADC score fold as one codegen kernel — see [[PqKernels.adcScore]]. */
 case class PqAdcScore(left: Expression, right: Expression, ks: Int)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, ArrayData, Long] {
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_adc_score"
 
-  override protected def nullSafeEval(dt: Any, code: Any): Any =
-    PqKernels.adcScore(dt.asInstanceOf[ArrayData],
-      code.asInstanceOf[ArrayData], ks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.PqKernels.adcScore($a, $b, $ks)")
+  def kernel(dt: ArrayData, code: ArrayData): Long = PqKernels.adcScore(dt, code, ks)
+  override protected def javaCall(ctx: CodegenContext): (String, String) => String =
+    (a, b) => s"graft.plans.PqKernels.adcScore($a, $b, $ks)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcScore =
@@ -1039,12 +1003,12 @@ case class PqAdcScore(left: Expression, right: Expression, ks: Int)
   * (shorter array) or null.
   */
 case class LongVecSub(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, ArrayData, ArrayData] {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = true)
   override def prettyName: String = "long_vec_sub"
 
-  def sub(a: ArrayData, b: ArrayData): ArrayData = {
+  def kernel(a: ArrayData, b: ArrayData): ArrayData = {
     val na = a.numElements(); val nb = b.numElements()
     val n = math.max(na, nb)
     val out = new Array[Any](n)
@@ -1055,14 +1019,6 @@ case class LongVecSub(left: Expression, right: Expression)
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    sub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("longVecSub", this, classOf[LongVecSub].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.sub($a, $b)")
   }
 
   override protected def withNewChildrenInternal(
@@ -1080,74 +1036,47 @@ case class LongVecSub(left: Expression, right: Expression)
   * and collected centroid rows — non-null by construction).
   */
 case class PqEncodeResid(left: Expression, right: Expression,
-    book: Array[Long], m: Int, d: Int, ks: Int) extends BinaryExpression {
+    book: Array[Long], m: Int, d: Int, ks: Int)
+  extends BinaryKernel[ArrayData, ArrayData, ArrayData] with ContentEquality {
   require(book.length == m * ks * d, "book must be M x KS x D")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode_resid"
 
-  override protected def nullSafeEval(v: Any, c: Any): Any =
-    PqKernels.encodeResid(v.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], book, m, d, ks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  def kernel(v: ArrayData, c: ArrayData): ArrayData =
+    PqKernels.encodeResid(v, c, book, m, d, ks)
+  override protected def javaCall(ctx: CodegenContext): (String, String) => String = {
     val ref = ctx.addReferenceObj("pqBook", book, "long[]")
-    defineCodeGen(ctx, ev, (v, c) =>
-      s"graft.plans.PqKernels.encodeResid($v, $c, $ref, $m, $d, $ks)")
+    (v, c) => s"graft.plans.PqKernels.encodeResid($v, $c, $ref, $m, $d, $ks)"
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncodeResid =
     copy(left = newLeft, right = newRight)
-
-  // content equality for plan canonicalization (the RhpSignature rule)
-  override def equals(other: Any): Boolean = other match {
-    case e: PqEncodeResid => left == e.left && right == e.right &&
-      m == e.m && d == e.d && ks == e.ks &&
-      java.util.Arrays.equals(book, e.book)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right, Integer.valueOf(m),
-      Integer.valueOf(d), Integer.valueOf(ks),
-      Integer.valueOf(java.util.Arrays.hashCode(book)))
 }
 
 /** Per-query ADC table of the RESIDUAL (vec − cent) — the fused form
   * of `PqAdcTable(zip_with(vec, cent, x − y))`; see [[PqEncodeResid]].
   */
 case class PqAdcTableResid(left: Expression, right: Expression,
-    book: Array[Long], m: Int, d: Int, ks: Int) extends BinaryExpression {
+    book: Array[Long], m: Int, d: Int, ks: Int)
+  extends BinaryKernel[ArrayData, ArrayData, ArrayData] with ContentEquality {
   require(book.length == m * ks * d, "book must be M x KS x D")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pq_adc_table_resid"
 
-  override protected def nullSafeEval(v: Any, c: Any): Any =
-    PqKernels.adcTableResid(v.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], book, m, d, ks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  def kernel(v: ArrayData, c: ArrayData): ArrayData =
+    PqKernels.adcTableResid(v, c, book, m, d, ks)
+  override protected def javaCall(ctx: CodegenContext): (String, String) => String = {
     val ref = ctx.addReferenceObj("pqBook", book, "long[]")
-    defineCodeGen(ctx, ev, (v, c) =>
-      s"graft.plans.PqKernels.adcTableResid($v, $c, $ref, $m, $d, $ks)")
+    (v, c) => s"graft.plans.PqKernels.adcTableResid($v, $c, $ref, $m, $d, $ks)"
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcTableResid =
     copy(left = newLeft, right = newRight)
-
-  override def equals(other: Any): Boolean = other match {
-    case e: PqAdcTableResid => left == e.left && right == e.right &&
-      m == e.m && d == e.d && ks == e.ks &&
-      java.util.Arrays.equals(book, e.book)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right, Integer.valueOf(m),
-      Integer.valueOf(d), Integer.valueOf(ks),
-      Integer.valueOf(java.util.Arrays.hashCode(book)))
 }
 
 /** Nearest-cell argmin over a flattened centroid table, as ONE
@@ -1164,14 +1093,14 @@ case class PqAdcTableResid(left: Expression, right: Expression,
   * `element_at`. Null for a null/length-mismatched input vector.
   */
 case class IvfNearestIdx(child: Expression, cents: Array[Long], dim: Int)
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, java.lang.Integer] with BoxedResult with ContentEquality {
   require(dim >= 1 && cents.length % dim == 0,
     s"cents must be k x dim, got ${cents.length} with dim $dim")
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullable: Boolean = true
   override def prettyName: String = "ivf_nearest_idx"
+  override protected def boxName: String = "nidx"
 
-  def nearest(v: ArrayData): java.lang.Integer = {
+  def kernel(v: ArrayData): java.lang.Integer = {
     if (v.numElements() != dim) return null
     val q = new Array[Long](dim)
     var i = 0
@@ -1199,33 +1128,8 @@ case class IvfNearestIdx(child: Expression, cents: Array[Long], dim: Int)
     java.lang.Integer.valueOf(best)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    nearest(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfNearestIdx", this, classOf[IvfNearestIdx].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("nidx")
-      s"""
-         |java.lang.Integer $tmp = $ref.nearest($c);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.intValue(); }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): IvfNearestIdx =
     copy(child = newChild)
-
-  // content equality for plan canonicalization (the RhpSignature rule)
-  override def equals(other: Any): Boolean = other match {
-    case e: IvfNearestIdx => child == e.child && dim == e.dim &&
-      java.util.Arrays.equals(cents, e.cents)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(dim),
-      Integer.valueOf(java.util.Arrays.hashCode(cents)))
 }
 
 /** Word bigrams ("w[i] w[i+1]") of a token array in ONE codegen pass —
@@ -1235,12 +1139,12 @@ case class IvfNearestIdx(child: Expression, cents: Array[Long], dim: Int)
   * (q114/q115/q116). Exactly n−1 bigrams for n ≥ 2 tokens, else empty;
   * token arrays come from `split`, whose elements are never null.
   */
-case class Bigrams(child: Expression) extends UnaryExpression {
+case class Bigrams(child: Expression) extends UnaryKernel[ArrayData, ArrayData] {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
   override def prettyName: String = "bigrams"
 
-  def bigrams(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     if (n < 2)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
@@ -1261,14 +1165,6 @@ case class Bigrams(child: Expression) extends UnaryExpression {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    bigrams(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigrams", this, classOf[Bigrams].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.bigrams($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Bigrams =
     copy(child = newChild)
 }
@@ -1281,7 +1177,8 @@ case class Bigrams(child: Expression) extends UnaryExpression {
   * ONE codegen pass. Empty for n < k, exactly as the guarded
   * `when(n >= k, sequence(...))` produced.
   */
-case class GramsWithPos(child: Expression, k: Int) extends UnaryExpression {
+case class GramsWithPos(child: Expression, k: Int)
+  extends UnaryKernel[ArrayData, ArrayData] {
   require(k >= 1, s"GramsWithPos needs k >= 1, got $k")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
@@ -1292,7 +1189,7 @@ case class GramsWithPos(child: Expression, k: Int) extends UnaryExpression {
           nullable = false))), containsNull = false)
   override def prettyName: String = "grams_with_pos"
 
-  def grams(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     if (n < k)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
@@ -1314,14 +1211,6 @@ case class GramsWithPos(child: Expression, k: Int) extends UnaryExpression {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    grams(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramsWithPos", this, classOf[GramsWithPos].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.grams($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): GramsWithPos =
     copy(child = newChild)
 }
@@ -1336,7 +1225,7 @@ case class GramsWithPos(child: Expression, k: Int) extends UnaryExpression {
   * taken to its limit: no shuffle at all). Null tokens match nothing.
   */
 case class TermCounts(child: Expression, targets: Array[String])
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, ArrayData] with ContentEquality {
   require(targets.nonEmpty, "TermCounts needs at least one target")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
@@ -1346,7 +1235,7 @@ case class TermCounts(child: Expression, targets: Array[String])
   @transient private lazy val targetBytes: Array[UTF8String] =
     targets.map(UTF8String.fromString)
 
-  def counts(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val out = new Array[Int](targets.length)
     val n = words.numElements()
     var i = 0
@@ -1361,34 +1250,11 @@ case class TermCounts(child: Expression, targets: Array[String])
       }
       i += 1
     }
-    val boxed = new Array[Any](out.length)
-    var t = 0
-    while (t < out.length) { boxed(t) = out(t); t += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(boxed)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    counts(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("termCounts", this, classOf[TermCounts].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.counts($c)")
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): TermCounts =
     copy(child = newChild)
-
-  // content equality for plan canonicalization (the RhpSignature rule)
-  override def equals(other: Any): Boolean = other match {
-    case e: TermCounts => child == e.child &&
-      java.util.Arrays.equals(targets.asInstanceOf[Array[AnyRef]],
-        e.targets.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child,
-      Integer.valueOf(java.util.Arrays.hashCode(
-        targets.asInstanceOf[Array[AnyRef]])))
 }
 
 /** Count of positionally equal elements between two arrays — the
@@ -1399,11 +1265,11 @@ case class TermCounts(child: Expression, targets: Array[String])
   * |b|) with both non-null and equal, exactly as here.
   */
 case class EqCount(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, ArrayData, Int] {
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "eq_count"
 
-  def eqCount(a: ArrayData, b: ArrayData): Int = {
+  def kernel(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var cnt = 0
     var i = 0
@@ -1413,14 +1279,6 @@ case class EqCount(left: Expression, right: Expression)
       i += 1
     }
     cnt
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    eqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("eqCount", this, classOf[EqCount].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.eqCount($a, $b)")
   }
 
   override protected def withNewChildrenInternal(
@@ -1437,12 +1295,12 @@ case class EqCount(left: Expression, right: Expression)
   * replaces, null elements propagated.
   */
 case class RenormQuantize(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, Long, ArrayData] {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType)
   override def prettyName: String = "renorm_quantize"
 
-  def renorm(v: ArrayData, nsq: Long): ArrayData = {
+  def kernel(v: ArrayData, nsq: Long): ArrayData = {
     val n = v.numElements()
     val root = math.sqrt(nsq.toDouble)
     val out = new Array[Any](n)
@@ -1462,14 +1320,6 @@ case class RenormQuantize(left: Expression, right: Expression)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(v: Any, nsq: Any): Any =
-    renorm(v.asInstanceOf[ArrayData], nsq.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("renormQuantize", this, classOf[RenormQuantize].getName)
-    defineCodeGen(ctx, ev, (v, nsq) => s"$ref.renorm($v, $nsq)")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RenormQuantize =
     copy(left = newLeft, right = newRight)
@@ -1483,13 +1333,13 @@ case class RenormQuantize(left: Expression, right: Expression)
   * n)).
   */
 case class WordChunks(child: Expression, width: Int)
-  extends UnaryExpression {
+  extends UnaryKernel[ArrayData, ArrayData] {
   require(width >= 1, s"WordChunks needs width >= 1, got $width")
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_chunks"
 
-  def chunks(words: ArrayData): ArrayData = {
+  def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val nc = math.max((n + width - 1) / width, 1)
     val out = new Array[Any](nc)
@@ -1510,19 +1360,13 @@ case class WordChunks(child: Expression, width: Int)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    chunks(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordChunks", this, classOf[WordChunks].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.chunks($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WordChunks =
     copy(child = newChild)
 }
 
-/** Column wrappers + SQL registration. */
+/** Column wrappers; the SQL functions are registered by
+  * [[GraftExtensions]].
+  */
 object NativeFunctions {
 
   import org.apache.spark.sql.graftshim.ColumnShim
@@ -1569,28 +1413,5 @@ object NativeFunctions {
     ColumnShim.column(BloomFilterMightContain(
       Literal(bloom, org.apache.spark.sql.types.BinaryType),
       ColumnShim.expression(hashed)))
-  }
-
-  /** Register the native functions for `spark.sql` use (engine-level
-    * function surface; same builders as [[GraftExtensions]]).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash64", exprs => RollingHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_entropy", exprs => ByteEntropy(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trading_day_roll", exprs => GraftExtensions.buildTradingDayRoll(exprs),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_top_k", exprs => GraftExtensions.buildBoundedTopK(exprs),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_rank_top_k", exprs => GraftExtensions.buildBoundedRankTopK(exprs),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs => BpeMerges.build(exprs), "built-in")
   }
 }

@@ -198,8 +198,7 @@ object SimilarityQueries {
     // kernel scans clabel-ascending with strict improvement.
     val centRows = cent.collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    val idx = ivfNearestIdx("q33_ivf_search", $"q", centRows.map(_._2.toArray))
     val assigned = emb
       .select($"vec_id", $"q", $"label",
         element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
@@ -240,8 +239,7 @@ object SimilarityQueries {
     // corpus exchange (guide §2.4; identical (d2, clabel) argmin).
     val centRows = cent.collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    val idx = ivfNearestIdx("q80_ivf_multiprobe", $"q", centRows.map(_._2.toArray))
     val assigned = emb
       .select($"vec_id", $"q",
         element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
@@ -461,8 +459,7 @@ object SimilarityQueries {
     // crossJoin + min_by corpus exchange (guide §2.4; identical
     // (d2, ccid) lexicographic argmin, ccid-ascending tie order).
     val sortedCents = centRows.sortBy(_._1)
-    val dim = sortedCents.head._2.length
-    val nIdx = ivfNearestIdx($"q", sortedCents.flatMap(_._2), dim)
+    val nIdx = ivfNearestIdx("q97_ivf_kmeans", $"q", sortedCents.map(_._2))
     val withN = emb.withColumn("nsq", intNormSq($"q"))
     val assigned = withN
       .select($"vec_id", $"q", $"nsq",
@@ -687,8 +684,7 @@ object SimilarityQueries {
     // the same (d2, clabel) lexicographic argmin (guide §2.4)
     val centRows = cent.collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-    val dim = centRows.head._2.length
-    val idx = ivfNearestIdx($"q", centRows.flatMap(_._2).toArray, dim)
+    val idx = ivfNearestIdx("q83_semantic_dedup", $"q", centRows.map(_._2.toArray))
     val assigned = emb
       .select($"vec_id", $"q", $"label",
         element_at(typedLit(centRows.map(_._1).toSeq), idx).as("cluster"))
@@ -848,13 +844,16 @@ object SimilarityQueries {
     * centroid up from bounded literals via `element_at`. Replaces the
     * corpus-exchange `crossJoin(broadcast(cent)) + groupBy(vec_id).
     * min_by` assignment (guide §2.4) and the interpreted
-    * `array_min(transform(centLit, …))` HOF (rule §4).
+    * `array_min(transform(centLit, …))` HOF (rule §4). An empty
+    * embeddings table leaves no centroids: that fails here, naming the
+    * query, rather than at the first `.head` of the centroid list.
     */
-  private def ivfNearestIdx(q: org.apache.spark.sql.Column,
-      cents: Array[Long], dim: Int): org.apache.spark.sql.Column = {
+  private def ivfNearestIdx(query: String, q: org.apache.spark.sql.Column,
+      cents: Array[Array[Long]]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
+    require(cents.nonEmpty, s"$query: no centroids, the embeddings table is empty")
     ColumnShim.column(graft.plans.IvfNearestIdx(
-      ColumnShim.expression(q), cents, dim))
+      ColumnShim.expression(q), cents.flatten, cents.head.length))
   }
 
   /** Shared product-quantizer trainer (q123 trains on raw vectors,
@@ -1165,7 +1164,7 @@ object SimilarityQueries {
     // join's inferred isnotnull filter plus the projection). Cell id
     // and centroid come back via element_at over bounded literals;
     // tie order identical (clabel-ascending scan, strict improvement).
-    val nIdx = ivfNearestIdx($"q", sortedCents.flatMap(_.cvec).toArray, M * D)
+    val nIdx = ivfNearestIdx("q160_ivfpq_search", $"q", sortedCents.map(_.cvec.toArray))
     val assignedC = emb
       .select($"vec_id", $"q",
         element_at(typedLit(sortedCents.map(_.clabel).toSeq), nIdx).as("cluster"),

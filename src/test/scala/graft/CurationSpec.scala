@@ -346,7 +346,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("byte_entropy is SQL-registered and null-safe") {
-    NativeFunctions.register(spark)
     val r = spark.sql(
       "SELECT byte_entropy('abab') AS e, byte_entropy(CAST(NULL AS STRING)) AS n").head()
     assert(r.getDouble(0) == 1.0)

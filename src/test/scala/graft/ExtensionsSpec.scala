@@ -1,17 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans._
+
 class ExtensionsSpec extends AnyFunSuite {
-  test("GraftExtensions injects both native functions") {
-    // The extensions hook itself applies cleanly and twice (idempotent
-    // from the engine's side); the live integration is asserted below
-    // against the shared session, which SessionDefaults builds with
-    // `spark.sql.extensions=graft.plans.GraftExtensions`.
-    val ext = new SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-    new graft.plans.GraftExtensions().apply(ext)
+  test("GraftExtensions injects all seven SQL functions") {
+    // the shared session is built by SessionDefaults with
+    // `spark.sql.extensions=graft.plans.GraftExtensions`, the only
+    // place the functions are registered
+    val spark = TestSpark.spark
+    val injected = Seq(
+      "simhash64" -> classOf[SimHash64],
+      "rolling_hash64" -> classOf[RollingHash64],
+      "byte_entropy" -> classOf[ByteEntropy],
+      "trading_day_roll" -> classOf[TradingDayRoll],
+      "bounded_top_k" -> classOf[BoundedTopK],
+      "bounded_rank_top_k" -> classOf[BoundedRankTopK],
+      "bpe_encode" -> classOf[BpeEncode])
+    for ((name, cls) <- injected) {
+      assert(spark.catalog.functionExists(name), name)
+      assert(spark.catalog.getFunction(name).className == cls.getName, name)
+    }
   }
 
   test("the shared session runs with the extensions installed") {

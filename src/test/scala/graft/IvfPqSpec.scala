@@ -91,4 +91,11 @@ class IvfPqSpec extends AnyFunSuite {
     assert(p.contains("Broadcast"), p.take(500))
     spark.catalog.clearCache()
   }
+
+  test("q33 on an empty embeddings table fails with a require naming the query") {
+    val empty = java.nio.file.Files.createTempDirectory("empty_embeddings").toString
+    Tables.load(spark, dir, "embeddings").limit(0).write.parquet(s"$empty/embeddings.parquet")
+    val e = intercept[IllegalArgumentException](SimilarityQueries.ivfSearch(spark, empty))
+    assert(e.getMessage.contains("q33_ivf_search: no centroids"), e.getMessage)
+  }
 }

@@ -1,9 +1,15 @@
 package graft
 
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeArrayData,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{Kernels, NativeFunctions}
+import graft.plans._
 import org.apache.spark.unsafe.types.UTF8String
 
 class NativeExpressionsSpec extends AnyFunSuite {
@@ -36,6 +42,119 @@ class NativeExpressionsSpec extends AnyFunSuite {
     assert(viaSpark == direct)
   }
 
+  // The kernel contract table: every native kernel over seeded inputs
+  // shaped like the benchmark's, all input columns nullable.
+  private object Contract {
+    val PqM = 8; val PqKs = 16; val PqD = 8
+    val fields: Seq[(String, DataType)] = Seq(
+      "words" -> ArrayType(StringType, containsNull = false),
+      "words2" -> ArrayType(StringType, containsNull = false),
+      "text" -> StringType,
+      "vec" -> ArrayType(FloatType, containsNull = false),
+      "lvec" -> ArrayType(LongType, containsNull = false),
+      "lvec2" -> ArrayType(LongType, containsNull = false),
+      "day" -> DateType,
+      "codes" -> ArrayType(IntegerType, containsNull = false),
+      "dt" -> ArrayType(LongType, containsNull = false),
+      "nsq" -> LongType)
+    def c(name: String): Expression = {
+      val i = fields.indexWhere(_._1 == name)
+      BoundReference(i, fields(i)._2, nullable = true)
+    }
+    val vocab: Array[String] =
+      "spark window merge join filter hash sort the a scan batch row".split(" ")
+    private val rnd = new scala.util.Random(23)
+    private def longs(n: Int, bound: Int): Array[Long] =
+      Array.fill(n)(rnd.nextInt(2 * bound + 1).toLong - bound)
+    private def strings(ws: Array[String]) =
+      new GenericArrayData(ws.map(w => UTF8String.fromString(w): Any))
+
+    /** 40 seeded rows in the unsafe format a scan produces, then one
+      * row whose every column is null.
+      */
+    val rows: Seq[InternalRow] = {
+      val toUnsafe = UnsafeProjection.create(fields.map(f => c(f._1)))
+      Seq.fill(40) {
+        val w = Array.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.length)))
+        val w2 = w.map(x => if (rnd.nextInt(4) == 0) vocab(rnd.nextInt(vocab.length)) else x)
+        val v = longs(64, 100000)
+        toUnsafe(InternalRow(strings(w), strings(w2), UTF8String.fromString(w.mkString(" ")),
+          UnsafeArrayData.fromPrimitiveArray(v.map(x => x / 1e6f)),
+          UnsafeArrayData.fromPrimitiveArray(v),
+          UnsafeArrayData.fromPrimitiveArray(longs(64, 100000)),
+          19723 + rnd.nextInt(365),
+          UnsafeArrayData.fromPrimitiveArray(Array.fill(PqM)(1 + rnd.nextInt(PqKs))),
+          UnsafeArrayData.fromPrimitiveArray(Array.fill(PqM * PqKs)(rnd.nextInt(1000).toLong)),
+          v.map(x => x * x).sum)).copy()
+      } :+ InternalRow.fromSeq(fields.map(_ => null))
+    }
+
+    val book: Array[Long] = longs(PqM * PqKs * PqD, 100000)
+    val kernels: Seq[Expression] = Seq(
+      SimHash64(c("words")),
+      TradingDayRoll(c("day"), Array(19723, 19908, 20082)),
+      IntDotProduct(c("lvec"), c("lvec2")),
+      RhpSignature(c("lvec"), longs(16 * 64, 1), 64),
+      ByteEntropy(c("text")),
+      HashedBagScore(c("text"), Seq.fill(1024)(rnd.nextGaussian()), 0.1),
+      HashedBagEmbed(c("text"), Seq.fill(256 * 8)(rnd.nextGaussian()), 8),
+      RollingHash64(c("text")),
+      Shingles(c("words"), 3),
+      MinHashes(c("words"), 0, 4),
+      WinnowSelect(c("words"), 3, 4),
+      QuantizeVec(c("vec"), 1e6),
+      IntSqDist(c("lvec"), c("lvec2")),
+      PqEncode(c("lvec"), book, PqM, PqD, PqKs),
+      PqAdcTable(c("lvec"), book, PqM, PqD, PqKs),
+      PqAdcScore(c("dt"), c("codes"), PqKs),
+      LongVecSub(c("lvec"), c("lvec2")),
+      PqEncodeResid(c("lvec"), c("lvec2"), book, PqM, PqD, PqKs),
+      PqAdcTableResid(c("lvec"), c("lvec2"), book, PqM, PqD, PqKs),
+      IvfNearestIdx(c("lvec"), longs(16 * 64, 100000), 64),
+      Bigrams(c("words")),
+      GramsWithPos(c("words"), 3),
+      TermCounts(c("words"), Array("spark", "join", "hash")),
+      EqCount(c("words"), c("words2")),
+      RenormQuantize(c("lvec"), c("nsq")),
+      WordChunks(c("words"), 16))
+  }
+
+  test("every kernel: generated code equals eval, null input gives null, no CodegenFallback") {
+    assert(Contract.kernels.map(_.getClass).distinct.size == 26)
+    for (k <- Contract.kernels) {
+      val name = k.getClass.getSimpleName
+      assert(!k.isInstanceOf[CodegenFallback], name)
+      val proj = GenerateUnsafeProjection.generate(Seq(k))
+      for ((row, i) <- Contract.rows.zipWithIndex) {
+        val generated = CatalystTypeConverters.convertToScala(proj(row).get(0, k.dataType), k.dataType)
+        val evaluated = CatalystTypeConverters.convertToScala(k.eval(row), k.dataType)
+        assert(generated == evaluated, s"$name row $i")
+      }
+      val nullRow = Contract.rows.last
+      assert(proj(nullRow).isNullAt(0) && k.eval(nullRow) == null, s"$name on null input")
+    }
+  }
+
+  test("array-parameter kernels compare their arrays by content") {
+    import Contract.c
+    def longs(bump: Boolean): Array[Long] = Array.tabulate(128)(i => if (bump && i == 2) 7L else i.toLong)
+    val kernels: Seq[Boolean => Expression] = Seq(
+      b => TradingDayRoll(c("day"), longs(b).take(4).map(_.toInt)),
+      b => RhpSignature(c("lvec"), longs(b), 64),
+      b => PqEncode(c("lvec"), longs(b), 2, 4, 16),
+      b => PqAdcTable(c("lvec"), longs(b), 2, 4, 16),
+      b => PqEncodeResid(c("lvec"), c("lvec2"), longs(b), 2, 4, 16),
+      b => PqAdcTableResid(c("lvec"), c("lvec2"), longs(b), 2, 4, 16),
+      b => IvfNearestIdx(c("lvec"), longs(b), 64),
+      b => TermCounts(c("words"), Array("spark", if (b) "hash" else "join")))
+    for (build <- kernels) {
+      val (x, y, z) = (build(false), build(false), build(true))
+      val name = x.getClass.getSimpleName
+      assert(x == y && x.hashCode == y.hashCode && x.semanticEquals(y), name)
+      assert(x != z && !x.semanticEquals(z), name)
+    }
+  }
+
   test("rolling_hash64 distinguishes order (unlike a bag hash)") {
     val out = Seq(("ab cd", "cd ab"), ("same", "same"))
       .toDF("a", "b")
@@ -48,7 +167,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
   }
 
   test("functions are SQL-registered and usable from spark.sql") {
-    NativeFunctions.register(spark)
     val r = spark.sql(
       "SELECT simhash64(array('x','y')) AS s, rolling_hash64('xy') AS r").head()
     assert(r.getLong(0) == Kernels.simhash(
@@ -100,7 +218,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
   }
 
   test("trading_day_roll and bounded_top_k are SQL-registered") {
-    NativeFunctions.register(spark)
     val r = spark.sql(
       """SELECT trading_day_roll(DATE '2024-01-06', array('2024-01-08')) AS d""").head()
     assert(r.getDate(0).toString == "2024-01-09") // Sat -> Mon(holiday) -> Tue
@@ -114,7 +231,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL desc/nulls flags reach bounded_top_k and bounded_rank_top_k") {
-    NativeFunctions.register(spark)
     // bounded_top_k(struct, k, descFlags): v desc → 9, 5 lead
     val desc = spark.sql(
       """SELECT bounded_top_k(struct(v, id), 2, array(true)) AS t
@@ -139,7 +255,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL flag arrays reject non-boolean elements and null slots") {
-    NativeFunctions.register(spark)
     // array(1, 0) would be byte-reinterpreted as booleans by a naive
     // ArrayData.getBoolean read; must raise instead
     val intArr = intercept[Exception] {
@@ -246,6 +361,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
     df.collect()
     val gen = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    assert(gen.contains(".roll("), gen.take(400))
+    assert(gen.contains("(graft.plans.TradingDayRoll) references["), gen.take(400))
   }
 }
