@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * verify_failures.json naming each query that failed ([[dump]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -40,39 +41,58 @@ object Verify {
         s"[verify] oracles without queries: ${orphaned.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // ordered materialization (see Staging.pinCaches): build each
-        // multi-consumer cache once, sequentially, so no concurrent
-        // stage of the dump races an unbuilt cache
-        graft.operators.Staging.pinCaches(df)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql))
+    SessionDefaults.stopAndReap(spark)
+  }
+
+  /** Writes each query's result to `outDir/<name>` as parquet, and
+    * `outDir/verify_failures.json`: each query whose build or write
+    * threw, mapped to `"ExceptionClass: message"` (`{}` on a clean run).
+    * Returns that map.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Map[String, String] = {
+    val failures = queries.toSeq.flatMap { case (name, fn) =>
+      val failure =
+        try {
+          val df = fn(spark, sfDir)
+          // ordered materialization (see Staging.pinCaches): build each
+          // multi-consumer cache once, sequentially, so no concurrent
+          // stage of the dump races an unbuilt cache
+          graft.operators.Staging.pinCaches(df)
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
+        }
       // drop per-query persists (q24/q25 signature staging) so cached
       // blocks don't accumulate across the 50+ query dumps
       spark.catalog.clearCache()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    SessionDefaults.stopAndReap(spark)
+      failure
+    }.toMap
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      jsonObject(failures.toSeq.sorted))
+    failures
   }
+
+  private def jsonObject(kv: Iterable[(String, String)]): String =
+    kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // driver's json.load fail and silently zero the round's correctness.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

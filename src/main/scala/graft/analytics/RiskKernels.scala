@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * output column; Catalyst expands the struct into columns for free.
   *
   * Per row and basis the cost is dominated by the binomial IV solve:
-  * about 40 CRR trees of 100 steps (bisection plus bracket and root
-  * checks), each `2·steps+1` `pow` calls plus O(steps²) multiply-adds
-  * (see [[BlackScholes.binomialPrice]]). The BS solve and greeks are
+  * about 7 CRR trees of 100 steps, each `2·steps+1` `pow` calls plus
+  * O(steps²) multiply-adds (see [[BlackScholes.binomialPrice]]). The
+  * solve is seeded with the row's BS IV, which brackets the tree's root
+  * in two trees; Brent steps close the bracket
+  * ([[BlackScholes.impliedVol]]). The BS solve and greeks are
   * closed-form by comparison. The missing-vol rescue reads only the BS
   * IV, so it calls [[bsIvOf]] and builds no tree.
   */
@@ -51,7 +53,7 @@ object RiskKernels {
       return Risk(0, 0, 0, 0, 0, 0, 0, 0)
     val isCall = isCallRight(right)
     val iv = bsImpliedVol(isCall, price, s, k, t, r, q)
-    val binIv = binomialImpliedVol(isCall, price, s, k, t, r, q)
+    val binIv = binomialImpliedVol(isCall, price, s, k, t, r, q, guess = iv)
     val g =
       if (iv > 0.0) bsGreeks(isCall, s, k, t, r, q, iv)
       else Greeks(0, 0, 0, 0, 0)
@@ -76,11 +78,13 @@ object RiskKernels {
     * is not SQL-expressible.
     *
     *  - `bs_roundtrip_ok`    — bsPrice(bs_iv) recovers the input price
-    *    to 1e-6 (bisection tolerance 1e-10 on σ; vega bounds the price
-    *    error well inside 1e-6), or the solve was out-of-bounds (iv=0).
+    *    to 1e-6 (the Brent solve, about 7 evaluations, closes a bracket
+    *    of about 1e-10 on σ; vega bounds the price error well inside
+    *    1e-6), or the solve was out-of-bounds (iv=0).
     *  - `binomial_roundtrip_ok` — same through the CRR tree (American
-    *    exercise: the tree price is monotone in σ, so bisection's root
-    *    is exact; no BS-vs-binomial closeness is asserted because the
+    *    exercise: the tree price is monotone in σ, so the bracketed
+    *    root is exact; the solve, seeded from bs_iv, builds about 7
+    *    trees; no BS-vs-binomial closeness is asserted because the
     *    early-exercise premium over vega is data-dependent).
     *  - `delta_in_range` / `gamma_nonneg` / `vega_nonneg` — greeks
     *    sanity on solved rows.
