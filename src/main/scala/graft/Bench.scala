@@ -14,7 +14,13 @@ import org.apache.spark.sql.SparkSession
   * records its process-CPU delta: the JSON carries per-query "cpu"
   * (the CPU seconds of the pass that produced the min) and
   * "cpu_passes", so a slow entry is attributable to plan compute vs
-  * a loaded box without a rerun. The sf1 scale probe (warmup + 1
+  * a loaded box without a rerun. The warmup warms codegen only
+  * because [[SessionDefaults.CodegenCacheEntries]] sizes Spark's
+  * compiled-class cache to the whole engine; at Spark's default of
+  * 100 entries the ~2,480 classes of a full pass evicted each other
+  * and every timed pass recompiled them. "codegen_compiles" (per
+  * query, per pass, read outside the timed window) shows it: a warm
+  * pass compiles ~0. The sf1 scale probe (warmup + 1
   * pass + ratio-alarm confirms, [[BenchCore.probeMeasure]]) persists
   * per-entry samples/spread_all/pass counts (spread_all includes the
   * seeded warmup, unlike the corpus "spread" — the probe seed runs
@@ -147,6 +153,7 @@ object Bench {
     // caller that records it next to the wall sample.
     var lastRunCpuS: Double = -1.0
     var lastRunTaskCpuS: Double = -1.0
+    var lastRunCompiles: Long = -1L
     // Plan-inspection slots, refreshed per run (see cpu_race_flags):
     // multi-consumer caches in the final plan, and — checked BEFORE
     // execution, when it is meaningful — the ones unmaterialized at
@@ -160,6 +167,7 @@ object Bench {
       // timed window on both ends)
       TaskMetricsProbe.drain(spark)
       val tm0 = taskMetrics.snapshot()
+      val cg0 = BenchCore.codegenCompiles()
       val c0 = BenchCore.processCpuSeconds()
       val t0 = System.nanoTime()
       try {
@@ -180,6 +188,7 @@ object Bench {
         val wall = (System.nanoTime() - t0) / 1e9
         TaskMetricsProbe.drain(spark)
         lastRunTaskCpuS = (taskMetrics.snapshot() - tm0).cpuS
+        lastRunCompiles = BenchCore.codegenCompiles() - cg0
         // occurrence count is stable across execution; checked outside
         // the timed window
         lastMultiUseCache = graft.operators.Staging.cacheUse(df).exists(_._2 >= 2)
@@ -187,6 +196,7 @@ object Bench {
       } catch { case _: Throwable =>
         lastRunCpuS = -1.0
         lastRunTaskCpuS = -1.0
+        lastRunCompiles = -1L
         -1.0
       }
     }
@@ -231,6 +241,10 @@ object Bench {
     // exactly when the master forks executors).
     val taskCpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
+    // Classes Janino compiled per pass, same positional alignment: a
+    // warm pass that still compiles means the codegen cache missed.
+    val compilesSoFar = collection.mutable.LinkedHashMap[String, Vector[Long]]()
+      .withDefaultValue(Vector.empty)
     val multiUse = collection.mutable.LinkedHashMap[String, Boolean]()
       .withDefaultValue(false)
     val unpinned = collection.mutable.LinkedHashMap[String, Seq[String]]()
@@ -254,6 +268,7 @@ object Bench {
           seeded += name
           cpuSoFar(name) = Vector(lastRunCpuS)
           taskCpuSoFar(name) = Vector(lastRunTaskCpuS)
+          compilesSoFar(name) = Vector(lastRunCompiles)
           recordDiagnostics(name)
         }
         Some(name -> t)
@@ -273,6 +288,7 @@ object Bench {
       samplesSoFar(name) = samplesSoFar.getOrElse(name, Vector.empty) :+ sec
       cpuSoFar(name) = cpuSoFar(name) :+ lastRunCpuS
       taskCpuSoFar(name) = taskCpuSoFar(name) :+ lastRunTaskCpuS
+      compilesSoFar(name) = compilesSoFar(name) :+ lastRunCompiles
       if (sec >= 0) recordDiagnostics(name)
       persistPartial()
       sec
@@ -469,6 +485,13 @@ object Bench {
     val cpuTaskPasses = queries.map { case (name, _) =>
       "\"" + name + "\":[" + taskCpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // Generated classes compiled in each pass, aligned like
+    // cpu_task_passes (-1 for a failed run). The count is this JVM's
+    // (CodegenMetrics is per JVM): complete on local[n], driver-side
+    // compiles only under a forked-executor master.
+    val compilePasses = queries.map { case (name, _) =>
+      "\"" + name + "\":" + compilesSoFar(name).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     // The q84-class race, machine-visible (r16 verdict #4): queries
     // whose warm CPU passes spread >1.5x (gap >5s) WITH a
     // multi-consumer cache in the plan. Since pinCaches runs in every
@@ -507,7 +530,7 @@ object Bench {
         s""""local_mb":${BenchCore.jnum(tmTotal.localShuffleBytes / 1048576.0, 1)},""" +
         s""""tasks":${tmTotal.tasks}}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses,"codegen_compiles":$compilePasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
     println(json)
     // The console line can be lost to log-tail truncation (one line per
     // 114 queries is long); persist the identical JSON where the driver

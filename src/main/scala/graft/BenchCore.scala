@@ -41,6 +41,15 @@ object BenchCore {
       case _ => -1.0
     }
 
+  /** Generated classes Janino has compiled in this JVM so far (Spark's
+    * `CodegenMetrics` compile-time histogram counts one sample per
+    * compile; a codegen-cache hit adds none). The delta around a warm
+    * run is 0 when the cache holds the query's classes.
+    */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+
   /** Locale-independent fixed-decimal rendering for the bench JSON.
     * The f-interpolator uses the JVM default locale, so under e.g.
     * de_DE the decimal separator becomes ',' and the artifact is

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.TextOps.words
@@ -54,6 +55,16 @@ object RetrievalQueries {
       .withColumn("score_fx",
         expr(s"(idf_fx DIV ${S}L) * tf_comp_fx + ((idf_fx % ${S}L) * tf_comp_fx) DIV ${S}L"))
 
+  /** The typed empty answer of a ranking whose query terms were
+    * collected from a corpus without words (an empty documents
+    * table): there is no posting to build — [[graft.plans.TermCounts]]
+    * needs at least one target — and nothing to rank. `ddl` is the
+    * normal-run schema of the frame it stands in for (q86, q122's
+    * sparse list, q125).
+    */
+  private[queries] def noTermsResult(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(new java.util.ArrayList[Row](), StructType.fromDDL(ddl))
+
   /** q122: hybrid BM25 + dense-cosine retrieval fused by RRF.
     *
     * Corpus = documents that have an embedding (doc_id = vec_id — the
@@ -101,40 +112,47 @@ object RetrievalQueries {
       .select($"qid", $"r.doc_id".as("doc_id"), ($"pos" + 1).cast("long").as("drank"))
 
     // ---- sparse ranking: postings pruned to query terms BELOW the
-    // tf aggregate, so the shuffle carries only matching occurrences
-    val w = words($"text")
-    // persisted: consumed by the df collect AND the scoring pass.
-    // Per-doc tf of the ≤|Q| collected query terms via ONE map-side
-    // TermCounts kernel pass (r21, the q86/q125 shape): the former
-    // per-token explode + isin probe + (doc, term) hash aggregate is
-    // gone — the posting build is a scan-side projection.
-    val postings = graft.operators.Staging.staged(corpus
-      .select($"doc_id", size(w).cast("long").as("dl"),
-        posexplode(graft.functions.TextOps.termCounts(
-          w, termList.toArray)).as(Seq("ti", "tf0")))
-      .filter($"tf0" > 0)
-      .select($"doc_id", element_at(typedLit(termList), $"ti" + 1).as("term"),
-        $"dl", $"tf0".cast("long").as("tf")))
-    // df + corpus stats as bounded collected literals (q86/q125
-    // discipline): the former `.join(dfreq, Seq("term"))` shuffled the
-    // scored rows on term — a ≤|Q|-key exchange whose task ceiling is
-    // the query-set size at ANY corpus scale. Scoring now rides the
-    // posting aggregate's own partitioning as a pure projection.
-    val dfMap = postings.groupBy($"term").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val st = corpus.agg(count(lit(1)).as("n_docs"),
-      sum(size(words($"text")).cast("long")).as("total_len")).collect()(0)
-    val sscored = bm25ScoreFx(
-      postings
-        .join(broadcast(qterms), Seq("term"))
-        .filter($"doc_id" =!= $"qid")
-        .withColumn("df", element_at(typedLit(dfMap), $"term"))
-        .withColumn("n_docs", lit(st.getLong(0)))
-        .withColumn("total_len", lit(st.getLong(1))))
-    val sparse = sscored.groupBy($"qid")
-      .agg(boundedTopK(struct((-$"score_fx").as("negs"), $"doc_id"), 20).as("top"))
-      .select($"qid", posexplode($"top").as(Seq("pos", "r")))
-      .select($"qid", $"r.doc_id".as("doc_id"), ($"pos" + 1).cast("long").as("srank"))
+    // tf aggregate, so the shuffle carries only matching occurrences.
+    // Query docs without a word (an empty corpus) give no query term:
+    // the sparse list is then empty and the fusion dense-only.
+    val sparse =
+      if (termList.isEmpty) noTermsResult(s,
+        "qid BIGINT, doc_id BIGINT, srank BIGINT NOT NULL")
+      else {
+        val w = words($"text")
+        // persisted: consumed by the df collect AND the scoring pass.
+        // Per-doc tf of the ≤|Q| collected query terms via ONE map-side
+        // TermCounts kernel pass (r21, the q86/q125 shape): the former
+        // per-token explode + isin probe + (doc, term) hash aggregate is
+        // gone — the posting build is a scan-side projection.
+        val postings = graft.operators.Staging.staged(corpus
+          .select($"doc_id", size(w).cast("long").as("dl"),
+            posexplode(graft.functions.TextOps.termCounts(
+              w, termList.toArray)).as(Seq("ti", "tf0")))
+          .filter($"tf0" > 0)
+          .select($"doc_id", element_at(typedLit(termList), $"ti" + 1).as("term"),
+            $"dl", $"tf0".cast("long").as("tf")))
+        // df + corpus stats as bounded collected literals (q86/q125
+        // discipline): the former `.join(dfreq, Seq("term"))` shuffled the
+        // scored rows on term — a ≤|Q|-key exchange whose task ceiling is
+        // the query-set size at ANY corpus scale. Scoring now rides the
+        // posting aggregate's own partitioning as a pure projection.
+        val dfMap = postings.groupBy($"term").agg(count(lit(1)).as("df"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val st = corpus.agg(count(lit(1)).as("n_docs"),
+          sum(size(words($"text")).cast("long")).as("total_len")).collect()(0)
+        val sscored = bm25ScoreFx(
+          postings
+            .join(broadcast(qterms), Seq("term"))
+            .filter($"doc_id" =!= $"qid")
+            .withColumn("df", element_at(typedLit(dfMap), $"term"))
+            .withColumn("n_docs", lit(st.getLong(0)))
+            .withColumn("total_len", lit(st.getLong(1))))
+        sscored.groupBy($"qid")
+          .agg(boundedTopK(struct((-$"score_fx").as("negs"), $"doc_id"), 20).as("top"))
+          .select($"qid", posexplode($"top").as(Seq("pos", "r")))
+          .select($"qid", $"r.doc_id".as("doc_id"), ($"pos" + 1).cast("long").as("srank"))
+      }
 
     // ---- RRF fusion over the two ≤|Q|×20 candidate lists
     val fused = dense.join(sparse, Seq("qid", "doc_id"), "full_outer")
@@ -201,6 +219,8 @@ object RetrievalQueries {
       .agg(boundedTopK(struct((-$"n").as("negn"), $"term"), 3).as("t"))
       .select(explode($"t.term").as("term"))
       .collect().map(_.getString(0)).toSeq
+    if (top3.isEmpty) return noTermsResult(s,
+      "term STRING, doc_id BIGINT, chunk_id BIGINT NOT NULL, score DOUBLE, rank BIGINT NOT NULL")
     // persisted: `pruned` feeds the df collect AND the scoring
     // projection — without staging, the whole chunk pipeline
     // executes once per consumer.

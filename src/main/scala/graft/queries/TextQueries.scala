@@ -564,6 +564,8 @@ object TextQueries {
       .agg(boundedTopK(struct((-$"n").as("negn"), $"term"), 3).as("t"))
       .select(explode($"t.term").as("term"))
       .collect().map(_.getString(0)).toSeq
+    if (terms.isEmpty) return RetrievalQueries.noTermsResult(s,
+      "term STRING, doc_id BIGINT, tf BIGINT NOT NULL, score DOUBLE, rank BIGINT NOT NULL")
     // per-doc tf of the 3 query terms, one codegen pass; posexplode's
     // 0-based index looks the term string back up from the literal
     val postings = Staging.staged(docs

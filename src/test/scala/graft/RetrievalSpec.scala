@@ -90,4 +90,19 @@ class RetrievalSpec extends AnyFunSuite {
     assert(!p.contains("Window"), "per-doc cap must be a bounded aggregate, not a window")
     assert(p.contains("bounded_top_k"), p.take(300))
   }
+
+  test("q86, q122 and q125 on an empty documents table give their typed empty result") {
+    // the query terms are collected from the corpus: an empty corpus
+    // has none, so there is no TermCounts posting to build
+    val empty = java.nio.file.Files.createTempDirectory("empty_documents").toString
+    Tables.load(spark, dir, "documents").limit(0).write.parquet(s"$empty/documents.parquet")
+    Tables.load(spark, dir, "embeddings").write.parquet(s"$empty/embeddings.parquet")
+    for (name <- Seq("q86_bm25_topk", "q122_hybrid_rrf", "q125_chunk_retrieval")) {
+      val query = SparkEntry.queries(name)
+      val got = query(spark, empty)
+      assert(got.schema == query(spark, dir).schema, name)
+      assert(got.collect().isEmpty, name)
+    }
+    spark.catalog.clearCache()
+  }
 }

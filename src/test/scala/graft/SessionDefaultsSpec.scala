@@ -108,6 +108,45 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("SPARK_SCALA_VERSION"))
   }
 
+  test("every profile sizes the codegen cache to the engine's working set") {
+    // a per-JVM cache on the driver and on every executor, so the cap
+    // is not a local-only knob
+    for (profile <- Seq("local", "cluster")) {
+      val c = SessionDefaults.profileConfigs(profile, env = Map.empty)
+      assert(c("spark.sql.codegen.cache.maxEntries") ==
+        SessionDefaults.CodegenCacheEntries.toString, profile)
+    }
+    // above the ~2,400–2,500 classes one pass of all 174 queries compiles
+    assert(SessionDefaults.CodegenCacheEntries > 2500)
+    // a static conf: it reaches the live session only because the
+    // first session's builder set it
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      SessionDefaults.CodegenCacheEntries.toString)
+  }
+
+  test("the env overrides are exactly the four partition knobs") {
+    // no env var reaches the codegen cache (or anything else new): a
+    // GRAFT_* name outside the override list changes nothing
+    val knobs = Map(
+      "GRAFT_MAX_PARTITION_BYTES" -> "spark.sql.files.maxPartitionBytes",
+      "GRAFT_COALESCE" -> "spark.sql.adaptive.coalescePartitions.enabled",
+      "GRAFT_MIN_PARTITION_NUM" ->
+        "spark.sql.adaptive.coalescePartitions.minPartitionNum",
+      "GRAFT_MIN_PARTITION_SIZE" ->
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val stray = Seq("GRAFT_CODEGEN_CACHE", "GRAFT_CODEGEN_CACHE_MAX_ENTRIES",
+      "GRAFT_CACHE_MAX_ENTRIES", "GRAFT_MAX_ENTRIES")
+    for (profile <- Seq("local", "cluster")) {
+      val plain = SessionDefaults.profileConfigs(profile, env = Map.empty)
+      val env = (knobs.keys ++ stray).map(_ -> "7").toMap
+      val c = SessionDefaults.profileConfigs(profile, env)
+      val changed = c.keySet.filter(k => !plain.get(k).contains(c(k)))
+      assert(changed == knobs.values.toSet, profile)
+      assert(c("spark.sql.codegen.cache.maxEntries") ==
+        SessionDefaults.CodegenCacheEntries.toString, profile)
+    }
+  }
+
   test("explicit env overrides beat either profile") {
     val env = Map(
       "GRAFT_MAX_PARTITION_BYTES" -> "33554432",
