@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import BenchCore.{jarr, jnum, jobj, jstr}
+
 /** Benchmark main (driver contract): one JSON line with total and
   * per-query wall seconds at SPARK_GRAFT_SF_DIR.
   *
@@ -116,35 +118,17 @@ object Bench {
     "q170_embed_knn", "q173_exact_substring_remove")
 
   def main(args: Array[String]): Unit = {
+    // Optional args: query names to bench (default: all); an unknown
+    // name fails before any session starts.
+    val queries = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.masterConfigs(master).foldLeft(
-      SessionDefaults(SparkSession.builder()
-        .master(master))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session(master, cpus)
     // Deployment-independent CPU attribution (and shuffle-transport
     // evidence) via task metrics — see TaskMetricsProbe for why the
     // process clock alone is blind under a forked-executor master.
     val taskMetrics = TaskMetricsProbe.install(spark)
-
-    // Optional args: query names to bench (default: all). Unknown
-    // names are a hard error — a misspelled filter would otherwise
-    // silently bench nothing.
-    val wanted = args.toSet
-    val unknown = wanted -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      sys.exit(2)
-    }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.isEmpty || wanted(n) }
 
     // Each run also measures its process-CPU delta (BenchCore
     // .processCpuSeconds) so a slow pass in the artifact is
@@ -179,9 +163,7 @@ object Bench {
         // deterministic low-CPU mode the per-core blocking-count
         // discipline achieved by hand — no concurrent stage can race
         // an unbuilt cache into a duplicate kernel recompute.
-        // SPARK_GRAFT_PIN=0 disables it for A/B runs only.
-        if (sys.env.getOrElse("SPARK_GRAFT_PIN", "1") != "0")
-          graft.operators.Staging.pinCaches(df)
+        graft.operators.Staging.pinCaches(df)
         df.write.format("noop").mode("overwrite").save()
         val c1 = BenchCore.processCpuSeconds()
         lastRunCpuS = if (c0 < 0 || c1 < 0) -1.0 else c1 - c0
@@ -217,10 +199,12 @@ object Bench {
     java.nio.file.Files.createDirectories(out.getParent)
     val samplesSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
     def persistPartial(): Unit = {
-      val qs = samplesSoFar.toSeq.collect { case (n, ss) if ss.exists(_ >= 0) =>
-        "\"" + n + "\":" + ss.filter(_ >= 0).min
-      }.mkString("{", ",", "}")
-      val partial = s"""{"metric":"total","value":-1,"unit":"sec","partial":true,"queries":$qs,"sf":"$sfDir"}"""
+      val qs = jobj(samplesSoFar.toSeq.collect { case (n, ss) if ss.exists(_ >= 0) =>
+        n -> ss.filter(_ >= 0).min.toString
+      })
+      val partial = jobj(Seq("metric" -> jstr("total"), "value" -> "-1",
+        "unit" -> jstr("sec"), "partial" -> "true", "queries" -> qs,
+        "sf" -> jstr(sfDir)))
       java.nio.file.Files.write(out, partial.getBytes("UTF-8"))
     }
 
@@ -309,22 +293,18 @@ object Bench {
     // including failed (-1) ones, on purpose.
     def measuredOk(k: String): Boolean =
       !measured(k).truncated && measured(k).min >= 0
-    val qs = results.collect { case (k, v) if measuredOk(k) =>
-      "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
+    val names = queries.map(_._1)
+    // one JSON map over the names `keep` admits, in query order
+    def perQuery(keep: String => Boolean)(value: String => String): String =
+      jobj(names.filter(keep).map(n => n -> value(n)))
+    val qs = perQuery(measuredOk)(n => measured(n).min.toString)
     // Every raw sample per query (3 passes + any outlier reruns), so a
     // reader can see run-to-run noise directly instead of inferring it
     // from the min — a loaded box shows one inflated slot, a plan
     // regression shows consistent slowness; spread/reruns summarize it.
-    val ps = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + measured(name).samples.mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val spreads = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" + BenchCore.jnum(measured(name).spread, 3)
-    }.mkString("{", ",", "}")
-    val reruns = queries.collect { case (name, _) if measured(name).reruns > 0 =>
-      "\"" + name + "\":" + measured(name).reruns
-    }.mkString("{", ",", "}")
+    val ps = perQuery(_ => true)(n => jarr(measured(n).samples.map(_.toString)))
+    val spreads = perQuery(measuredOk)(n => jnum(measured(n).spread, 3))
+    val reruns = perQuery(measured(_).reruns > 0)(n => measured(n).reruns.toString)
     val total = results.map(_._2).filter(_ >= 0).sum
 
     // 10x scale-probe section: when the sf1 dataset exists (generated
@@ -337,19 +317,14 @@ object Bench {
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "probe_data/sf1")
     // A renamed/removed query must fail loudly, not silently shrink the
     // probe (BenchSpec enforces the same invariant at test time).
-    val missingProbe = probeNames.filterNot(SparkEntry.queries.keySet)
-    require(missingProbe.isEmpty,
-      s"sf1 probe names not registered in SparkEntry.queries: " +
-        missingProbe.mkString(", "))
+    val probe = SparkEntry.select(probeNames)
     def budgetLeftS: Double = (deadlineNanos - System.nanoTime()) / 1e9
     val sf1Section =
-      if (wanted.nonEmpty || outOfBudget() ||
+      if (args.nonEmpty || outOfBudget() ||
           !new java.io.File(sf1Dir, "documents.parquet").exists() ||
           new java.io.File(sfDir).getCanonicalPath ==
-            new java.io.File(sf1Dir).getCanonicalPath) ""
+            new java.io.File(sf1Dir).getCanonicalPath) None
       else {
-        val probe = SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter { case (n, _) => probeNames.contains(n) }
         val budgetAtStart = budgetLeftS
         // Probe warmups seed the probe measure too, and the SAME
         // deadline governs every probe run — the probe is a ratio
@@ -407,91 +382,70 @@ object Bench {
         // every run failed (min = -1) is named in "failed", a probe
         // the budget cut before any sample in "truncated" — neither
         // may leak a -1 into the queries/ratio maps unmarked.
+        def pOk(n: String): Boolean =
+          !pMeasured(n).truncated && pMeasured(n).min >= 0
         def pField(f: (String, BenchCore.ProbeResult) => String): String =
-          probe.collect { case (name, _)
-              if !pMeasured(name).truncated && pMeasured(name).min >= 0 =>
-            "\"" + name + "\":" + f(name, pMeasured(name))
-          }.mkString("{", ",", "}")
+          jobj(probe.collect { case (n, _) if pOk(n) => n -> f(n, pMeasured(n)) })
         val pq = pField((_, r) => r.min.toString)
-        val pRatio = pField((_, r) => BenchCore.jnum(r.ratio, 2))
+        val pRatio = pField((_, r) => jnum(r.ratio, 2))
         // "spread_all", not "spread": unlike the corpus section's
         // spread (timed passes only, seed excluded), the probe spread
         // includes the seeded warmup — the probe runs in a warm JVM,
         // so its seed is a real sample; the name records the
         // difference in semantics.
-        val pSpread = pField((_, r) => BenchCore.jnum(r.spread, 3))
+        val pSpread = pField((_, r) => jnum(r.spread, 3))
         val pPasses = pField((_, r) => r.samples.size.toString)
-        val pSamples = pField((_, r) => r.samples.mkString("[", ",", "]"))
+        val pSamples = pField((_, r) => jarr(r.samples.map(_.toString)))
         val pCpuOfMin = pField((n, r) =>
-          BenchCore.jnum(BenchCore.cpuOfMin(r.samples, pCpu(n)), 3))
+          jnum(BenchCore.cpuOfMin(r.samples, pCpu(n)), 3))
         val pTaskCpuOfMin = pField((n, r) =>
-          BenchCore.jnum(BenchCore.cpuOfMin(r.samples, pTaskCpu(n)), 3))
-        val pTrunc = probe.collect { case (name, _) if pMeasured(name).truncated =>
-          "\"" + name + "\""
-        }.mkString("[", ",", "]")
-        val pFailed = probe.collect { case (name, _)
-            if !pMeasured(name).truncated && pMeasured(name).min < 0 =>
-          "\"" + name + "\""
-        }.mkString("[", ",", "]")
+          jnum(BenchCore.cpuOfMin(r.samples, pTaskCpu(n)), 3))
+        val pTrunc = jarr(probe.collect {
+          case (n, _) if pMeasured(n).truncated => jstr(n) })
+        val pFailed = jarr(probe.collect {
+          case (n, _) if !pMeasured(n).truncated && pMeasured(n).min < 0 => jstr(n) })
         // rows_out obeys the same measured-entries invariant as every
         // other value field: a probe whose timed runs all failed or
         // were truncated must not surface a successful count() as if
         // it had been measured.
-        val pRowsJson = probe.collect { case (name, _)
-            if pRows.contains(name) &&
-              !pMeasured(name).truncated && pMeasured(name).min >= 0 =>
-          "\"" + name + "\":" + pRows(name)
-        }.mkString("{", ",", "}")
-        s""","sf1":{"dir":"$sf1Dir","budget_left_start_s":${BenchCore.jnum(budgetAtStart, 1)},""" +
-          s""""queries":$pq,"ratio":$pRatio,"spread_all":$pSpread,""" +
-          s""""passes":$pPasses,"samples":$pSamples,"cpu":$pCpuOfMin,""" +
-          s""""cpu_task":$pTaskCpuOfMin,""" +
-          s""""rows_out":$pRowsJson,"truncated":$pTrunc,"failed":$pFailed,""" +
-          s""""budget_left_end_s":${BenchCore.jnum(budgetLeftS, 1)}}"""
+        val pRowsJson = jobj(probe.collect {
+          case (n, _) if pRows.contains(n) && pOk(n) => n -> pRows(n).toString })
+        Some(jobj(Seq("dir" -> jstr(sf1Dir),
+          "budget_left_start_s" -> jnum(budgetAtStart, 1),
+          "queries" -> pq, "ratio" -> pRatio, "spread_all" -> pSpread,
+          "passes" -> pPasses, "samples" -> pSamples, "cpu" -> pCpuOfMin,
+          "cpu_task" -> pTaskCpuOfMin, "rows_out" -> pRowsJson,
+          "truncated" -> pTrunc, "failed" -> pFailed,
+          "budget_left_end_s" -> jnum(budgetLeftS, 1))))
       }
 
-    val rerunsField = if (reruns == "{}") "" else s""","reruns":$reruns"""
     // Budget-truncated queries (no samples at all) are UNMEASURED, not
     // broken — named separately so a -1 never masquerades as a failure.
-    val truncated = queries.collect { case (name, _) if measured(name).truncated =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val truncatedField = if (truncated == "[]") "" else s""","truncated":$truncated"""
+    val truncated = jarr(names.filter(measured(_).truncated).map(jstr))
     // All-runs-failed queries (min = -1, not budget-cut) — excluded
     // from the value maps above, named here.
-    val failed = queries.collect { case (name, _)
-        if !measured(name).truncated && measured(name).min < 0 =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val failedField = if (failed == "[]") "" else s""","failed":$failed"""
+    val failed = jarr(names.filter(n =>
+      !measured(n).truncated && measured(n).min < 0).map(jstr))
     // Per-query process-CPU seconds of the pass that produced the min
     // (cpu ≈ wall × busy-cores → plan compute; cpu ≪ that → box/IO),
     // plus every per-pass CPU sample aligned with "passes".
-    val cpuMin = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" +
-        BenchCore.jnum(BenchCore.cpuOfMin(measured(name).samples, cpuSoFar(name)), 3)
-    }.mkString("{", ",", "}")
-    val cpuPasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + cpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val cpuMin = perQuery(measuredOk)(n =>
+      jnum(BenchCore.cpuOfMin(measured(n).samples, cpuSoFar(n)), 3))
+    val cpuPasses = perQuery(_ => true)(n => jarr(cpuSoFar(n).map(jnum(_, 3))))
     // Task-metric CPU of the min pass + every pass, aligned exactly
     // like cpu/cpu_passes. On local[n] cpu_task ≈ cpu minus harness
     // threads; under a forked-executor master cpu_task is the ONLY
     // valid plan-CPU attribution (cpu collapses to driver overhead).
-    val cpuTaskMin = queries.collect { case (name, _) if measuredOk(name) =>
-      "\"" + name + "\":" +
-        BenchCore.jnum(BenchCore.cpuOfMin(measured(name).samples, taskCpuSoFar(name)), 3)
-    }.mkString("{", ",", "}")
-    val cpuTaskPasses = queries.map { case (name, _) =>
-      "\"" + name + "\":[" + taskCpuSoFar(name).map(c => BenchCore.jnum(c, 3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val cpuTaskMin = perQuery(measuredOk)(n =>
+      jnum(BenchCore.cpuOfMin(measured(n).samples, taskCpuSoFar(n)), 3))
+    val cpuTaskPasses =
+      perQuery(_ => true)(n => jarr(taskCpuSoFar(n).map(jnum(_, 3))))
     // Generated classes compiled in each pass, aligned like
     // cpu_task_passes (-1 for a failed run). The count is this JVM's
     // (CodegenMetrics is per JVM): complete on local[n], driver-side
     // compiles only under a forked-executor master.
-    val compilePasses = queries.map { case (name, _) =>
-      "\"" + name + "\":" + compilesSoFar(name).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val compilePasses =
+      perQuery(_ => true)(n => jarr(compilesSoFar(n).map(_.toString)))
     // The q84-class race, machine-visible (r16 verdict #4): queries
     // whose warm CPU passes spread >1.5x (gap >5s) WITH a
     // multi-consumer cache in the plan. Since pinCaches runs in every
@@ -504,19 +458,12 @@ object Bench {
     // to driver overhead (a race there would be invisible to it), so
     // the task-metric series carries the detection; in local mode the
     // process series additionally sees driver-side compute.
-    val raceFlags = queries.collect { case (name, _)
-        if Seq(cpuSoFar(name), taskCpuSoFar(name)).exists(series =>
-          BenchCore.cpuRaceFlag(
-            if (seeded(name)) series.drop(1) else series,
-            multiUse(name))) =>
-      "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val raceField = if (raceFlags == "[]") "" else s""","cpu_race_flags":$raceFlags"""
-    val unpinnedJson = unpinned.map { case (name, caches) =>
-      "\"" + name + "\":[" +
-        caches.map(BenchCore.jstr).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val unpinnedField = if (unpinnedJson == "{}") "" else s""","unpinned_caches":$unpinnedJson"""
+    val raceFlags = jarr(names.filter(n =>
+      Seq(cpuSoFar(n), taskCpuSoFar(n)).exists(series =>
+        BenchCore.cpuRaceFlag(
+          if (seeded(n)) series.drop(1) else series, multiUse(n)))).map(jstr))
+    val unpinnedJson = jobj(unpinned.map { case (n, caches) =>
+      n -> jarr(caches.map(jstr)) })
     // Whole-run shuffle transport totals (all passes, warmups and the
     // probe included): remote vs local read bytes split by the
     // BlockManager locality of the fetch. remote_mb > 0 is the
@@ -525,12 +472,23 @@ object Bench {
     // expected under local-cluster.
     TaskMetricsProbe.drain(spark)
     val tmTotal = taskMetrics.snapshot()
-    val shuffleField =
-      s""","shuffle":{"remote_mb":${BenchCore.jnum(tmTotal.remoteShuffleBytes / 1048576.0, 1)},""" +
-        s""""local_mb":${BenchCore.jnum(tmTotal.localShuffleBytes / 1048576.0, 1)},""" +
-        s""""tasks":${tmTotal.tasks}}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","master":${BenchCore.jstr(master)},"queries":$qs,"passes":$ps,"spread":$spreads,"cpu":$cpuMin,"cpu_passes":$cpuPasses,"cpu_task":$cpuTaskMin,"cpu_task_passes":$cpuTaskPasses,"codegen_compiles":$compilePasses$rerunsField$truncatedField$failedField$raceField$unpinnedField$shuffleField,"sf":"$sfDir"$sf1Section}"""
+    val shuffle = jobj(Seq(
+      "remote_mb" -> jnum(tmTotal.remoteShuffleBytes / 1048576.0, 1),
+      "local_mb" -> jnum(tmTotal.localShuffleBytes / 1048576.0, 1),
+      "tasks" -> tmTotal.tasks.toString))
+    // reruns, truncated, failed, cpu_race_flags and unpinned_caches
+    // appear only when non-empty
+    def ifAny(key: String, v: String): Option[(String, String)] =
+      if (v == "{}" || v == "[]") None else Some(key -> v)
+    val json = jobj(Seq("metric" -> jstr("total"), "value" -> total.toString,
+      "unit" -> jstr("sec"), "master" -> jstr(master), "queries" -> qs,
+      "passes" -> ps, "spread" -> spreads, "cpu" -> cpuMin,
+      "cpu_passes" -> cpuPasses, "cpu_task" -> cpuTaskMin,
+      "cpu_task_passes" -> cpuTaskPasses, "codegen_compiles" -> compilePasses) ++
+      ifAny("reruns", reruns) ++ ifAny("truncated", truncated) ++
+      ifAny("failed", failed) ++ ifAny("cpu_race_flags", raceFlags) ++
+      ifAny("unpinned_caches", unpinnedJson) ++
+      Seq("shuffle" -> shuffle, "sf" -> jstr(sfDir)) ++ sf1Section.map("sf1" -> _))
     println(json)
     // The console line can be lost to log-tail truncation (one line per
     // 114 queries is long); persist the identical JSON where the driver

@@ -62,9 +62,9 @@ object BenchCore {
 
   /** Full JSON string escape — backslash, quote, and ALL control
     * chars (<0x20). Cache names in the bench artifact are abbreviated
-    * plan strings, which can carry tabs or odd literals; a partial
-    * escaper here would make the whole artifact unparseable (the
-    * failure class Verify.scala's escaper documents).
+    * plan strings, and Verify's oracle SQL and failure messages can
+    * carry tabs or CRs; a partial escaper would make the whole artifact
+    * unparseable (and a driver's json.load of it fail).
     */
   def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -75,6 +75,16 @@ object BenchCore {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** JSON object over pre-rendered values, keys escaped, in the
+    * given order — the one writer behind every JSON file and line the
+    * entry points emit.
+    */
+  def jobj(fields: Iterable[(String, String)]): String =
+    fields.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** JSON array over pre-rendered items, in the given order. */
+  def jarr(items: Iterable[String]): String = items.mkString("[", ",", "]")
 
   /** Post-hoc CPU-spread race flag for the bench artifact: a query
     * whose WARM cpu passes (seed excluded — the seed pays JIT) spread

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dumper for optimization rounds: writes
   * `.explain("formatted")` for the named queries (default: all) to
   * `<outDir>/<query>_<tag>.txt`, building each query's frame exactly
@@ -19,36 +17,23 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val queries = SparkEntry.select(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.masterConfigs(master).foldLeft(
-      SessionDefaults(SparkSession.builder().master(master))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session(SessionDefaults.master(cpus), cpus)
     java.nio.file.Files.createDirectories(outDir)
-    val wanted = args.drop(2).toSet
-    val unknown = wanted -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.isEmpty || wanted(n) }
-      .foreach { case (name, fn) =>
-        val df = fn(spark, sfDir)
-        // the private explainString surface, via the public Dataset
-        // API: capture what .explain("formatted") prints
-        val out = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-          df.explain("formatted")
-        }
-        java.nio.file.Files.write(outDir.resolve(s"${name}_$tag.txt"),
-          out.toByteArray)
-        spark.catalog.clearCache()
-        println(s"[plandump] $name -> ${outDir.resolve(s"${name}_$tag.txt")}")
+    queries.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      // the private explainString surface, via the public Dataset
+      // API: capture what .explain("formatted") prints
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        df.explain("formatted")
       }
+      java.nio.file.Files.write(outDir.resolve(s"${name}_$tag.txt"),
+        out.toByteArray)
+      spark.catalog.clearCache()
+      println(s"[plandump] $name -> ${outDir.resolve(s"${name}_$tag.txt")}")
+    }
     SessionDefaults.stopAndReap(spark)
   }
 }

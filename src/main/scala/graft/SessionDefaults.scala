@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session hygiene + the engine's plan-critical defaults,
-  * applied by every entry point (tests, [[Verify]], [[Bench]]).
+  * applied by every entry point (tests, [[Verify]], [[Bench]],
+  * [[PlanDump]], [[FaultMatrix]]) through [[session]].
   *
   * Hygiene: Derby — the embedded Hive-metastore database — and the
   * SQL warehouse both live under `target/`, so a test or bench run
@@ -234,8 +235,8 @@ object SessionDefaults {
     s.sessionState.conf.numShufflePartitions
 
   /** Delete this session's reliable-checkpoint residue, then stop it —
-    * the shutdown path for every entry point (Bench, Verify, the
-    * probe mains). `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * the shutdown path for every entry point (Bench, Verify, PlanDump,
+    * FaultMatrix). `spark.cleaner.referenceTracking.cleanCheckpoints`
     * only deletes a superseded checkpoint's files when the driver GCs
     * the RDD reference, so a long-lived driver accumulates loop-round
     * files under `spark.checkpoint.dir` between GCs and keeps the
@@ -258,6 +259,27 @@ object SessionDefaults {
       fs.delete(path, true)
       ()
     }
+
+  /** The one session recipe every entry point builds from: [[apply]]'s
+    * hygiene and profile confs, the master, a shuffle width of `cpus`,
+    * UTC, no UI, then [[masterConfigs]] and the caller's `extra` (which
+    * therefore win over everything before them). Log level WARN. AQE
+    * is not set: it is on by default in Spark 4.1 (SessionDefaultsSpec
+    * reads it back from a recipe-built session).
+    */
+  def session(master: String, cpus: String,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val base = apply(SparkSession.builder())
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = (masterConfigs(master) ++ extra).foldLeft(base) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val derby = new java.io.File("target/derby")

@@ -36,6 +36,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     families.map(_._1).reduce(_ ++ _)
 
+  /** The named queries sorted by name, or all of them when `names` is
+    * empty. An unknown name fails loudly: a misspelled filter would
+    * otherwise select nothing and report a clean run.
+    */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct.sorted
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }
+      .sortBy(_._1)
+  }
+
   def oracleSql: Map[String, String] =
     families.map(_._2).reduce(_ ++ _)
 }

@@ -1,33 +1,28 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+
+import BenchCore.{jobj, jstr}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and
   * verify_failures.json naming each query that failed ([[dump]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val sfDir = args(0)
+    val outDir = args(1)
     // optional extra args: run only the named queries (local iteration;
     // the driver always passes exactly two args → full dump)
-    val only: Set[String] = args.drop(2).toSet
+    val queries = SparkEntry.select(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GRAFT_MASTER support (SessionDefaults.master): the multi-executor
     // attestation reruns this SAME dump under local-cluster, proving
     // the oracle-green results hold across real executor boundaries.
-    val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.masterConfigs(master).foldLeft(
-      SessionDefaults(SparkSession.builder()
-        .master(master))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // NOTE: default INT96 parquet timestamps are intentional — they
-        // read back as tz-naive values matching the DuckDB oracle's
-        // naive timestamps; TIMESTAMP_MICROS would add a UTC tz
-        // annotation and break value comparison.
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: default INT96 parquet timestamps are intentional — they
+    // read back as tz-naive values matching the DuckDB oracle's naive
+    // timestamps; TIMESTAMP_MICROS would add a UTC tz annotation and
+    // break value comparison.
+    val spark = SessionDefaults.session(SessionDefaults.master(cpus), cpus)
     // Fail LOUDLY before any query runs if the driver regenerated the
     // testdata with different column types (the Aug-13 drift cost 39
     // queries one silent analysis error at a time).
@@ -41,8 +36,7 @@ object Verify {
         s"[verify] oracles without queries: ${orphaned.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
-    dump(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
+    dump(spark, sfDir, outDir, queries)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       jsonObject(SparkEntry.oracleSql))
     SessionDefaults.stopAndReap(spark)
@@ -54,7 +48,7 @@ object Verify {
     * Returns that map.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame]): Map[String, String] = {
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Map[String, String] = {
     val failures = queries.toSeq.flatMap { case (name, fn) =>
       val failure =
         try {
@@ -80,19 +74,8 @@ object Verify {
     failures
   }
 
+  // string → string as `"k": "v"` (a space after each colon), so both
+  // files stay byte-comparable with earlier dumps
   private def jsonObject(kv: Iterable[(String, String)]): String =
-    kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+    jobj(kv.map { case (k, v) => k -> (" " + jstr(v)) })
 }

@@ -70,14 +70,6 @@ object BpeTrainer {
     */
   final case class Learned(merges: Seq[(String, String, Long)], vocab: DataFrame)
 
-  /** One training round's instrumentation ([[learn]]'s `onRound`):
-    * the probe surface for the vocab-scale measurement
-    * (BpeScaleProbe → SCALE_PROBE.md) — per-round wall must stay FLAT
-    * in round number, merges/round is the batching win.
-    */
-  final case class RoundStats(round: Int, mergesThisRound: Int,
-      mergesTotal: Int, wallMs: Long)
-
   /** Adjacent-pair keys of a token array: `toks[i] + " " + toks[i+1]`
     * for every position (overlapping, the standard BPE count).
     */
@@ -178,8 +170,7 @@ object BpeTrainer {
     */
   def learn(docs: DataFrame, textCol: String, nMerges: Int,
       byteLevel: Boolean = false, maxBatch: Int = 16,
-      checkpointEvery: Int = 4,
-      onRound: RoundStats => Unit = _ => ()): Learned = {
+      checkpointEvery: Int = 4): Learned = {
     require(nMerges > 0 && nMerges <= 65536,
       s"nMerges must be a bounded artifact size, got $nMerges")
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
@@ -226,9 +217,7 @@ object BpeTrainer {
     val merges = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
     val seen = scala.collection.mutable.HashSet.empty[(String, String)]
     var exhausted = false
-    var round = 0
     while (merges.size < nMerges && !exhausted) {
-      val roundStart = System.nanoTime()
       val want = math.min(maxBatch, nMerges - merges.size)
       // collect a slice wide enough to see past the batch to its stop
       // boundary; +1 row detects truncation
@@ -272,9 +261,6 @@ object BpeTrainer {
         vocab = vocab.select($"word", $"freq", merged.as("toks"))
         sinceCut += 1
         if (sinceCut >= checkpointEvery) cut()
-        round += 1
-        onRound(RoundStats(round, batch.size, merges.size,
-          (System.nanoTime() - roundStart) / 1000000L))
       }
     }
     cut()

@@ -85,7 +85,7 @@ object Components {
     * meaningful only together with `lastEscalated`). ThreadLocal so
     * concurrent library callers sharing the session can't
     * cross-attribute each other's runs (r16 advice); the harness
-    * readers (StarProbe, ComponentsSpec) call and read on one thread.
+    * reader (ComponentsSpec) calls and reads on one thread.
     */
   private val lastEscalatedTL = ThreadLocal.withInitial[java.lang.Boolean](() => false)
   private val lastStarRoundsTL = ThreadLocal.withInitial[java.lang.Integer](() => -1)

@@ -250,6 +250,17 @@ class BenchSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(saved)
   }
 
+  test("jobj/jarr: empty, order kept, keys fully escaped") {
+    assert(BenchCore.jobj(Nil) == "{}")
+    assert(BenchCore.jarr(Nil) == "[]")
+    assert(BenchCore.jobj(Seq("z" -> "1", "a" -> "[2]", "m" -> "\"x\"")) ==
+      """{"z":1,"a":[2],"m":"x"}""")
+    assert(BenchCore.jarr(Seq("3", "1", "2")) == "[3,1,2]")
+    // a key with a quote, a tab and a control char
+    assert(BenchCore.jobj(Seq("q\"t\tc\u0001" -> "0")) ==
+      "{\"q\\\"t\\tc\\u0001\":0}")
+  }
+
   test("processCpuSeconds is monotonic and advances under compute") {
     val c0 = BenchCore.processCpuSeconds()
     assume(c0 >= 0, "JVM does not expose process CPU time")

@@ -100,7 +100,7 @@ class CheckpointsSpec extends AnyFunSuite {
     // TestSpark runs local[4] — sparkContext.isLocal must be true, so
     // the default stable() call picks localCheckpoint here; the
     // reliable path under a REAL fleet is exercised end-to-end by
-    // ChaosProbe (CHAOS_r18.md) and the multiexec verify runs
+    // `FaultMatrix kill` (CHAOS_r18.md) and the multiexec verify runs
     assert(spark.sparkContext.isLocal)
     val df = Checkpoints.stable(spark.range(10).toDF())
     assert(isLineageCut(df) && df.count() == 10)

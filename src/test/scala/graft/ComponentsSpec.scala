@@ -37,7 +37,7 @@ class ComponentsSpec extends AnyFunSuite {
     // anyway, never a partial one
     val path = (1L to 200L).sliding(2).map(s => (s(0), s(1))).toSeq
     assert(comps(path, iters = 2).values.toSet == Set(1L))
-    // the diagnostic slots (StarProbe's attribution source) record the
+    // the diagnostic slots record the
     // escalation: tripped, and a positive star-round count
     assert(Components.lastEscalated && Components.lastStarRounds > 0)
     // ...and a fast-path-converged call resets them

@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.CoreOps._
 
 object TestSpark {
-  lazy val spark: SparkSession = SessionDefaults(SparkSession.builder()
-    .master("local[4]"))
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SessionDefaults.session("local[4]", "4")
 }
 
 class CoreOpsSpec extends AnyFunSuite {

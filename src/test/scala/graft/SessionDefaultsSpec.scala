@@ -22,6 +22,38 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") != "false")
   }
 
+  test("session recipe: UTC, shuffle width = cpus, no UI, AQE on, extra wins") {
+    // the live test session was built by the recipe (TestSpark)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    // nobody sets AQE: Spark 4.1 has it on by default
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // `extra` is applied after the recipe's own shuffle width; on a
+    // live JVM getOrCreate returns the running session with the
+    // runtime confs applied, so restore the shared session's width
+    try {
+      val s = SessionDefaults.session("local[4]", "4",
+        Map("spark.sql.shuffle.partitions" -> "3"))
+      assert(s eq spark)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "3")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
+  test("no SparkSession.builder in src/main outside SessionDefaults") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    val sites = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "SessionDefaults.scala")
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(_.toString).toList.sorted
+    finally walk.close()
+    assert(sites.isEmpty, s"build sessions via SessionDefaults.session: $sites")
+  }
+
   test("local profile pins the bench-box knobs") {
     val c = SessionDefaults.profileConfigs("local", env = Map.empty)
     assert(c("spark.sql.adaptive.coalescePartitions.enabled") == "false")

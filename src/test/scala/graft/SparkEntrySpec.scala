@@ -19,6 +19,15 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"queries without oracles: $rowsOnly")
   }
 
+  test("select: sorted, all queries when none are named, unknown names fail") {
+    assert(SparkEntry.select(Nil).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    val picked = SparkEntry.select(Seq("q82_dedup_clusters", "q10_resample_ohlc_1h"))
+    assert(picked.map(_._1) == Seq("q10_resample_ohlc_1h", "q82_dedup_clusters"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q10_resample_ohlc_1h", "q8x_typo", "q0_nope")))
+    assert(e.getMessage.contains("unknown queries: q0_nope, q8x_typo"))
+  }
+
   test("query names follow the qNN_snake convention") {
     val bad = SparkEntry.queries.keys.filterNot(_.matches("^q[0-9]{2,3}_[a-z0-9_]+$"))
     assert(bad.isEmpty, s"non-conforming names: $bad")

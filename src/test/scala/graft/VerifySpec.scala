@@ -29,4 +29,17 @@ class VerifySpec extends AnyFunSuite {
     assert(failuresFile(out) == "{}")
     assert(spark.read.parquet(s"$out/q_ok").count() == 3)
   }
+
+  test("a misspelled query name fails instead of dumping nothing") {
+    val out = Files.createTempDirectory("verify_dump").toString
+    val e = intercept[IllegalArgumentException](
+      Verify.main(Array("unused", out, "q8x_typo")))
+    assert(e.getMessage.contains("unknown queries: q8x_typo"))
+    assert(!Files.exists(Paths.get(out, "verify_failures.json")))
+  }
+
+  test("fewer than two args is a usage error, not a MatchError") {
+    val e = intercept[IllegalArgumentException](Verify.main(Array("/tmp/only")))
+    assert(e.getMessage.contains("usage: Verify <sfDir> <outDir>"))
+  }
 }
