@@ -54,12 +54,7 @@ final class BulkApi(
   private val cid = Seq("expiration", "right", "strike")
   private val cidCols = cid.map(col)
 
-  private def spliced(df: DataFrame, root: Any, tsCol: String): DataFrame =
-    aliases.find(_.currentKey == root) match {
-      case Some(a) => TickerSplice.splicedHistory(
-        df, "root", tsCol, a, Seq("seq") ++ cid)
-      case None => df.filter(col("root") === lit(root))
-    }
+  private val spliced = TickerSplice.spliced(aliases, Seq("seq") ++ cid) _
 
   private def expFilter(df: DataFrame, exp: Option[String]): DataFrame =
     // exp=None is the reference's `exp=0` — all expirations of the root
@@ -86,7 +81,7 @@ final class BulkApi(
   def retrieveBulkEod(root: Any, exp: Option[String],
       start: String, end: String): DataFrame = {
     val ord = struct(col("ts"), col("seq"))
-    val eod = (c: Column) => date_trunc("day", c) + expr(s"interval ${cfg.eodHour} hours")
+    val eod = (c: Column) => cfg.eodStamp(date_trunc("day", c))
     val q = dayRange(expFilter(spliced(quotes, root, "ts"), exp), "ts", start, end)
       .filter(businessHours(col("ts"), cfg.quoteStartMin, cfg.closeMin))
       .withColumn("mid", midpoint(col("bid"), col("ask")))
@@ -94,21 +89,17 @@ final class BulkApi(
         weightedMidpoint(col("bid"), col("ask"), col("bid_size"), col("ask_size")))
       .groupBy(eod(col("ts")).as("datetime") +: col("root") +: cidCols: _*)
       .agg(
-        max_by(col("mid"), ord).as("q_close"),
-        max_by(col("bid"), ord).as("close_bid"),
-        max_by(col("ask"), ord).as("close_ask"),
-        max_by(col("bid_size"), ord).as("bid_size"),
-        max_by(col("ask_size"), ord).as("ask_size"),
-        max_by(col("wmid"), ord).as("weighted_midpoint"))
+        lastBy(col("mid"), ord).as("q_close"),
+        lastBy(col("bid"), ord).as("close_bid"),
+        lastBy(col("ask"), ord).as("close_ask"),
+        lastBy(col("bid_size"), ord).as("bid_size"),
+        lastBy(col("ask_size"), ord).as("ask_size"),
+        lastBy(col("wmid"), ord).as("weighted_midpoint"))
+    val tAggs = ohlcBy(col("price"), ord, "t_") :+ dsum(col("volume")).as("volume")
     val t = dayRange(expFilter(spliced(trades, root, "ts"), exp), "ts", start, end)
       .filter(businessHours(col("ts"), cfg.openMin, cfg.closeMin))
       .groupBy(eod(col("ts")).as("datetime") +: col("root") +: cidCols: _*)
-      .agg(
-        min_by(col("price"), ord).as("t_open"),
-        max(col("price")).as("t_high"),
-        min(col("price")).as("t_low"),
-        max_by(col("price"), ord).as("t_close"),
-        dsum(col("volume")).as("volume"))
+      .agg(tAggs.head, tAggs.tail: _*)
     q.join(t, Seq("datetime", "root") ++ cid, "left")
       .select(
         col("datetime"), col("root"), col("strike"), col("expiration"), col("right"),
@@ -118,7 +109,7 @@ final class BulkApi(
         coalesce(col("t_close"), col("q_close")).as("close"),
         coalesce(col("volume"), lit(0.0)).as("volume"),
         col("bid_size"), col("close_bid"), col("ask_size"), col("close_ask"),
-        ((col("close_bid") + col("close_ask")) / 2.0).as("midpoint"),
+        midpoint(col("close_bid"), col("close_ask")).as("midpoint"),
         col("weighted_midpoint"))
   }
 
@@ -158,16 +149,16 @@ final class BulkApi(
       filtered
         .groupBy(col("root") +: cidCols :+ to_date(col("ts")).as("date"): _*)
         .agg(
-          max_by(col("bid"), ord).as("close_bid"),
-          max_by(col("ask"), ord).as("close_ask"),
-          max_by(col("bid_size"), ord).as("bid_size"),
-          max_by(col("ask_size"), ord).as("ask_size"),
-          max_by(weightedMidpoint(col("bid"), col("ask"),
+          lastBy(col("bid"), ord).as("close_bid"),
+          lastBy(col("ask"), ord).as("close_ask"),
+          lastBy(col("bid_size"), ord).as("bid_size"),
+          lastBy(col("ask_size"), ord).as("ask_size"),
+          lastBy(weightedMidpoint(col("bid"), col("ask"),
             col("bid_size"), col("ask_size")), ord).as("weighted_midpoint"))
         .select(col("root"), col("expiration"), col("strike"), col("right"),
           col("bid_size"), col("close_bid"), col("ask_size"), col("close_ask"),
           col("date"),
-          ((col("close_bid") + col("close_ask")) / 2.0).as("midpoint"),
+          midpoint(col("close_bid"), col("close_ask")).as("midpoint"),
           col("weighted_midpoint"))
     }
   }
@@ -195,9 +186,8 @@ final class BulkApi(
     val eod = retrieveBulkEod(root, None, start, end)
     val ord = struct(col("ts"), col("seq"))
     val spot = dayRange(spliced(trades, root, "ts"), "ts", start, end)
-      .groupBy((date_trunc("day", col("ts")) +
-        expr(s"interval ${cfg.eodHour} hours")).as("datetime"), col("root"))
-      .agg(max_by(col("price"), ord).as("spot"))
+      .groupBy(cfg.eodStamp(date_trunc("day", col("ts"))).as("datetime"), col("root"))
+      .agg(lastBy(col("price"), ord).as("spot"))
     val joined = eod.join(spot, Seq("datetime", "root"), "left")
     val filled = CoreOps.ffill(joined, Seq("spot"),
       Seq("root", "expiration", "right", "strike"), Seq("datetime"))
@@ -256,15 +246,11 @@ final class BulkApi(
     * then keep-latest-day), no window.
     */
   def snapshotOhlc(root: Any): DataFrame = {
-    val ord = struct(col("ts"), col("seq"))
+    val aggs = ohlcBy(col("price"), struct(col("ts"), col("seq"))) :+
+      dsum(col("volume")).as("volume")
     val daily = spliced(trades, root, "ts")
       .groupBy(col("root") +: cidCols :+ to_date(col("ts")).as("day"): _*)
-      .agg(
-        min_by(col("price"), ord).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), ord).as("close"),
-        dsum(col("volume")).as("volume"))
+      .agg(aggs.head, aggs.tail: _*)
     CoreOps.dedupKeepLast(daily, Seq("root") ++ cid, Seq("day"))
       .select(col("root") +: cidCols :+ col("day") :+ col("open") :+
         col("high") :+ col("low") :+ col("close") :+ col("volume"): _*)

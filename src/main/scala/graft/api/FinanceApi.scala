@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -14,7 +14,11 @@ import graft.operators.CoreOps._
   * open"; plain quote retrieval still starts at market open.
   */
 final case class MarketConfig(openMin: Int = 570, closeMin: Int = 960,
-    eodHour: Int = 16, quoteStartMin: Int = 585)
+    eodHour: Int = 16, quoteStartMin: Int = 585) {
+
+  /** The end-of-day stamp of a day-start timestamp: `day + eodHour`. */
+  def eodStamp(day: Column): Column = day + expr(s"interval $eodHour hours")
+}
 
 /** The reference's public retrieval surface (SURVEY §7.1 module 5 /
   * §3.1) re-expressed over DataFrame-backed market tables:
@@ -39,12 +43,7 @@ final class FinanceApi(
     contracts: DataFrame = null) {
 
   /** R1: widen a single-root scan with its pre-rename history. */
-  private def spliced(df: DataFrame, root: Any, tsCol: String): DataFrame =
-    aliases.find(_.currentKey == root) match {
-      case Some(a) => TickerSplice.splicedHistory(
-        df, "root", tsCol, a, Seq("seq"))
-      case None => df.filter(col("root") === lit(root))
-    }
+  private val spliced = TickerSplice.spliced(aliases, Seq("seq")) _
 
   private def inRange(df: DataFrame, tsCol: String, start: String, end: String) =
     df.filter(col(tsCol) >= to_timestamp(lit(start)) &&
@@ -65,17 +64,14 @@ final class FinanceApi(
         weightedMidpoint(col("bid"), col("ask"), col("bid_size"), col("ask_size")))
       .filter(businessHours(col("ts"), fromMin, cfg.closeMin))
     val ord = struct(col("ts"), col("seq"))
+    val aggs = ohlcBy(col("mid"), ord) ++ Seq(
+      lastBy(col("bid"), ord).as("close_bid"),
+      lastBy(col("ask"), ord).as("close_ask"),
+      lastBy(col("bid_size"), ord).as("bid_size"),
+      lastBy(col("ask_size"), ord).as("ask_size"),
+      lastBy(col("weighted_midpoint"), ord).as("weighted_midpoint"))
     base.groupBy(window(col("ts"), interval)("start").as("datetime"), col("root"))
-      .agg(
-        min_by(col("mid"), ord).as("open"),
-        max(col("mid")).as("high"),
-        min(col("mid")).as("low"),
-        max_by(col("mid"), ord).as("close"),
-        max_by(col("bid"), ord).as("close_bid"),
-        max_by(col("ask"), ord).as("close_ask"),
-        max_by(col("bid_size"), ord).as("bid_size"),
-        max_by(col("ask_size"), ord).as("ask_size"),
-        max_by(col("weighted_midpoint"), ord).as("weighted_midpoint"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** Trade bars for a root over a range, resampled. */
@@ -86,10 +82,10 @@ final class FinanceApi(
     val ord = struct(col("ts"), col("seq"))
     base.groupBy(window(col("ts"), interval)("start").as("datetime"), col("root"))
       .agg(
-        min_by(col("open"), ord).as("open"),
+        firstBy(col("open"), ord).as("open"),
         max(col("high")).as("high"),
         min(col("low")).as("low"),
-        max_by(col("close"), ord).as("close"),
+        lastBy(col("close"), ord).as("close"),
         dsum(col("volume")).as("volume"))
   }
 
@@ -104,18 +100,14 @@ final class FinanceApi(
     // quotes that BOOTSTRAP ohlc start at quoteStartMin (09:45), the
     // v2.py:1432-1437 gating, so the bootstrapped open has data behind it
     val q = quoteBars(root, start, end, "1 day", cfg.quoteStartMin)
-      .withColumn("datetime",
-        col("datetime") + expr(s"interval ${cfg.eodHour} hours"))
+      .withColumn("datetime", cfg.eodStamp(col("datetime")))
     val o = retrieveOhlc(root, start, end, "1 day")
-      .withColumn("datetime",
-        col("datetime") + expr(s"interval ${cfg.eodHour} hours"))
+      .withColumn("datetime", cfg.eodStamp(col("datetime")))
       .select(col("datetime"), col("root"),
         col("open").as("t_open"), col("high").as("t_high"),
         col("low").as("t_low"), col("close").as("t_close"), col("volume"))
     val oiDaily = retrieveOpenInterest(root, start, end)
-      .select(col("root"),
-        (col("day").cast("timestamp") + expr(s"interval ${cfg.eodHour} hours"))
-          .as("datetime"),
+      .select(col("root"), cfg.eodStamp(col("day").cast("timestamp")).as("datetime"),
         col("open_interest"))
     q.join(o, Seq("datetime", "root"), "left")
       .join(oiDaily, Seq("datetime", "root"), "left")
@@ -128,7 +120,7 @@ final class FinanceApi(
         coalesce(col("volume"), lit(0.0)).as("volume"),
         col("close_bid"), col("close_ask"),
         col("bid_size"), col("ask_size"),
-        ((col("close_bid") + col("close_ask")) / 2.0).as("midpoint"),
+        midpoint(col("close_bid"), col("close_ask")).as("midpoint"),
         col("weighted_midpoint"),
         col("open_interest"))
   }

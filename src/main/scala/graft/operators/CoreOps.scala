@@ -67,6 +67,31 @@ object CoreOps {
   // map open->first, high->max, low->min, close->last, volume->sum).
   // -------------------------------------------------------------------
 
+  /** The engine's one first/last rule: the `value` of the row that is
+    * first (least) or last (greatest) under the total order `ord`,
+    * usually `struct(ts, seq)`. Rows with a null `ord` are skipped; a
+    * struct `ord` is never null, and in it a null field orders below
+    * any value, so such rows still compete. A full `ord` tie takes the
+    * row seen later, so `ord` must be unique per group for a
+    * partitioning-independent result. Null and NaN values pass
+    * through. Every first/last/OHLC reduction in the engine goes
+    * through this pair.
+    */
+  def firstBy(value: Column, ord: Column): Column = min_by(value, ord)
+
+  /** Last-row counterpart of [[firstBy]]. */
+  def lastBy(value: Column, ord: Column): Column = max_by(value, ord)
+
+  /** open/high/low/close of `price` under `ord`, named
+    * `<prefix>open` … `<prefix>close`: the OHLC half of the A1 agg
+    * map, for callers that aggregate one price column.
+    */
+  def ohlcBy(price: Column, ord: Column, prefix: String = ""): Seq[Column] = Seq(
+    firstBy(price, ord).as(s"${prefix}open"),
+    max(price).as(s"${prefix}high"),
+    min(price).as(s"${prefix}low"),
+    lastBy(price, ord).as(s"${prefix}close"))
+
   /** Per-column aggregation method for [[resampleOhlc]]. */
   sealed trait AggMethod
   case object AggFirst extends AggMethod
@@ -81,8 +106,8 @@ object CoreOps {
     * `first`/`last` are made deterministic by ordering on
     * `(tsCol, tieBreak)` — pandas "first in bucket" is positional; on a
     * distributed engine position must be an explicit total order
-    * (SURVEY §7.4 item 4). Implemented with `min_by`/`max_by` over a
-    * struct key so the whole resample is ONE hash aggregation with
+    * (SURVEY §7.4 item 4). Implemented with [[firstBy]]/[[lastBy]] over
+    * a struct key so the whole resample is ONE aggregation with
     * map-side partial combine — no window function, no second shuffle.
     *
     * Scale: shuffle is on (keys, bucket); at 100 TB with date-
@@ -100,8 +125,8 @@ object CoreOps {
     val ord = struct(col(tsCol), col(tieBreak))
     val aggCols = aggs.map { case (out, src, m) =>
       val c = m match {
-        case AggFirst => min_by(col(src), ord)
-        case AggLast  => max_by(col(src), ord)
+        case AggFirst => firstBy(col(src), ord)
+        case AggLast  => lastBy(col(src), ord)
         case AggMax   => max(col(src))
         case AggMin   => min(col(src))
         case AggSum   => dsum(col(src))
@@ -182,7 +207,7 @@ object CoreOps {
   /** Keep, for every key combination, the row that is last in the total
     * order defined by `orderCols`.
     *
-    * Implemented as `max_by(struct(*), struct(orderCols))` — a single
+    * Implemented as [[lastBy]]`(struct(*), struct(orderCols))` — a single
     * hash aggregation with partial combine, which scales strictly
     * better than the row_number window (no per-partition sort, half
     * the shuffled data after map-side combine).
@@ -191,7 +216,7 @@ object CoreOps {
     val payload = struct(df.columns.toIndexedSeq.map(col): _*)
     val ord = struct(orderCols.map(col): _*)
     df.groupBy(keys.map(col): _*)
-      .agg(max_by(payload, ord).as("__row"))
+      .agg(lastBy(payload, ord).as("__row"))
       .select(col("__row.*"))
   }
 

@@ -22,6 +22,17 @@ object TickerSplice {
 
   final case class Alias(currentKey: Any, oldKey: Any, changeDate: String)
 
+  /** The scan of one `root` of `df`: the root's row filter, or, when
+    * `aliases` names a pre-rename key for it, its [[splicedHistory]]
+    * with `arrivalCols` ordering rows at the boundary.
+    */
+  def spliced(aliases: Seq[Alias], arrivalCols: Seq[String])(
+      df: DataFrame, root: Any, tsCol: String): DataFrame =
+    aliases.find(_.currentKey == root) match {
+      case Some(a) => splicedHistory(df, "root", tsCol, a, arrivalCols)
+      case None => df.filter(col("root") === lit(root))
+    }
+
   def splicedHistory(
       data: DataFrame,
       keyCol: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.{BulkApi, SyntheticContractMarket}
+import graft.operators.CoreOps.{lastBy, midpoint}
 
 /** The reference's bulk/chain/snapshot retrieval family through
   * [[graft.api.BulkApi]] — full contract identity (root, expiration,
@@ -383,9 +384,9 @@ object BulkQueries {
         $"value".as("bid"),
         ($"value" + 0.10 + ($"event_id" % 7).cast("double") * 0.01).as("ask"))
       .withColumn("day", to_date($"ts"))
-      .withColumn("mid", ($"bid" + $"ask") / 2.0)
+      .withColumn("mid", midpoint($"bid", $"ask"))
     val close = q.groupBy($"root", $"expiration", $"strike", $"right", $"day")
-      .agg(max_by($"mid", struct($"ts", $"seq")).as("close_mid"))
+      .agg(lastBy($"mid", struct($"ts", $"seq")).as("close_mid"))
     val calls = close.filter($"right" === "C")
       .select($"root", $"expiration", $"strike", $"day",
         $"close_mid".as("c_mid"))
@@ -454,7 +455,7 @@ object BulkQueries {
       .withColumn("mp",
         ($"bid" * $"ask_size" + $"ask" * $"bid_size") /
           ($"bid_size" + $"ask_size").cast("double"))
-      .withColumn("premium", $"mp" - ($"bid" + $"ask") / 2.0)
+      .withColumn("premium", $"mp" - midpoint($"bid", $"ask"))
     // sizes summed in decimal(38,0) (not BIGINT) so sb + sa and the
     // 1e9 multiply share DuckDB's HUGEINT exactness instead of
     // silently wrapping in non-ANSI Spark at extreme tick volumes
@@ -512,9 +513,9 @@ object BulkQueries {
     import org.apache.spark.sql.expressions.Window
     val q = SyntheticContractMarket.quotes(s, dir)
       .withColumn("day", to_date($"ts"))
-      .withColumn("mid", ($"bid" + $"ask") / 2.0)
+      .withColumn("mid", midpoint($"bid", $"ask"))
     val closes = q.groupBy($"root", $"day")
-      .agg(max_by($"mid", struct($"ts", $"seq")).as("close"))
+      .agg(lastBy($"mid", struct($"ts", $"seq")).as("close"))
     val wLag = Window.partitionBy($"root").orderBy($"day")
     val wVol = wLag.rowsBetween(-4, 0)
     closes

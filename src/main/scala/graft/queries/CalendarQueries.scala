@@ -213,15 +213,11 @@ object CalendarQueries {
     val ev = Tables.load(s, dir, "events")
       .filter(graft.operators.CoreOps.businessHours($"ts"))
     val ord = struct($"ts", $"event_id")
+    val aggs = ohlcBy($"value", ord) :+ count(lit(1)).as("n")
     ev.groupBy(
         window($"ts", "1 hour", "1 hour", "30 minutes")("start").as("bar_start"),
         $"event_type")
-      .agg(
-        min_by($"value", ord).as("open"),
-        max($"value").as("high"),
-        min($"value").as("low"),
-        max_by($"value", ord).as("close"),
-        count(lit(1)).as("n"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"bar_start", $"event_type")
   }
 

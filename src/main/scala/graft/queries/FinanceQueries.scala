@@ -119,7 +119,7 @@ object FinanceQueries {
     * synthetic per-contract quotes → midpoint / weighted midpoint →
     * business-hours filter → 30-minute agg-map resample (open→first,
     * high→max, low→min, close→last, volume→sum, closebid/closeask→
-    * last). ONE hash aggregation (min_by/max_by), no window shuffle.
+    * last). ONE aggregation (firstBy/lastBy), no window shuffle.
     */
   def quotePipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -135,17 +135,14 @@ object FinanceQueries {
       .withColumn("wmid", weightedMidpoint($"bid", $"ask", $"bid_size", $"ask_size"))
       .filter(businessHours($"ts"))
     val ord = struct($"ts", $"event_id")
+    val aggs = ohlcBy($"mid", ord) ++ Seq(
+      sum($"bid_size" + $"ask_size").as("volume"),
+      lastBy($"bid", ord).as("close_bid"),
+      lastBy($"ask", ord).as("close_ask"),
+      lastBy($"wmid", ord).as("weighted_midpoint"))
     quotes
       .groupBy(window($"ts", "30 minutes")("start").as("bucket"), $"contract")
-      .agg(
-        min_by($"mid", ord).as("open"),
-        max($"mid").as("high"),
-        min($"mid").as("low"),
-        max_by($"mid", ord).as("close"),
-        sum($"bid_size" + $"ask_size").as("volume"),
-        max_by($"bid", ord).as("close_bid"),
-        max_by($"ask", ord).as("close_ask"),
-        max_by($"wmid", ord).as("weighted_midpoint"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"bucket", $"contract")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.MultimodalOps
+import graft.operators.CoreOps.{firstBy, lastBy}
 import graft.sources.EnvCatalog
 
 /** End-to-end pipeline surfaces: the multimodal batch-extract stage
@@ -393,10 +394,10 @@ object PipelineQueries {
       .groupBy($"day", $"root")
       .agg(
         count(lit(1)).as("n_bars"),
-        min_by($"open", $"ts").as("day_open"),
+        firstBy($"open", $"ts").as("day_open"),
         max($"high").as("day_high"),
         min($"low").as("day_low"),
-        max_by($"close", $"ts").as("day_close"),
+        lastBy($"close", $"ts").as("day_close"),
         sum($"volume").as("total_volume"))
       .orderBy($"day")
   }

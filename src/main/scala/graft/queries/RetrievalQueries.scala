@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.TextOps.words
 import graft.functions.VectorOps._
+import graft.operators.CoreOps.firstBy
 import graft.plans.BoundedTopK.boundedTopK
 
 /** Hybrid (sparse + dense) retrieval — the RAG-serving shape every
@@ -97,7 +98,7 @@ object RetrievalQueries {
       .select($"qid", explode(words($"text")).as("term"))
       .groupBy($"qid", $"term").agg(count(lit(1)).as("cnt"))
       .groupBy($"qid")
-      .agg(min_by($"term", struct((-$"cnt").as("negc"), $"term")).as("term"))
+      .agg(firstBy($"term", struct((-$"cnt").as("negc"), $"term")).as("term"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val qterms = qtRows.toSeq.toDF("qid", "term")
     val termList = qtRows.map(_._2).distinct.toSeq

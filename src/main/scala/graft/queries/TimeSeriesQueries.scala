@@ -25,14 +25,10 @@ object TimeSeriesQueries {
     import s.implicits._
     val ev = Tables.load(s, dir, "events")
     val ord = struct($"ts", $"event_id")
+    val aggs = ohlcBy($"value", ord) :+ dsum($"value").as("volume") :+
+      count(lit(1)).as("n_events")
     ev.groupBy(window($"ts", "1 hour")("start").as("bucket"), $"event_type")
-      .agg(
-        min_by($"value", ord).as("open"),
-        max($"value").as("high"),
-        min($"value").as("low"),
-        max_by($"value", ord).as("close"),
-        dsum($"value").as("volume"),
-        count(lit(1)).as("n_events"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"bucket", $"event_type")
   }
 
@@ -81,14 +77,10 @@ object TimeSeriesQueries {
     val grain = Intervals.toSparkInterval("10s")
     val ev = Tables.load(s, dir, "events")
     val ord = struct($"ts", $"event_id")
+    val aggs = ohlcBy($"value", ord) :+ dsum($"value").as("volume") :+
+      count(lit(1)).as("n_events")
     ev.groupBy(window($"ts", grain)("start").as("bucket"), $"event_type")
-      .agg(
-        min_by($"value", ord).as("open"),
-        max($"value").as("high"),
-        min($"value").as("low"),
-        max_by($"value", ord).as("close"),
-        dsum($"value").as("volume"),
-        count(lit(1)).as("n_events"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"bucket", $"event_type")
   }
 
@@ -138,14 +130,10 @@ object TimeSeriesQueries {
       .withColumn("mts",
         timestamp_millis(lit(baseMs) + pmod($"event_id", lit(60000L))))
     val ord = struct($"mts", $"event_id")
+    val aggs = ohlcBy($"value", ord) :+ dsum($"value").as("volume") :+
+      count(lit(1)).as("n_events")
     ev.groupBy(window($"mts", grain)("start").as("bucket"), $"event_type")
-      .agg(
-        min_by($"value", ord).as("open"),
-        max($"value").as("high"),
-        min($"value").as("low"),
-        max_by($"value", ord).as("close"),
-        dsum($"value").as("volume"),
-        count(lit(1)).as("n_events"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"bucket", $"event_type")
   }
 
@@ -543,7 +531,7 @@ object TimeSeriesQueries {
         count(lit(1)).cast("double")).as("day_mean"))
     ev.join(broadcast(means), "day")
       .groupBy($"day")
-      .agg(min_by(struct($"event_id", $"value", $"day_mean"),
+      .agg(firstBy(struct($"event_id", $"value", $"day_mean"),
         struct(abs($"value" - $"day_mean"), $"event_id")).as("r"))
       .select($"day", $"r.event_id".as("event_id"), $"r.value".as("value"),
         $"r.day_mean".as("day_mean"))

@@ -3,42 +3,37 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CandleAggregator
 import graft.operators.CoreOps._
 
 class AggregatorSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("candle aggregator equals the min_by/max_by resample composition") {
+  test("CoreOps OHLC bundle equals the min_by/max_by resample composition") {
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val candleUdaf = udaf(CandleAggregator.candle)
-    val viaAgg = ev
-      .select($"event_type", window($"ts", "1 hour")("start").as("bucket"),
-        struct(unix_micros($"ts").as("ts"), $"event_id".as("seq"),
-          $"value".as("price")).as("tick"))
-      .groupBy($"bucket", $"event_type")
-      .agg(candleUdaf($"tick.ts", $"tick.seq", $"tick.price").as("c"))
-      .select($"bucket", $"event_type", $"c.open", $"c.high", $"c.low",
-        $"c.close", $"c.n")
     val ord = struct($"ts", $"event_id")
+    val aggs = ohlcBy($"value", ord) :+ count(lit(1)).as("n")
+    val viaBundle = ev
+      .groupBy(window($"ts", "1 hour")("start").as("bucket"), $"event_type")
+      .agg(aggs.head, aggs.tail: _*)
+    // the reference: the first/last rule written out by hand
     val viaComposition = ev
       .groupBy(window($"ts", "1 hour")("start").as("bucket"), $"event_type")
       .agg(min_by($"value", ord).as("open"), max($"value").as("high"),
         min($"value").as("low"), max_by($"value", ord).as("close"),
         count(lit(1)).as("n"))
-    assert(viaAgg.count() == viaComposition.count())
-    assert(viaAgg.except(viaComposition).count() == 0)
-    assert(viaComposition.except(viaAgg).count() == 0)
+    assert(viaBundle.count() == viaComposition.count())
+    assert(viaBundle.except(viaComposition).count() == 0)
+    assert(viaComposition.except(viaBundle).count() == 0)
   }
 
-  test("candle aggregator is partitioning-invariant") {
+  test("CoreOps OHLC bundle is partitioning-invariant") {
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val candleUdaf = udaf(CandleAggregator.candle)
+    val aggs = ohlcBy($"value", struct($"ts", $"event_id")) :+ count(lit(1)).as("n")
     def run(parts: Int) = ev.repartition(parts)
       .groupBy($"event_type")
-      .agg(candleUdaf(unix_micros($"ts"), $"event_id", $"value").as("c"))
-      .select($"event_type", $"c.*").collect().toSet
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().toSet
     assert(run(1) == run(13))
   }
 

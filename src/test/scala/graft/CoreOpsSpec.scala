@@ -426,6 +426,26 @@ class CoreOpsSpec extends AnyFunSuite {
     assert(out(1).getAs[Double]("v") == 5.0)
   }
 
+  test("no min_by/max_by call in src/main outside CoreOps") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    // comment lines and `|` SQL-literal lines may name the functions
+    val prose = Seq("//", "*", "/*", "|")
+    val sites = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "CoreOps.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !prose.exists(line.trim.startsWith) &&
+              (line.contains("min_by(") || line.contains("max_by(")) => s"$p:${i + 1}"
+        }
+      }.toList.sorted
+    finally walk.close()
+    assert(sites.isEmpty, s"reduce first/last through CoreOps.firstBy/lastBy: $sites")
+  }
+
   test("midpoint and weighted midpoint match reference arithmetic") {
     val df = Seq((10.0, 12.0, 2L, 6L), (10.0, 12.0, 0L, 0L))
       .toDF("bid", "ask", "bid_size", "ask_size")

@@ -2,8 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +13,8 @@ import graft.operators.CoreOps._
 
 /** Property tests for the resample/dedup invariants (SURVEY §5 test
   * plan): OHLC ordering, bucket containment, volume conservation
-  * under re-bucketing, dedup idempotence.
+  * under re-bucketing, dedup idempotence, and the first/last contract
+  * of `firstBy`/`lastBy`.
   */
 class ResamplePropertiesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -130,5 +133,69 @@ class ResamplePropertiesSpec extends AnyFunSuite {
     assert(kGaps.forall(_.getDouble(2) == 5.0))
     for (chunk <- Seq(1, 16, 4096, 11011, 11012))
       assert(run(chunk) == reference, s"gridChunk=$chunk diverged")
+  }
+
+  /** (group, ts micros, seq, value) with SQL nulls as None: null ts and
+    * seq, NaN and null values, and seq at both ends of the long range.
+    */
+  private val keyedRowGen = for {
+    g <- Gen.choose(0, 3)
+    ts <- Gen.frequency(1 -> Gen.const(None), 5 -> Gen.choose(0L, 4L).map(Some(_)))
+    seq <- Gen.frequency(1 -> Gen.const(None),
+      2 -> Gen.oneOf(Long.MinValue, Long.MaxValue).map(Some(_)),
+      5 -> Gen.choose(-2L, 2L).map(Some(_)))
+    value <- Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN)),
+      5 -> Gen.choose(-100.0, 100.0).map(Some(_)))
+  } yield (g, ts, seq, value)
+
+  // (ts, seq) unique per group, so the reference's row_number is total
+  private val keyedRowsGen = Gen.nonEmptyListOf(keyedRowGen)
+    .map(_.distinctBy { case (g, ts, seq, _) => (g, ts, seq) })
+
+  /** group -> value bits (None = null), NaN-safe to compare. */
+  private def byGroup(rows: Array[Row]): Map[Int, Option[Long]] =
+    rows.map(r => r.getInt(0) -> Option(r.get(1))
+      .map(v => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]))).toMap
+
+  test("firstBy/lastBy over struct(ts, seq) equal the row_number reference") {
+    val prop = Prop.forAllNoShrink(keyedRowsGen) { rows =>
+      val df = rows.toDF("g", "t", "seq", "value")
+        .select($"g", timestamp_micros($"t").as("ts"), $"seq", $"value")
+        .repartition(3)
+      val ord = struct($"ts", $"seq")
+      val got = df.groupBy($"g")
+        .agg(firstBy($"value", ord).as("first"), lastBy($"value", ord).as("last"))
+        .collect()
+      def reference(order: Column*) = byGroup(df
+        .withColumn("rn", row_number().over(Window.partitionBy($"g").orderBy(order: _*)))
+        .filter($"rn" === 1).select($"g", $"value").collect())
+      val first = reference($"ts".asc_nulls_first, $"seq".asc_nulls_first)
+      val last = reference($"ts".desc_nulls_last, $"seq".desc_nulls_last)
+      Prop(byGroup(got.map(r => Row(r.get(0), r.get(1)))) == first &&
+        byGroup(got.map(r => Row(r.get(0), r.get(2)))) == last) :| s"rows=$rows"
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(20).withInitialSeed(Seed(20261018L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  // min_by/max_by keep their buffer only while it is strictly better
+  // than the incoming row, so a full tie takes the row seen later
+  test("firstBy/lastBy: on a full (ts, seq) tie the last row seen wins") {
+    val t0 = Some(Timestamp.valueOf("2024-03-04 10:00:00"))
+    val t1 = Some(Timestamp.valueOf("2024-03-04 11:00:00"))
+    val df = Seq(
+      ("A", t0, Some(1L), 1.0), ("A", t0, Some(1L), 2.0), ("A", t0, Some(1L), 3.0),
+      ("B", t0, Some(1L), 4.0), ("B", t0, Some(1L), 5.0),
+      ("B", t1, Some(2L), 6.0), ("B", t1, Some(2L), 7.0),
+      ("C", None, None, 8.0), ("C", None, None, 9.0)
+    ).toDF("key", "ts", "seq", "value").coalesce(1)
+    assert(df.rdd.getNumPartitions == 1)
+    val ord = struct($"ts", $"seq")
+    val out = df.groupBy($"key")
+      .agg(firstBy($"value", ord).as("first"), lastBy($"value", ord).as("last"))
+      .orderBy($"key").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(out == Seq(("A", 3.0, 3.0), ("B", 5.0, 7.0), ("C", 9.0, 9.0)))
   }
 }
