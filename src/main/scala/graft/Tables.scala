@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -14,8 +22,45 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir, None)
+    else readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    * Given no schema, Spark infers one with a Spark job that reads one
+    * footer, even for a single file: that job was most of every
+    * table load's cost. Here the driver reads the same footer itself
+    * (row groups skipped) and converts it as that job does: the Spark
+    * schema the writer stored in the footer when there is one, the
+    * parquet schema converted under the session's SQL conf otherwise.
+    * A directory is read through its first data file in path order,
+    * skipping `_` and `.` names, the file Spark's non-merging
+    * inference reads.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The Spark schema of the parquet file or directory at `path`. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark's listing rule: `_` and `.` names are not data, except
+    // `_k=v` partition directories
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def leaves(f: FileStatus): Seq[Path] =
+      if (!f.isDirectory) Seq(f.getPath)
+      else fs.listStatus(f.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+        .flatMap(leaves)
+    val file = leaves(fs.getFileStatus(root)).minByOption(_.toString).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Schema-ADAPTIVE events loader. The testdata generator has shipped
     * `events.ts` as both parquet TIMESTAMP(NANOS) (which Spark's
@@ -23,60 +68,45 @@ object Tables {
     * and truncate to micros, the same truncation DuckDB applies casting
     * TIMESTAMP_NS to TIMESTAMP) and plain `timestamp[us]` (reads as
     * TIMESTAMP_NTZ — cast to the session-TZ type; sessions run UTC so
-    * values are identical). Branching on the actual column type keeps
-    * both generator vintages loading instead of hard-coding either.
-    */
-  private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case LongType => // nanos vintage
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported parquet type $other (expected nanos-as-long or timestamp)")
-    }
-  }
-
-  /** Events scan with a PUSHED-DOWN time-range predicate.
+    * values are identical). The footer schema names the vintage, so
+    * both load instead of hard-coding either.
     *
-    * Filters are applied to the column AS SCANNED — before any type
-    * conversion — so `PushedFilters: [GreaterThanOrEqual(ts,...)]`
-    * lands in the parquet scan. For the nanos vintage that means a
-    * raw-nanos BIGINT literal; for the native-timestamp vintage a
-    * timestamp literal pushes down directly. At 100 TB
-    * (date-partitioned events) this is the difference between pruning
-    * at the source and scanning everything.
+    * `range` (start inclusive, end exclusive) filters the column AS
+    * SCANNED — before the conversion — so `PushedFilters:
+    * [GreaterThanOrEqual(ts,...)]` lands in the parquet scan: a
+    * raw-nanos BIGINT literal for the nanos vintage, a timestamp
+    * literal otherwise. At 100 TB (date-partitioned events) this is the
+    * difference between pruning at the source and scanning everything.
     */
-  def eventsInRange(spark: SparkSession, dir: String,
-      startInclusive: String, endExclusive: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
+  private def events(spark: SparkSession, dir: String,
+      range: Option[(String, String)]): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def norm(s: String) =
       s.replace("T", " ") + (if (s.length == 10) " 00:00:00" else "")
-    def nanos(s: String) =
-      java.sql.Timestamp.valueOf(norm(s)).getTime * 1000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.filter(col("ts") >= nanos(startInclusive) && col("ts") < nanos(endExclusive))
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    val raw = readParquet(spark, s"$dir/events.parquet")
+    // (a range bound as a literal of the scanned type, the ts conversion)
+    val (bound, toLtz): (String => Column, Option[Column]) = raw.schema("ts").dataType match {
+      case LongType => // nanos vintage
+        (s => lit(java.sql.Timestamp.valueOf(norm(s)).getTime * 1000000L),
+          Some(timestamp_micros(expr("ts div 1000"))))
       case TimestampNTZType =>
-        raw.filter(col("ts") >= lit(norm(startInclusive)).cast(TimestampNTZType) &&
-            col("ts") < lit(norm(endExclusive)).cast(TimestampNTZType))
-          .withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType =>
-        raw.filter(col("ts") >= lit(norm(startInclusive)).cast(TimestampType) &&
-          col("ts") < lit(norm(endExclusive)).cast(TimestampType))
+        (s => lit(norm(s)).cast(TimestampNTZType), Some(col("ts").cast(TimestampType)))
+      case TimestampType => (s => lit(norm(s)).cast(TimestampType), None)
       case other => throw new IllegalStateException(
         s"events.ts: unsupported parquet type $other (expected nanos-as-long or timestamp)")
     }
+    val ranged = range.fold(raw) { case (lo, hi) =>
+      raw.filter(col("ts") >= bound(lo) && col("ts") < bound(hi))
+    }
+    toLtz.fold(ranged)(ranged.withColumn("ts", _))
   }
+
+  /** Events with `startInclusive <= ts < endExclusive`, the predicate
+    * pushed into the parquet scan (see [[events]]).
+    */
+  def eventsInRange(spark: SparkSession, dir: String,
+      startInclusive: String, endExclusive: String): DataFrame =
+    events(spark, dir, Some((startInclusive, endExclusive)))
 
   /** Fail-fast guard against testdata drift: load every table and name
     * any column whose LOGICAL type is not what the operators were built
@@ -86,7 +116,6 @@ object Tables {
     * runs this before dumping queries.
     */
   def assertSchemas(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.types._
     // Acceptable LOGICAL types per load-bearing column, post-loader.
     // Timestamp-ish columns accept NTZ or LTZ (both compare identically
     // under the UTC session); events.ts must be LTZ — that is the

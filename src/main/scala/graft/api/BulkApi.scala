@@ -54,7 +54,7 @@ final class BulkApi(
   private val cid = Seq("expiration", "right", "strike")
   private val cidCols = cid.map(col)
 
-  private val spliced = TickerSplice.spliced(aliases, Seq("seq") ++ cid) _
+  private val spliced = TickerSplice.spliced(aliases, Seq("seq"), cid) _
 
   private def expFilter(df: DataFrame, exp: Option[String]): DataFrame =
     // exp=None is the reference's `exp=0` — all expirations of the root

@@ -207,10 +207,13 @@ object CoreOps {
   /** Keep, for every key combination, the row that is last in the total
     * order defined by `orderCols`.
     *
-    * Implemented as [[lastBy]]`(struct(*), struct(orderCols))` — a single
-    * hash aggregation with partial combine, which scales strictly
-    * better than the row_number window (no per-partition sort, half
-    * the shuffled data after map-side combine).
+    * Implemented as [[lastBy]]`(struct(*), struct(orderCols))`: one
+    * two-phase aggregation with partial combine, which shuffles at most
+    * one row per key and map partition where the row_number window
+    * shuffles every row. `max_by` keeps a struct in its buffer, which an
+    * UnsafeRow hash map cannot update in place, so Spark plans it as a
+    * SortAggregate with a sort on each side of the exchange
+    * (`plans/r27/q10_*`), not a hash aggregation.
     */
   def dedupKeepLast(df: DataFrame, keys: Seq[String], orderCols: Seq[String]): DataFrame = {
     val payload = struct(df.columns.toIndexedSeq.map(col): _*)

@@ -24,21 +24,30 @@ object TickerSplice {
 
   /** The scan of one `root` of `df`: the root's row filter, or, when
     * `aliases` names a pre-rename key for it, its [[splicedHistory]]
-    * with `arrivalCols` ordering rows at the boundary.
+    * with `idCols` telling the root's series apart and `arrivalCols`
+    * ordering rows at the boundary.
     */
-  def spliced(aliases: Seq[Alias], arrivalCols: Seq[String])(
+  def spliced(aliases: Seq[Alias], arrivalCols: Seq[String],
+      idCols: Seq[String] = Nil)(
       df: DataFrame, root: Any, tsCol: String): DataFrame =
     aliases.find(_.currentKey == root) match {
-      case Some(a) => splicedHistory(df, "root", tsCol, a, arrivalCols)
+      case Some(a) => splicedHistory(df, "root", tsCol, a, arrivalCols, idCols)
       case None => df.filter(col("root") === lit(root))
     }
 
+  /** The history of `alias.currentKey`: the old key's rows before the
+    * change date and the new key's rows from it on, under the new key.
+    * One row is kept per (`tsCol`, `idCols`): `idCols` name the series
+    * a key holds (a root's option contracts), so two series quoted at
+    * the same instant both survive.
+    */
   def splicedHistory(
       data: DataFrame,
       keyCol: String,
       tsCol: String,
       alias: Alias,
-      arrivalCols: Seq[String]): DataFrame = {
+      arrivalCols: Seq[String],
+      idCols: Seq[String] = Nil): DataFrame = {
     val change = to_timestamp(lit(alias.changeDate))
     val oldSeg = data
       .filter(col(keyCol) === lit(alias.oldKey) && col(tsCol) < change)
@@ -48,7 +57,7 @@ object TickerSplice {
       .withColumn("__segment", lit(1))
     val unioned = oldSeg.unionByName(newSeg)
       .withColumn(keyCol, lit(alias.currentKey))
-    CoreOps.dedupKeepLast(unioned, Seq(tsCol), "__segment" +: arrivalCols)
+    CoreOps.dedupKeepLast(unioned, tsCol +: idCols, "__segment" +: arrivalCols)
       .drop("__segment")
   }
 }

@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, truncatedString}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -245,13 +246,19 @@ trait BoxedResult extends Kernel {
   }
 }
 
-/** Equality over the case-class fields with arrays compared by
-  * content. An `Array` field compares by reference, so without this two
-  * kernels built from equal arrays would differ to plan
-  * canonicalization and dedup.
+/** Equality and plan text over the case-class fields with arrays taken
+  * by content. An `Array` field compares by reference and prints as its
+  * identity hash, so without this two kernels built from equal arrays
+  * would differ to plan canonicalization and dedup, and one query's
+  * `explain` text would differ from run to run.
   */
-trait ContentEquality extends Product {
+trait ContentEquality extends Expression {
   private def fields: Array[AnyRef] = productIterator.map(_.asInstanceOf[AnyRef]).toArray
+
+  override protected def stringArgs: Iterator[Any] = super.stringArgs.map {
+    case a: Array[_] => truncatedString(a.toSeq, "[", ", ", "]", SQLConf.get.maxToStringFields)
+    case other => other
+  }
 
   override def equals(other: Any): Boolean = other match {
     case o: ContentEquality =>

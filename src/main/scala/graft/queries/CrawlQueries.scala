@@ -677,7 +677,7 @@ object CrawlQueries {
     table.coalesce(1).write.mode("overwrite").parquet(path)
 
     val s2 = s.newSession()
-    val merges = s2.read.parquet(path)
+    val merges = Tables.readParquet(s2, path)
       .orderBy(col("rk"))
       .select(col("lhs"), col("rhs"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq

@@ -57,6 +57,21 @@ class BulkApiSpec extends AnyFunSuite {
     assert(spliced.select($"root").distinct().collect().map(_.getLong(0)).toSeq == Seq(9L))
   }
 
+  test("alias splice keeps every contract quoted at the same instant") {
+    // root 1 holds two contracts quoted at one instant; the splice must
+    // dedup per contract, not per timestamp across the whole root
+    val q = Seq(
+      (1L, "2026-01-16", "C", 90.0, "2024-01-02 10:00:00", 1L),
+      (1L, "2026-01-16", "P", 100.0, "2024-01-02 10:00:00", 2L))
+      .toDF("root", "expiration", "right", "strike", "ts", "seq")
+      .select($"root", to_date($"expiration").as("expiration"), $"right", $"strike",
+        to_timestamp($"ts").as("ts"), $"seq",
+        lit(1.0).as("bid"), lit(1.1).as("ask"), lit(1L).as("bid_size"), lit(1L).as("ask_size"))
+    assert(new BulkApi(q, q, q).snapshotQuote(1L).count() == 2)
+    val spliced = new BulkApi(q, q, q, Seq(TickerSplice.Alias(1L, 9L, "2024-01-01")))
+    assert(spliced.snapshotQuote(1L).count() == 2)
+  }
+
   test("chain bulk: right filter and at-time cut apply") {
     val chain = api().retrieveChainBulk(2L, None, "2024-01-02", "2024-01-28",
       "14:30", right = Some("C"))

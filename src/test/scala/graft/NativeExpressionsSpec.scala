@@ -152,6 +152,8 @@ class NativeExpressionsSpec extends AnyFunSuite {
       val name = x.getClass.getSimpleName
       assert(x == y && x.hashCode == y.hashCode && x.semanticEquals(y), name)
       assert(x != z && !x.semanticEquals(z), name)
+      // plan text shows the arrays' content, not their identity hashes
+      assert(x.toString == y.toString && x.toString != z.toString, x.toString)
     }
   }
 

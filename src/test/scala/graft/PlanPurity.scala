@@ -2,11 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared harness for the "plan construction is pure" specs
-  * (BandCapSpec/JaccardCapSpec): builds a DataFrame under a
+  * (BandCapSpec/JaccardCapSpec, and TablesSpec's loads): builds a DataFrame under a
   * job-counting listener and asserts ZERO Spark jobs ran — the
   * runtime-existence-check pattern (`limit(1).count()` at plan time)
   * must never reappear in any q24-family constructor. One copy of the
@@ -17,11 +18,14 @@ object PlanPurity {
 
   /** Runs `build`, forces analysis + optimization of its result, and
     * asserts no Spark job started during either. The listener bus is
-    * async and FIFO, so a tagged marker job is run afterwards and the
+    * async and FIFO, so it is drained before the listener is added
+    * (a job that started earlier, such as the caller's last action, can
+    * still be queued) and a tagged marker job is run afterwards and the
     * wait is for ITS event — any construction-time job event would
     * have to arrive before it. Callers must resolve their SOURCE
-    * frames before calling (spark.read.parquet pays its own
-    * footer/listing jobs, which are the scan's, not the query's).
+    * frames before calling (a bare spark.read.parquet pays its own
+    * schema-inference job, which is the scan's, not the query's;
+    * TablesSpec holds `Tables` loads to zero jobs).
     *
     * Returns the number of jobs observed so the caller's assert
     * carries a query-specific message.
@@ -37,6 +41,7 @@ object PlanPurity {
           markerSeen.incrementAndGet()
         else planJobs.incrementAndGet()
     }
+    ListenerBusDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val df = build
