@@ -122,7 +122,7 @@ object Bench {
     // name fails before any session starts.
     val queries = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionDefaults.cpus()
     val master = SessionDefaults.master(cpus)
     val spark = SessionDefaults.session(master, cpus)
     // Deployment-independent CPU attribution (and shuffle-transport

@@ -87,7 +87,7 @@ object FaultMatrix {
     val scenario = scenarios(args(0))
     val queries = SparkEntry.select(
       if (args.length > 2) args.drop(2).toSeq else scenario.queries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionDefaults.cpus()
     val master = SessionDefaults.master(cpus)
     require(master.startsWith("local-cluster"),
       s"FaultMatrix ${args(0)} needs forked executors: " +

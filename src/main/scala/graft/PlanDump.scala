@@ -18,7 +18,7 @@ object PlanDump {
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val queries = SparkEntry.select(args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionDefaults.cpus()
     val spark = SessionDefaults.session(SessionDefaults.master(cpus), cpus)
     java.nio.file.Files.createDirectories(outDir)
     queries.foreach { case (name, fn) =>

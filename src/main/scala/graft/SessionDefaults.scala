@@ -14,18 +14,18 @@ import org.apache.spark.sql.SparkSession
   * against the `derby.system.home` JVM property, so one property
   * covers both artifacts.
   *
-  * Plan defaults are DEPLOY-AWARE via the `GRAFT_DEPLOY` env profile
-  * ([[profileConfigs]]): the split-size and coalescing knobs that are
-  * right for the 32-core bench box would be pathological verbatim on
-  * a real cluster (8 MB splits over 100 TB ≈ 12.5M scan tasks), so
-  * they are scoped to the `local` profile instead of baked in
-  * unconditionally.
+  * Plan defaults follow the session's MASTER, the one deploy decision
+  * ([[inProcess]]): the split-size and coalescing knobs that are right
+  * for an in-process box would be pathological verbatim on a real
+  * fleet (8 MB splits over 100 TB ≈ 12.5M scan tasks), so
+  * [[masterConfigs]] gives them to in-process masters only; [[apply]]
+  * sets just the confs that are the same on every master.
   */
 object SessionDefaults {
 
   /** Size of Spark's compiled-class cache
     * (`spark.sql.codegen.cache.maxEntries`, default 100), set in every
-    * profile. Spark keeps the Janino-compiled whole-stage and
+    * session. Spark keeps the Janino-compiled whole-stage and
     * expression classes in one LRU per JVM — the driver and each
     * executor — keyed by the generated source. The engine's working
     * set is far larger than 100: the ten `finance_interactive` queries
@@ -46,116 +46,25 @@ object SessionDefaults {
     */
   val CodegenCacheEntries: Int = 4096
 
-  /** The engine's SQL-conf set for a deploy profile — pure and
-    * unit-testable without building a session (SessionDefaultsSpec
-    * asserts both profiles).
-    *
-    * `local` (the default — the bench/test topology):
-    *  - AQE's post-shuffle partition COALESCING is off: it merges
-    *    partitions by shuffle BYTES, which is blind to compute-dense
-    *    rows — the r14 q134 finding, where a few MB of candidate
-    *    pairs coalesced to ONE partition and serialized seconds of
-    *    Levenshtein DP through a single core (and the range-sort's
-    *    sampling pass ran the single-task join twice). This engine's
-    *    heavy stages are hash/DP/regex per row, not bytes, so
-    *    parallelism-first is the right local default; AQE itself
-    *    (runtime re-plan, skew-join splitting) stays ON.
-    *  - 8 MB split sizing: the test/probe parquet is a handful of
-    *    10–50 MB files, which at the 128 MB default is ONE split (=
-    *    one scan task) each — and Spark runs scan-stage expressions,
-    *    including join-inferred IsNotNull over derived kernel
-    *    columns, at split parallelism. 8 MB maps these files onto
-    *    the 32-core box the way a real 100 TB table's thousands of
-    *    row groups map onto a cluster (SURVEY §4 sizing note).
-    *
-    * `cluster`: both knobs are left at Spark's defaults — split size
-    * scales with `spark.sql.files.maxPartitionBytes` (128 MB) ×
-    * executor count, and AQE coalescing is back on (on real data
-    * volumes its byte heuristic and the cluster's parallelism floor
-    * are no longer misled by toy file sizes). A deployment that hits
-    * the compute-dense-coalescing class anyway should reach for
-    * `spark.sql.adaptive.coalescePartitions.minPartitionNum` before
-    * disabling coalescing wholesale.
-    *
-    * Explicit env overrides win over either profile:
-    * `GRAFT_MAX_PARTITION_BYTES` → `spark.sql.files.maxPartitionBytes`,
-    * `GRAFT_COALESCE` → `spark.sql.adaptive.coalescePartitions.enabled`.
-    *
-    * The env-map overload reads the PROFILE from the same injected
-    * map (`GRAFT_DEPLOY`) as the overrides — a hermetic caller
-    * injecting `Map.empty` gets the local default regardless of the
-    * ambient process env; the two-arg overload pins the profile
-    * explicitly (tests exercising both branches).
+  /** The ONE deploy decision: true iff `master` runs the whole session
+    * in this JVM — `local` or `local[...]`, Spark's own
+    * `SparkContext.isLocal` rule. `local-cluster`, `spark://`, `yarn`
+    * and `k8s://` masters are fleets. [[masterConfigs]] picks the plan
+    * tuning from it, [[Tables.loadSpreadLocal]] its plan shape and
+    * [[graft.operators.Checkpoints.stable]] its lineage-cut path.
     */
-  def profileConfigs(): Map[String, String] = profileConfigs(sys.env)
+  def inProcess(master: String): Boolean =
+    master == "local" || master.startsWith("local[")
 
-  def profileConfigs(env: Map[String, String]): Map[String, String] =
-    profileConfigs(env.getOrElse("GRAFT_DEPLOY", "local"), env)
-
-  def profileConfigs(profile: String,
-      env: Map[String, String]): Map[String, String] = {
-    // The engine's own extensions are on in every profile, exactly as
-    // a cluster deploy would set `spark.sql.extensions`: the native
-    // SQL functions (trading_day_roll, bounded_top_k,
-    // bounded_rank_top_k) resolve, and the rank-limit rewrite turns
-    // the SQL row_number idiom into the bounded-heap aggregate — the
-    // same plan contract the Column API gets. The codegen cache is
-    // sized to the engine's working set everywhere: it is per JVM, on
-    // the driver and on every executor (see [[CodegenCacheEntries]]).
-    val base = Map(
-      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
-      "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
-    val tuned =
-      if (isLocalProfile(profile)) Map(
-        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-        "spark.sql.files.maxPartitionBytes" -> (8 * 1024 * 1024).toString)
-      else Map(
-        // Measured (round 16, sf1 probe under this profile): AQE's
-        // post-shuffle coalescing is blind to compute-dense rows, and
-        // its 1 MB minPartitionSize floor defeats parallelismFirst on
-        // small-byte stages — q134's blocked Levenshtein join
-        // coalesced to ~1 task and ran 13.3 s vs 1.9 s coalescing-off
-        // (2.5 s with this floor). Lowering the floor to 64 KB only
-        // binds when totalBytes/defaultParallelism < 1 MB — i.e.
-        // exactly the small-byte compute-dense class; a real 100 TB
-        // stage's bytes/parallelism is far above either floor, so its
-        // coalescing is unchanged. Preferred over the deprecated
-        // minPartitionNum, which Spark 4 ignores (measured: no
-        // effect), and over disabling coalescing wholesale.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
-    val overrides = Seq(
-      "GRAFT_MAX_PARTITION_BYTES" -> "spark.sql.files.maxPartitionBytes",
-      "GRAFT_COALESCE" -> "spark.sql.adaptive.coalescePartitions.enabled",
-      "GRAFT_MIN_PARTITION_NUM" ->
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-      "GRAFT_MIN_PARTITION_SIZE" ->
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize")
-      .flatMap { case (e, k) => env.get(e).map(k -> _) }
-    base ++ tuned ++ overrides
-  }
-
-  /** The ONE profile-name parse (valid-name set + loud-failure rule)
-    * shared by [[profileConfigs]] and [[localProfile]], so the two
-    * can never drift apart. Unknown profiles fail LOUDLY (the Bench
-    * unknown-query discipline): a typo like GRAFT_DEPLOY=Cluster
-    * silently falling back to the bench-box knobs would be exactly
-    * the 12.5M-task pathology the profile exists to prevent.
+  /** Core count for the entry points: `SPARK_GRAFT_CPUS` if set, else
+    * the cores this JVM sees. Each entry point sizes its master and
+    * `spark.sql.shuffle.partitions` from it.
     */
-  private def isLocalProfile(profile: String): Boolean = profile match {
-    case "local" => true
-    case "cluster" => false
-    case other => throw new IllegalArgumentException(
-      s"GRAFT_DEPLOY must be 'local' or 'cluster', got '$other'")
-  }
+  def cpus(): String = cpus(sys.env)
 
-  /** True iff the deploy profile is `local` — the plan-shape switch
-    * behind [[Tables.loadSpreadLocal]]. Same parse (and loud-failure
-    * rule) as [[profileConfigs]] via [[isLocalProfile]].
-    */
-  def localProfile(): Boolean =
-    isLocalProfile(sys.env.getOrElse("GRAFT_DEPLOY", "local"))
-
-  def localProfile(profile: String): Boolean = isLocalProfile(profile)
+  def cpus(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
 
   /** Session master for the entry points: `GRAFT_MASTER` env wins
     * (any Spark master URL), else `local[cpus]`. The value this
@@ -191,11 +100,39 @@ object SessionDefaults {
     "java.base/sun.security.action", "java.base/sun.util.calendar")
     .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
-  /** Extra session confs a master needs beyond the profile set; empty
-    * for in-process masters. For `local-cluster` the executor fork
-    * also needs two env vars this JVM cannot set for itself — both
-    * validated LOUDLY here (the profile-typo rule): SPARK_HOME (where
-    * ExecutorRunner finds the distribution; use
+  /** The plan tuning a master gets, pure and unit-testable without
+    * building a session (SessionDefaultsSpec asserts every master
+    * kind).
+    *
+    * In-process masters ([[inProcess]], the bench/test topology):
+    *  - AQE's post-shuffle partition COALESCING is off: it merges
+    *    partitions by shuffle BYTES, which is blind to compute-dense
+    *    rows — the r14 q134 finding, where a few MB of candidate
+    *    pairs coalesced to ONE partition and serialized seconds of
+    *    Levenshtein DP through a single core (and the range-sort's
+    *    sampling pass ran the single-task join twice). This engine's
+    *    heavy stages are hash/DP/regex per row, not bytes, so
+    *    parallelism-first is the right local default; AQE itself
+    *    (runtime re-plan, skew-join splitting) stays ON.
+    *  - 8 MB split sizing: the test/probe parquet is a handful of
+    *    10–50 MB files, which at the 128 MB default is ONE split (=
+    *    one scan task) each — and Spark runs scan-stage expressions,
+    *    including join-inferred IsNotNull over derived kernel
+    *    columns, at split parallelism. 8 MB maps these files onto
+    *    an in-process box the way a real 100 TB table's thousands of
+    *    row groups map onto a cluster (SURVEY §4 sizing note).
+    *
+    * Fleets: split size stays at Spark's default
+    * (`spark.sql.files.maxPartitionBytes`, 128 MB) and AQE coalescing
+    * stays on — on real data volumes its byte heuristic and the
+    * fleet's parallelism floor are no longer misled by toy file
+    * sizes; 8 MB splits over 100 TB would be ≈ 12.5M scan tasks. Only
+    * the coalescing floor is lowered (see below). `spark-submit
+    * --conf` and [[session]]'s `extra` still reach every knob.
+    *
+    * `local-cluster` also needs the executor fork's confs, and two env
+    * vars this JVM cannot set for itself — both validated LOUDLY here:
+    * SPARK_HOME (where ExecutorRunner finds the distribution; use
     * tools/mk_local_cluster_home.sh for a writable shim so executor
     * sandboxes land under target/, not /opt/spark) and
     * SPARK_SCALA_VERSION (load-spark-env.sh normally sets it; without
@@ -206,19 +143,39 @@ object SessionDefaults {
     masterConfigs(master, sys.env)
 
   def masterConfigs(master: String, env: Map[String, String]): Map[String, String] =
-    if (!master.startsWith("local-cluster")) Map.empty
-    else {
-      val missing =
-        Seq("SPARK_HOME", "SPARK_SCALA_VERSION").filterNot(env.contains)
-      if (missing.nonEmpty) throw new IllegalArgumentException(
-        s"master '$master' forks executor JVMs and needs env " +
-          s"${missing.mkString(", ")} — e.g. " +
-          "SPARK_HOME=$(tools/mk_local_cluster_home.sh) SPARK_SCALA_VERSION=2.13")
-      Map(
-        "spark.executor.extraClassPath" ->
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath,
-        "spark.executor.extraJavaOptions" -> executorAddOpens)
-    }
+    if (inProcess(master)) Map(
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" -> (8 * 1024 * 1024).toString)
+    else Map(
+      // Measured (round 16, sf1 probe under the fleet tuning): AQE's
+      // post-shuffle coalescing is blind to compute-dense rows, and
+      // its 1 MB minPartitionSize floor defeats parallelismFirst on
+      // small-byte stages — q134's blocked Levenshtein join
+      // coalesced to ~1 task and ran 13.3 s vs 1.9 s coalescing-off
+      // (2.5 s with this floor). Lowering the floor to 64 KB only
+      // binds when totalBytes/defaultParallelism < 1 MB — i.e.
+      // exactly the small-byte compute-dense class; a real 100 TB
+      // stage's bytes/parallelism is far above either floor, so its
+      // coalescing is unchanged. Preferred over the deprecated
+      // minPartitionNum, which Spark 4 ignores (measured: no
+      // effect), and over disabling coalescing wholesale.
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536") ++
+      (if (master.startsWith("local-cluster")) forkConfigs(master, env)
+       else Map.empty)
+
+  private def forkConfigs(master: String,
+      env: Map[String, String]): Map[String, String] = {
+    val missing =
+      Seq("SPARK_HOME", "SPARK_SCALA_VERSION").filterNot(env.contains)
+    if (missing.nonEmpty) throw new IllegalArgumentException(
+      s"master '$master' forks executor JVMs and needs env " +
+        s"${missing.mkString(", ")} — e.g. " +
+        "SPARK_HOME=$(tools/mk_local_cluster_home.sh) SPARK_SCALA_VERSION=2.13")
+    Map(
+      "spark.executor.extraClassPath" ->
+        new java.io.File("target/scala-2.13/classes").getAbsolutePath,
+      "spark.executor.extraJavaOptions" -> executorAddOpens)
+  }
 
   /** The session's stable full compute width — the target partition
     * count for compute-dense spreads ([[Tables.loadSpread]], the q134
@@ -261,7 +218,7 @@ object SessionDefaults {
     }
 
   /** The one session recipe every entry point builds from: [[apply]]'s
-    * hygiene and profile confs, the master, a shuffle width of `cpus`,
+    * hygiene and master-independent confs, the master, a shuffle width of `cpus`,
     * UTC, no UI, then [[masterConfigs]] and the caller's `extra` (which
     * therefore win over everything before them). Log level WARN. AQE
     * is not set: it is on by default in Spark 4.1 (SessionDefaultsSpec
@@ -281,24 +238,31 @@ object SessionDefaults {
     spark
   }
 
+  /** The confs that are the same on every master: the engine's own
+    * extensions (the native SQL functions resolve, and the rank-limit
+    * rewrite turns the SQL row_number idiom into the bounded-heap
+    * aggregate — the same plan contract the Column API gets), the
+    * codegen cache (per JVM, on the driver and on every executor, see
+    * [[CodegenCacheEntries]]), the warehouse, the checkpoint dir and
+    * its cleaner. The master's tuning comes from [[masterConfigs]].
+    */
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val derby = new java.io.File("target/derby")
     derby.mkdirs()
     System.setProperty("derby.system.home", derby.getAbsolutePath)
-    profileConfigs().foldLeft(
-      b.config("spark.sql.warehouse.dir",
+    b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.warehouse.dir",
         new java.io.File("target/spark-warehouse").toURI.toString)
-        // Reliable-checkpoint home for [[graft.operators.Checkpoints]]
-        // (the cluster profile's executor-loss-tolerant lineage cut —
-        // the r18 chaos finding). Valid here because every
-        // local-cluster executor shares this filesystem; a multi-NODE
-        // deployment overrides it with a DFS path. The cleaner conf
-        // lets superseded loop-round checkpoints delete their files
-        // once the driver GCs the RDD reference.
-        .config("spark.checkpoint.dir",
-          new java.io.File("target/checkpoints").toURI.toString)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")) {
-      case (bb, (k, v)) => bb.config(k, v)
-    }
+      // Reliable-checkpoint home for [[graft.operators.Checkpoints]]
+      // (the fleet's executor-loss-tolerant lineage cut — the r18
+      // chaos finding). Valid here because every local-cluster
+      // executor shares this filesystem; a multi-NODE deployment
+      // overrides it with a DFS path. The cleaner conf lets superseded
+      // loop-round checkpoints delete their files once the driver GCs
+      // the RDD reference.
+      .config("spark.checkpoint.dir",
+        new java.io.File("target/checkpoints").toURI.toString)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
   }
 }

@@ -169,16 +169,21 @@ object Tables {
     * DEGENERATE SCAN WIDTH — the decimal moment aggregates of the
     * relational family (~100 ns/row: trivial at cluster scan
     * parallelism, but the toy single-row-group files serialize the
-    * whole partial aggregate onto one core). In the `local` profile
-    * this spreads like [[loadSpread]]; in the `cluster` profile it is
-    * the plain scan — real tables split by row group, and a
-    * round-robin of the raw rows before a partial-aggregable groupBy
-    * would ADD a full-table shuffle to the 100 TB plan. Kernels that
-    * are expensive per row at ANY width (text/similarity pipelines)
-    * keep using [[loadSpread]] unconditionally.
+    * whole partial aggregate onto one core). On an in-process master
+    * ([[SessionDefaults.inProcess]], the default for `spread`) this
+    * spreads like [[loadSpread]]; on a fleet it is the plain scan —
+    * real tables split by row group, and a round-robin of the raw
+    * rows before a partial-aggregable groupBy would ADD a full-table
+    * shuffle to the 100 TB plan. Kernels that are expensive per row
+    * at ANY width (text/similarity pipelines) keep using
+    * [[loadSpread]] unconditionally.
     */
+  def loadSpreadLocal(spark: SparkSession, dir: String, name: String): DataFrame =
+    loadSpreadLocal(spark, dir, name,
+      SessionDefaults.inProcess(spark.sparkContext.master))
+
   def loadSpreadLocal(spark: SparkSession, dir: String, name: String,
-      spread: Boolean = SessionDefaults.localProfile()): DataFrame =
+      spread: Boolean): DataFrame =
     if (spread) loadSpread(spark, dir, name)
     else load(spark, dir, name)
 

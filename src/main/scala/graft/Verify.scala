@@ -14,7 +14,7 @@ object Verify {
     // optional extra args: run only the named queries (local iteration;
     // the driver always passes exactly two args → full dump)
     val queries = SparkEntry.select(args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SessionDefaults.cpus()
     // GRAFT_MASTER support (SessionDefaults.master): the multi-executor
     // attestation reruns this SAME dump under local-cluster, proving
     // the oracle-green results hold across real executor boundaries.

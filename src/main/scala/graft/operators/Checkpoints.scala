@@ -18,53 +18,28 @@ import org.apache.spark.sql.Dataset
   * CHAOS_r18.md). On a 1000-executor fleet an executor loss is a
   * weekly event, not a chaos experiment.
   *
-  *  - remote-executor masters (`local-cluster`, standalone, YARN,
-  *    K8s — `sparkContext.isLocal == false`): RELIABLE `checkpoint`
-  *    — files under `spark.checkpoint.dir` ([[SessionDefaults]]
-  *    defaults it to target/checkpoints for the shared-filesystem
-  *    local-cluster topology; a multi-node deploy sets a DFS path).
-  *    Any executor can read them, any loss is survivable. The frames
-  *    are bounded by construction (edge-sized loop rounds, ≤100k-row
-  *    training samples), so the file I/O is corpus-size-independent.
+  *  - fleets (`local-cluster`, standalone, YARN, K8s — every master
+  *    [[graft.SessionDefaults.inProcess]] rejects): RELIABLE
+  *    `checkpoint` — files under `spark.checkpoint.dir`
+  *    ([[graft.SessionDefaults]] defaults it to target/checkpoints
+  *    for the shared-filesystem local-cluster topology; a multi-node
+  *    deploy sets a DFS path). Any executor can read them, any loss
+  *    is survivable. The frames are bounded by construction
+  *    (edge-sized loop rounds, ≤100k-row training samples), so the
+  *    file I/O is corpus-size-independent.
   *  - in-process masters (`local[n]`): `localCheckpoint` — the
   *    driver JVM cannot lose an executor, so the memory-speed path
   *    is safe exactly where it is used.
   *
-  * The switch is the MASTER (a runtime fact), not the GRAFT_DEPLOY
-  * planner profile: a cluster-profile bench on local[32] would
-  * otherwise pay real file I/O against a risk that structurally
-  * cannot occur, and a local-profile run on a real fleet would carry
-  * the unrecoverable-block hole.
+  * The switch is the session's master, the same rule that picks the
+  * plan tuning: no run-time mode overrides it. The SCALE_PROBE r19
+  * A/B priced the paths against each other: reliable stays the fleet
+  * path, and replication-2 `localCheckpoint` was not cheaper.
   */
 object Checkpoints {
 
-  /** Materialization mode, overridable for measurement and for
-    * deployments that prefer a different durability/latency point
-    * (`GRAFT_CHECKPOINT`, loud on typos — the profile rule):
-    *
-    *  - `auto` (default): reliable files on remote-executor masters,
-    *    `localCheckpoint` in-process — the r18 chaos finding.
-    *  - `reliable` / `local`: force one path on any master. `local`
-    *    under a real fleet reintroduces the unrecoverable-block hole
-    *    — it exists for the SCALE_PROBE A/B that prices the reliable
-    *    path's file I/O, not for production.
-    *  - `local2`: `localCheckpoint` at `MEMORY_AND_DISK_2` — the
-    *    replication-2 middle rung: survives any SINGLE executor loss
-    *    (a peer holds the replica) at memory speed, without files;
-    *    two overlapping losses still abort, which reliable files
-    *    never do.
-    */
-  private def mode: String = sys.env.getOrElse("GRAFT_CHECKPOINT", "auto")
-
-  def stable[T](ds: Dataset[T]): Dataset[T] = mode match {
-    case "auto" => stable(ds, !ds.sparkSession.sparkContext.isLocal)
-    case "reliable" => stable(ds, reliable = true)
-    case "local" => stable(ds, reliable = false)
-    case "local2" => ds.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
-    case other => throw new IllegalArgumentException(
-      s"GRAFT_CHECKPOINT must be auto|reliable|local|local2, got '$other'")
-  }
+  def stable[T](ds: Dataset[T]): Dataset[T] =
+    stable(ds, !graft.SessionDefaults.inProcess(ds.sparkSession.sparkContext.master))
 
   def stable[T](ds: Dataset[T], reliable: Boolean): Dataset[T] =
     if (!reliable) ds.localCheckpoint(eager = true)

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (DESIGN.md round-14 section), and the extensions wire the native
   * SQL functions + the top-k rewrite. A refactor that drops one of
   * these would silently reintroduce the serialized-stage class while
-  * every result stays correct — so the spec pins them, per profile:
-  * the local values must NOT leak into a cluster deployment (8 MB
-  * splits over 100 TB ≈ 12.5M scan tasks).
+  * every result stays correct — so the spec pins them, per master
+  * kind: the session's master is the one deploy decision
+  * (`SessionDefaults.inProcess`), and the in-process values must NOT
+  * leak onto a fleet (8 MB splits over 100 TB ≈ 12.5M scan tasks).
   */
 class SessionDefaultsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -55,14 +56,16 @@ class SessionDefaultsSpec extends AnyFunSuite {
   }
 
   test("local profile pins the bench-box knobs") {
-    val c = SessionDefaults.profileConfigs("local", env = Map.empty)
+    // the in-process tuning comes from masterConfigs; apply() adds the
+    // master-independent confs on top
+    val c = SessionDefaults.masterConfigs("local[4]", Map.empty)
     assert(c("spark.sql.adaptive.coalescePartitions.enabled") == "false")
     assert(c("spark.sql.files.maxPartitionBytes") == (8 * 1024 * 1024).toString)
-    assert(c("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(spark.conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
   }
 
   test("cluster profile raises the split size back to Spark's default") {
-    val c = SessionDefaults.profileConfigs("cluster", env = Map.empty)
+    val c = SessionDefaults.masterConfigs("spark://h:7077", Map.empty)
     // neither knob is forced: split size reverts to Spark's 128 MB
     // default and AQE coalescing comes back on
     assert(!c.contains("spark.sql.files.maxPartitionBytes"))
@@ -72,31 +75,34 @@ class SessionDefaultsSpec extends AnyFunSuite {
     // small-byte compute-dense join, 13.3 s vs 2.5 s at sf1; inert on
     // real-scale stages where bytes/parallelism >> 1 MB)
     assert(c("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "65536")
-    // the extensions are profile-independent
-    assert(c("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    // the extensions are master-independent: apply() sets them
+    assert(!c.contains("spark.sql.extensions"))
   }
 
-  test("coalescing-floor and minPartitionNum env overrides are wired") {
-    val env = Map(
-      "GRAFT_MIN_PARTITION_SIZE" -> "1m",
-      "GRAFT_MIN_PARTITION_NUM" -> "16")
-    val c = SessionDefaults.profileConfigs("cluster", env)
-    assert(c("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "1m")
-    assert(c("spark.sql.adaptive.coalescePartitions.minPartitionNum") == "16")
-  }
-
-  test("an unknown profile fails loudly instead of inheriting bench-box knobs") {
-    val e = intercept[IllegalArgumentException](
-      SessionDefaults.profileConfigs("prod", env = Map.empty))
-    assert(e.getMessage.contains("GRAFT_DEPLOY"))
-  }
-
-  test("localProfile mirrors the profile names and the loud-failure rule") {
-    assert(SessionDefaults.localProfile("local"))
-    assert(!SessionDefaults.localProfile("cluster"))
-    val e = intercept[IllegalArgumentException](
-      SessionDefaults.localProfile("Prod"))
-    assert(e.getMessage.contains("GRAFT_DEPLOY"))
+  test("masterConfigs: the master alone picks the tuning, per master kind") {
+    val inProcessTuning = Map(
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" -> (8 * 1024 * 1024).toString)
+    val fleetTuning = Map(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
+    val forkEnv = Map("SPARK_HOME" -> "/tmp/sh", "SPARK_SCALA_VERSION" -> "2.13")
+    val forkKeys = Set("spark.executor.extraClassPath", "spark.executor.extraJavaOptions")
+    for (m <- Seq("local", "local[4]", "local[*]", "local[4,2]")) {
+      assert(SessionDefaults.inProcess(m), m)
+      assert(SessionDefaults.masterConfigs(m, Map.empty) == inProcessTuning, m)
+    }
+    val noEnv = Map.empty[String, String]
+    for ((m, env) <- Seq("local-cluster[2,2,2048]" -> forkEnv,
+        "spark://h:7077" -> noEnv, "yarn" -> noEnv, "k8s://https://h:443" -> noEnv)) {
+      assert(!SessionDefaults.inProcess(m), m)
+      val c = SessionDefaults.masterConfigs(m, env)
+      assert(c -- forkKeys == fleetTuning, m)
+      assert(c.keySet.intersect(forkKeys) ==
+        (if (m.startsWith("local-cluster")) forkKeys else Set.empty), m)
+    }
+    // the predicate is Spark's own SparkContext.isLocal rule
+    assert(SessionDefaults.inProcess(spark.sparkContext.master) ==
+      spark.sparkContext.isLocal)
   }
 
   test("computeWidth follows the configured shuffle width, not live parallelism") {
@@ -117,8 +123,11 @@ class SessionDefaultsSpec extends AnyFunSuite {
   }
 
   test("masterConfigs: in-process masters need nothing extra") {
-    assert(SessionDefaults.masterConfigs("local[32]", Map.empty).isEmpty)
-    assert(SessionDefaults.masterConfigs("local[*]", Map.empty).isEmpty)
+    // nothing beyond the tuning: an in-process master forks no executor
+    for (m <- Seq("local[32]", "local[*]")) {
+      val c = SessionDefaults.masterConfigs(m, Map.empty)
+      assert(!c.keySet.exists(_.startsWith("spark.executor.")), m)
+    }
   }
 
   test("masterConfigs: local-cluster ships classes + JDK flags to the forked executors") {
@@ -142,12 +151,10 @@ class SessionDefaultsSpec extends AnyFunSuite {
 
   test("every profile sizes the codegen cache to the engine's working set") {
     // a per-JVM cache on the driver and on every executor, so the cap
-    // is not a local-only knob
-    for (profile <- Seq("local", "cluster")) {
-      val c = SessionDefaults.profileConfigs(profile, env = Map.empty)
-      assert(c("spark.sql.codegen.cache.maxEntries") ==
-        SessionDefaults.CodegenCacheEntries.toString, profile)
-    }
+    // is set by apply() on every master, not by the master's tuning
+    for (m <- Seq("local[4]", "spark://h:7077"))
+      assert(!SessionDefaults.masterConfigs(m, Map.empty)
+        .contains("spark.sql.codegen.cache.maxEntries"), m)
     // above the ~2,400–2,500 classes one pass of all 174 queries compiles
     assert(SessionDefaults.CodegenCacheEntries > 2500)
     // a static conf: it reaches the live session only because the
@@ -156,37 +163,37 @@ class SessionDefaultsSpec extends AnyFunSuite {
       SessionDefaults.CodegenCacheEntries.toString)
   }
 
-  test("the env overrides are exactly the four partition knobs") {
-    // no env var reaches the codegen cache (or anything else new): a
-    // GRAFT_* name outside the override list changes nothing
-    val knobs = Map(
-      "GRAFT_MAX_PARTITION_BYTES" -> "spark.sql.files.maxPartitionBytes",
-      "GRAFT_COALESCE" -> "spark.sql.adaptive.coalescePartitions.enabled",
-      "GRAFT_MIN_PARTITION_NUM" ->
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-      "GRAFT_MIN_PARTITION_SIZE" ->
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    val stray = Seq("GRAFT_CODEGEN_CACHE", "GRAFT_CODEGEN_CACHE_MAX_ENTRIES",
-      "GRAFT_CACHE_MAX_ENTRIES", "GRAFT_MAX_ENTRIES")
-    for (profile <- Seq("local", "cluster")) {
-      val plain = SessionDefaults.profileConfigs(profile, env = Map.empty)
-      val env = (knobs.keys ++ stray).map(_ -> "7").toMap
-      val c = SessionDefaults.profileConfigs(profile, env)
-      val changed = c.keySet.filter(k => !plain.get(k).contains(c(k)))
-      assert(changed == knobs.values.toSet, profile)
-      assert(c("spark.sql.codegen.cache.maxEntries") ==
-        SessionDefaults.CodegenCacheEntries.toString, profile)
-    }
+  test("one core-count default: SPARK_GRAFT_CPUS wins, else availableProcessors") {
+    assert(SessionDefaults.cpus(Map("SPARK_GRAFT_CPUS" -> "7")) == "7")
+    assert(SessionDefaults.cpus(Map.empty) ==
+      Runtime.getRuntime.availableProcessors.toString)
   }
 
-  test("explicit env overrides beat either profile") {
-    val env = Map(
-      "GRAFT_MAX_PARTITION_BYTES" -> "33554432",
-      "GRAFT_COALESCE" -> "true")
-    val local = SessionDefaults.profileConfigs("local", env)
-    assert(local("spark.sql.files.maxPartitionBytes") == "33554432")
-    assert(local("spark.sql.adaptive.coalescePartitions.enabled") == "true")
-    val cluster = SessionDefaults.profileConfigs("cluster", env)
-    assert(cluster("spark.sql.files.maxPartitionBytes") == "33554432")
+  test("src/main reads only the deployment env vars, and the core count in one place") {
+    // the session's master is the one deploy decision: no GRAFT_* env
+    // var may pick plan tuning, checkpoint paths or any conf (the
+    // codegen cache included), so every GRAFT_*/SPARK_GRAFT_* name in
+    // a src/main string literal is an address or a data location
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("GRAFT_MASTER", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_SF1_DIR", "SPARK_GRAFT_BENCH_BUDGET_S")
+    val literal = "\"(?:[^\"\\\n]|\\\\.)*\"".r
+    val name = "\\b(?:SPARK_)?GRAFT_[A-Z0-9_]*[A-Z0-9]".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    val uses = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        literal.findAllIn(src).flatMap(name.findAllIn(_))
+          .map(n => (p.getFileName.toString, n))
+      }.toList
+    finally walk.close()
+    val stray = uses.filterNot { case (_, n) => allowed(n) }
+    assert(stray.isEmpty, s"GRAFT env vars outside the allowed set: $stray")
+    val cpuReaders = uses.collect { case (f, "SPARK_GRAFT_CPUS") => f }.toSet
+    assert(cpuReaders == Set("SessionDefaults.scala"),
+      s"read the core count through SessionDefaults.cpus: $cpuReaders")
   }
 }

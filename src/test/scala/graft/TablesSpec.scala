@@ -66,6 +66,14 @@ class TablesSpec extends AnyFunSuite {
       "cluster profile must be the untouched scan (row groups parallelize it):\n" + clusterPlan)
   }
 
+  test("loadSpreadLocal with no spread argument round-robins on the local[4] test session") {
+    // the session's master decides: local[4] is in-process
+    val plan = Tables.loadSpreadLocal(spark, driverDir, "lineitem")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange RoundRobinPartitioning"),
+      "an in-process master must round-robin the scan:\n" + plan)
+  }
+
   test("assertSchemas passes on driver data and names a drifted column") {
     Tables.assertSchemas(spark, driverDir) // must not throw
     // plant a drifted copy: events.ts as a string (a shape the guard
