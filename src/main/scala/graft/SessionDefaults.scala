@@ -252,8 +252,7 @@ object SessionDefaults {
     System.setProperty("derby.system.home", derby.getAbsolutePath)
     b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.sql.warehouse.dir",
-        new java.io.File("target/spark-warehouse").toURI.toString)
+      .config("spark.sql.warehouse.dir", dirUri("target/spark-warehouse"))
       // Reliable-checkpoint home for [[graft.operators.Checkpoints]]
       // (the fleet's executor-loss-tolerant lineage cut — the r18
       // chaos finding). Valid here because every local-cluster
@@ -261,8 +260,15 @@ object SessionDefaults {
       // overrides it with a DFS path. The cleaner conf lets superseded
       // loop-round checkpoints delete their files once the driver GCs
       // the RDD reference.
-      .config("spark.checkpoint.dir",
-        new java.io.File("target/checkpoints").toURI.toString)
+      .config("spark.checkpoint.dir", dirUri("target/checkpoints"))
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
   }
+
+  /** `file:` URI of the working-directory-relative `dir`, built from its
+    * absolute path alone. `File.toURI` appends a `/` only when the
+    * directory already exists, so the first session in a fresh checkout
+    * and every later one would get different confs.
+    */
+  private def dirUri(dir: String): String =
+    new java.net.URI("file", null, new java.io.File(dir).getAbsolutePath, null).toString
 }

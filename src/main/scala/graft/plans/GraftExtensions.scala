@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * [[RewriteRankLimitToBoundedTopK]] optimizer rule that turns the
   * `row_number()/rank()/dense_rank() <= k` window idiom (including
   * conjunctive filters and `= c` equality bounds) into the bounded
-  * aggregate plans.
+  * aggregate plans, plus the [[FinalSortToSinglePartition]] AQE
+  * query-stage preparation rule that shuffles a global sort over an
+  * input known to fit one advisory partition to a single partition,
+  * with no range-bounds sampling job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -19,6 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteRankLimitToBoundedTopK)
+    e.injectQueryStagePrepRule(_ => FinalSortToSinglePartition)
     GraftExtensions.Functions.foreach { case (name, cls, build) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), build))
