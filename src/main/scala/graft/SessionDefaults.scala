@@ -264,11 +264,11 @@ object SessionDefaults {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
   }
 
-  /** `file:` URI of the working-directory-relative `dir`, built from its
-    * absolute path alone. `File.toURI` appends a `/` only when the
-    * directory already exists, so the first session in a fresh checkout
-    * and every later one would get different confs.
+  /** `file:` URI of `dir` (relative to the working directory), built
+    * from its absolute path alone. `File.toURI` appends a `/` only when
+    * the directory already exists, so the first session in a fresh
+    * checkout and every later one would get different confs.
     */
-  private def dirUri(dir: String): String =
+  private[graft] def dirUri(dir: String): String =
     new java.net.URI("file", null, new java.io.File(dir).getAbsolutePath, null).toString
 }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * conjunctive filters and `= c` equality bounds) into the bounded
   * aggregate plans, plus the [[FinalSortToSinglePartition]] AQE
   * query-stage preparation rule that shuffles a global sort over an
-  * input known to fit one advisory partition to a single partition,
-  * with no range-bounds sampling job.
+  * input known to be small (a quarter of the advisory partition size)
+  * to a single partition, with no range-bounds sampling job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -14,10 +14,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.plans.FinalSortToSinglePartition]]: a global sort over an
-  * input that fits one advisory partition shuffles to a single
-  * partition and runs no range-bounds sampling job; a large input, a
-  * row-multiplying map side and `repartitionByRange` keep their range
-  * exchange. Jobs are counted with a listener, as in [[PlanPurity]].
+  * input within a quarter of the advisory partition size shuffles to a
+  * single partition and runs no range-bounds sampling job; a larger
+  * input, a row-multiplying map side and `repartitionByRange` keep
+  * their range exchange. Jobs are counted with a listener, as in [[PlanPurity]].
   */
 class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
@@ -27,6 +27,10 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val d = java.nio.file.Files.createTempDirectory("final-sort").toString
     spark.range(400).select(($"id" % 37).as("k"), $"id".as("v"))
       .repartition(4).write.parquet(s"$d/small")
+    spark.range(800).select(($"id" % 4).as("k"), $"id".as("v"))
+      .repartition(2).write.parquet(s"$d/many_a")
+    spark.range(800).select(($"id" % 4).as("k"), ($"id" * 3).as("w"))
+      .repartition(2).write.parquet(s"$d/many_b")
     spark.range(400).select($"id".as("k")).where($"k" < 0)
       .write.parquet(s"$d/empty")
     spark.range(1).select($"id".as("k"), lit("one").as("s"))
@@ -90,7 +94,18 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rows.map(_.getLong(1)) == (399L to 0L by -1L))
   }
 
-  test("an input over the advisory partition size keeps range partitioning") {
+  test("the bound is a quarter of the advisory partition size") {
+    val bytes = new java.io.File(s"$dir/small").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    def finalShuffles(advisory: Long) =
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString) {
+        shuffles(small.orderBy($"v".desc).queryExecution.executedPlan).map(_._1)
+      }
+    assert(finalShuffles(4 * bytes) == Seq(SinglePartition))
+    assert(finalShuffles(4 * bytes - 4).forall(_.isInstanceOf[RangePartitioning]))
+  }
+
+  test("an input over the bound keeps range partitioning") {
     val (rows, _, parts) =
       withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64")(run(aggSorted))
     assert(parts.exists(_._1.isInstanceOf[RangePartitioning]), parts)
@@ -104,6 +119,31 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(parts.map(_._1).exists(_.isInstanceOf[RangePartitioning]), parts)
     assert(!parts.exists(_._1 == SinglePartition), parts)
     assert(rows.size == 800)
+  }
+
+  test("a many-to-many join under the sort keeps range partitioning") {
+    // 800 rows a side on 4 keys: 160,000 joined rows from two files of a
+    // few KB each; joined on a side distinct on the key, 800 rows
+    val a = spark.read.parquet(s"$dir/many_a")
+    val b = spark.read.parquet(s"$dir/many_b")
+    val manyToMany = a.join(b, "k").orderBy("k", "v", "w")
+    val distinctSide = b.groupBy(($"w" / 3).cast("long").as("v")).agg(max($"k").as("bk"))
+    val oneToOne = a.join(distinctSide, "v").orderBy("v")
+    // broadcast hash join, then sort-merge join
+    for (broadcast <- Seq("10MB", "-1")) withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> broadcast) {
+      // a bound of 1 MB: over the joined inputs, under 800 times them
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4MB") {
+        val (rows, _, parts) = run(manyToMany)
+        assert(parts.exists(_._1.isInstanceOf[RangePartitioning]), parts)
+        assert(!parts.exists(_._1 == SinglePartition), parts)
+        assert(rows.size == 160000)
+        val (oneRows, _, oneParts) = run(oneToOne)
+        assert(oneParts.exists(_._1 == SinglePartition), oneParts)
+        assert(!oneParts.exists(_._1.isInstanceOf[RangePartitioning]), oneParts)
+        assert(oneRows.map(_.getLong(0)) == (0L until 800L))
+      }
+    }
   }
 
   test("Store.writeZClustered keeps its repartitionByRange exchange") {

@@ -1,20 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-/** Prints the directory confs [[SessionDefaults.apply]] gives a builder
-  * in this JVM's working directory; SessionDefaultsSpec runs it in a
-  * fresh one. No session is started.
-  */
-object SessionDirConfs {
-  def main(args: Array[String]): Unit = {
-    val b = new SparkSession.Builder { def confs = options.toMap }
-    SessionDefaults.apply(b)
-    Seq("spark.sql.warehouse.dir", "spark.checkpoint.dir")
-      .foreach(k => println(s"$k=${b.confs(k)}"))
-  }
-}
 
 /** The session layer IS part of the plan contract: coalescing-off and
   * the local split size are what keep compute-dense stages parallel
@@ -212,30 +198,13 @@ class SessionDefaultsSpec extends AnyFunSuite {
   }
 
   test("the directory confs do not depend on whether the directories exist yet") {
-    // a JVM's working directory is fixed at launch, so each build of
-    // the conf runs in a child JVM started in a fresh temp directory
-    val cwd = java.nio.file.Files.createTempDirectory("session-cwd").toFile
-    def confs(): Seq[String] = {
-      val bin = new java.io.File(System.getProperty("java.home"), "bin/java").getPath
-      val p = new ProcessBuilder(bin, "-cp", System.getProperty("java.class.path"),
-        "graft.SessionDirConfs").directory(cwd).redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      assert(p.waitFor() == 0, out)
-      out.linesIterator.filter(_.startsWith("spark.")).toSeq
-    }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
+    val root = java.nio.file.Files.createTempDirectory("session-dirs").toFile
+    val dir = new java.io.File(root, "target/checkpoints")
     try {
-      val dirs = Seq("target/spark-warehouse", "target/checkpoints")
-        .map(new java.io.File(cwd, _))
-      assert(!dirs.exists(_.exists()))
-      val first = confs()
-      dirs.foreach(_.mkdirs())
-      val second = confs()
-      assert(first.size == 2 && first == second)
-      assert(first.forall(_.contains(cwd.getCanonicalFile.toURI.getPath)), first)
-    } finally rm(cwd)
+      val absent = SessionDefaults.dirUri(dir.getPath)
+      assert(dir.mkdirs())
+      assert(SessionDefaults.dirUri(dir.getPath) == absent)
+      assert(absent == "file:" + dir.getAbsolutePath, absent)
+    } finally Seq(dir, dir.getParentFile, root).foreach(_.delete())
   }
 }
