@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import BenchCore.{jarr, jnum, jobj, jstr}
 
@@ -117,46 +117,89 @@ object Bench {
     // both stay out, guarded by q162/q168's ratios
     "q170_embed_knn", "q173_exact_substring_remove")
 
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** One run of one query. `wall` and `cpu` (process-CPU seconds) are
+    * -1 when the run failed, `cpu` also when the JVM has no process
+    * clock; `task` is the run's window of the [[Ledger]], `compiles` the
+    * classes Janino compiled in it. The plan diagnostics: `multiUse`, a
+    * multi-consumer cache in the final plan; `unpinned`, the
+    * multi-consumer caches unmaterialized at build time (the q84-class
+    * race precondition).
+    */
+  final case class Run(wall: Double, cpu: Double, task: Option[Ledger.Counts],
+      compiles: Long, multiUse: Boolean, unpinned: Seq[String]) {
+    def ok: Boolean = wall >= 0
+    def taskCpu: Double = task.fold(-1.0)(_.taskCpuS)
+  }
+
+  private val failedRun = Run(-1.0, -1.0, None, -1L, multiUse = false, Nil)
+
+  /** The run a query's minimum wall came from (the first of equal
+    * walls); its CPU fields are the ones the JSON reports for the min.
+    */
+  def minRun(runs: Seq[Run]): Option[Run] = runs.filter(_.ok).minByOption(_.wall)
+
   def main(args: Array[String]): Unit = {
     // Optional args: query names to bench (default: all); an unknown
     // name fails before any session starts.
     val queries = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // 10x scale-probe section: when the sf1 dataset exists (generated
+    // by tools/gen_sf1.py into probe_data/sf1 — NOT under target/,
+    // which sbt clean wipes) and this run isn't already at sf1,
+    // re-bench the heavy subset there so every bench JSON carries a
+    // second scale point — a superlinear plan shows up as a ratio far
+    // above the 10x input growth instead of hiding until an audit.
+    // Skipped for filtered (arg-driven A/B) runs. A renamed or removed
+    // probe query fails here, before any work (BenchSpec enforces the
+    // same invariant at test time).
+    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "probe_data/sf1")
+    val probe = SparkEntry.select(probeNames)
+    val sf1 =
+      if (args.nonEmpty || !new java.io.File(sf1Dir, "documents.parquet").exists() ||
+          new java.io.File(sfDir).getCanonicalPath ==
+            new java.io.File(sf1Dir).getCanonicalPath) None
+      else Some(sf1Dir -> probe)
+    // Hard wall-clock budget (BENCH_r11 died rc=124 with NOTHING
+    // written because the full corpus + probe overran the driver's
+    // timeout and the JSON only landed at the end).
+    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1400").toDouble
     val cpus = SessionDefaults.cpus()
-    val master = SessionDefaults.master(cpus)
-    val spark = SessionDefaults.session(master, cpus)
-    // Deployment-independent CPU attribution (and shuffle-transport
-    // evidence) via task metrics — see TaskMetricsProbe for why the
-    // process clock alone is blind under a forked-executor master.
-    val taskMetrics = TaskMetricsProbe.install(spark)
+    val spark = SessionDefaults.session(SessionDefaults.master(cpus), cpus)
+    println(measure(spark, sfDir, queries, sf1, budgetS,
+      java.nio.file.Paths.get("target", "bench_full.json")))
+    SessionDefaults.stopAndReap(spark)
+  }
 
-    // Each run also measures its process-CPU delta (BenchCore
-    // .processCpuSeconds) so a slow pass in the artifact is
-    // attributable to plan vs box without a rerun; single-threaded
-    // harness, so one mutable slot carries the last run's CPU to the
-    // caller that records it next to the wall sample.
-    var lastRunCpuS: Double = -1.0
-    var lastRunTaskCpuS: Double = -1.0
-    var lastRunCompiles: Long = -1L
-    // Plan-inspection slots, refreshed per run (see cpu_race_flags):
-    // multi-consumer caches in the final plan, and — checked BEFORE
-    // execution, when it is meaningful — the ones unmaterialized at
-    // build time (the q84-class race precondition).
-    var lastMultiUseCache = false
-    var lastUnpinned: Seq[String] = Nil
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String = sfDir): Double = {
-      // boundary snapshot: drain the async listener bus so the delta
-      // holds exactly this run's tasks (drain cost sits OUTSIDE the
-      // timed window on both ends)
-      TaskMetricsProbe.drain(spark)
-      val tm0 = taskMetrics.snapshot()
+  /** Benches `queries` at `sfDir` in `spark`, and the scale probe when
+    * `sf1` names its directory and queries; returns the JSON line. The
+    * JSON is rewritten to `out` after every corpus run (min so far per
+    * query, marked `"partial":true`), so a driver-side kill costs only
+    * the tail, and written whole at the end: the console line can be
+    * lost to log-tail truncation. The deadline `budgetS` from now is
+    * consulted before every individual run; whatever samples exist when
+    * it trips are summarized.
+    */
+  def measure(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      sf1: Option[(String, Seq[(String, Query)])], budgetS: Double,
+      out: java.nio.file.Path): String = {
+    val ledger = Ledger.of(spark)
+    val start = ledger.snapshot()
+    val deadlineNanos = System.nanoTime() + (budgetS * 1e9).toLong
+    val outOfBudget = () => System.nanoTime() > deadlineNanos
+    def budgetLeftS: Double = (deadlineNanos - System.nanoTime()) / 1e9
+
+    def runOnce(fn: Query, dir: String): Run = {
+      // both ledger snapshots drain the bus, so the window holds exactly
+      // this run's tasks; they sit OUTSIDE the timed window
+      val task0 = ledger.snapshot()
       val cg0 = BenchCore.codegenCompiles()
       val c0 = BenchCore.processCpuSeconds()
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, dir)
-        lastUnpinned = graft.operators.Staging.unpinnedMultiUse(df)
+        val unpinned = graft.operators.Staging.unpinnedMultiUse(df)
         // ordered materialization INSIDE the timed window (building
         // the staged tables is part of the query's cost): one
         // sequential job per multi-consumer cache pins the
@@ -166,124 +209,70 @@ object Bench {
         graft.operators.Staging.pinCaches(df)
         df.write.format("noop").mode("overwrite").save()
         val c1 = BenchCore.processCpuSeconds()
-        lastRunCpuS = if (c0 < 0 || c1 < 0) -1.0 else c1 - c0
         val wall = (System.nanoTime() - t0) / 1e9
-        TaskMetricsProbe.drain(spark)
-        lastRunTaskCpuS = (taskMetrics.snapshot() - tm0).cpuS
-        lastRunCompiles = BenchCore.codegenCompiles() - cg0
-        // occurrence count is stable across execution; checked outside
-        // the timed window
-        lastMultiUseCache = graft.operators.Staging.cacheUse(df).exists(_._2 >= 2)
-        wall
-      } catch { case _: Throwable =>
-        lastRunCpuS = -1.0
-        lastRunTaskCpuS = -1.0
-        lastRunCompiles = -1L
-        -1.0
-      }
+        Run(wall, if (c0 < 0 || c1 < 0) -1.0 else c1 - c0, Some(ledger.snapshot() - task0),
+          BenchCore.codegenCompiles() - cg0,
+          // occurrence count is stable across execution; checked outside
+          // the timed window
+          graft.operators.Staging.cacheUse(df).exists(_._2 >= 2), unpinned)
+      } catch { case _: Throwable => failedRun }
     }
 
-    // Hard wall-clock budget (BENCH_r11 died rc=124 with NOTHING
-    // written because the full corpus + probe overran the driver's
-    // timeout and the JSON only landed at the end). The deadline is
-    // consulted before every individual run; whatever samples exist
-    // when it trips are summarized and persisted.
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1400").toDouble
-    val deadlineNanos = System.nanoTime() + (budgetS * 1e9).toLong
-    val outOfBudget = () => System.nanoTime() > deadlineNanos
+    type Runs = collection.mutable.LinkedHashMap[String, Vector[Run]]
+    /** One section's warmup and measurement, the same path for the corpus
+      * and the probe: each query's warmup (JIT + codegen +
+      * shuffle-service warm) seeds `measureWith`, and every run lands in
+      * `runs` in the order taken. A failed warmup is not kept, as
+      * BenchCore drops it from the samples, so a query's runs line up
+      * with its samples. Cache cleared per run so persists don't
+      * accumulate. Deadline-gated PER QUERY (a takeWhile over the strict
+      * Seq would evaluate every predicate before any warmup ran). Returns
+      * the measurement and the warmup walls.
+      */
+    def section[R](qs: Seq[(String, Query)], dir: String, runs: Runs,
+        afterRun: () => Unit)(measureWith: (String => Double, Map[String, Double]) => R)
+        : (R, Map[String, Double]) = {
+      val fns = qs.toMap
+      def take(name: String, keep: Run => Boolean): Double = {
+        val r = runOnce(fns(name), dir)
+        spark.catalog.clearCache()
+        if (keep(r)) runs(name) = runs.getOrElse(name, Vector.empty) :+ r
+        afterRun()
+        r.wall
+      }
+      val warm = qs.flatMap { case (name, _) =>
+        if (outOfBudget()) None else Some(name -> take(name, _.ok))
+      }.toMap
+      (measureWith(take(_, _ => true), warm), warm)
+    }
 
-    // Incremental persistence: after EVERY sample, rewrite the output
-    // JSON with min-so-far per query (marked "partial":true), so a
-    // driver-side kill costs only the tail, never the whole artifact.
-    val out = java.nio.file.Paths.get("target", "bench_full.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    val samplesSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    java.nio.file.Files.createDirectories(out.toAbsolutePath.getParent)
+    val corpus = new Runs
+    def runsOf(n: String): Vector[Run] = corpus.getOrElse(n, Vector.empty)
     def persistPartial(): Unit = {
-      val qs = jobj(samplesSoFar.toSeq.collect { case (n, ss) if ss.exists(_ >= 0) =>
-        n -> ss.filter(_ >= 0).min.toString
-      })
+      val qs = jobj(corpus.toSeq.flatMap { case (n, rs) =>
+        minRun(rs).map(r => n -> r.wall.toString) })
       val partial = jobj(Seq("metric" -> jstr("total"), "value" -> "-1",
         "unit" -> jstr("sec"), "partial" -> "true", "queries" -> qs,
         "sf" -> jstr(sfDir)))
       java.nio.file.Files.write(out, partial.getBytes("UTF-8"))
     }
 
-    // Warmup pass (JIT + codegen + shuffle-service warm; cache cleared
-    // per query so persists don't accumulate). The times feed into
-    // measure() as each query's first sample — min-of-3 at the cost of
-    // two timed passes. Deadline-gated PER QUERY (a takeWhile over the
-    // strict Seq would evaluate every predicate before any warmup ran
-    // and then run them all ungated).
-    // CPU samples, positionally aligned with each query's wall-sample
-    // list as BenchCore.measure assembles it (valid seed first, then
-    // timed passes and reruns) — a FAILED warmup is skipped here
-    // exactly as measure() drops it from the sample list.
-    val cpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    // Task-metric CPU, same positional alignment as cpuSoFar (see
-    // TaskMetricsProbe: the process clock and the task clock diverge
-    // exactly when the master forks executors).
-    val taskCpuSoFar = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    // Classes Janino compiled per pass, same positional alignment: a
-    // warm pass that still compiles means the codegen cache missed.
-    val compilesSoFar = collection.mutable.LinkedHashMap[String, Vector[Long]]()
-      .withDefaultValue(Vector.empty)
-    val multiUse = collection.mutable.LinkedHashMap[String, Boolean]()
-      .withDefaultValue(false)
-    val unpinned = collection.mutable.LinkedHashMap[String, Seq[String]]()
-    // queries whose warmup produced a valid seed sample — their cpu
-    // vector starts with the seed, so race analysis drops slot 0;
-    // a failed-warmup query's vector holds timed passes only
-    val seeded = collection.mutable.Set[String]()
-    // plan diagnostics refresh on EVERY successful pass (a query whose
-    // warmup failed would otherwise never surface in cpu_race_flags /
-    // unpinned_caches no matter how its timed passes behave)
-    def recordDiagnostics(name: String): Unit = {
-      multiUse(name) = lastMultiUseCache
-      if (lastUnpinned.nonEmpty) unpinned(name) = lastUnpinned
-    }
-    val warm = queries.flatMap { case (name, fn) =>
-      if (outOfBudget()) None
-      else {
-        val t = runOnce(fn); spark.catalog.clearCache()
-        samplesSoFar(name) = Vector(t); persistPartial()
-        if (t >= 0) {
-          seeded += name
-          cpuSoFar(name) = Vector(lastRunCpuS)
-          taskCpuSoFar(name) = Vector(lastRunTaskCpuS)
-          compilesSoFar(name) = Vector(lastRunCompiles)
-          recordDiagnostics(name)
-        }
-        Some(name -> t)
-      }
-    }.toMap
-
     // Timed passes keep the per-query minimum (robust against
     // transient co-tenant load and GC pauses; observed swings >40%
     // between whole runs on this box), and BenchCore re-measures any
     // query whose pass spread exceeds 3x its min — so a future
     // regression flag must survive a clean re-measure before anyone
-    // bisects it.
-    val fns = queries.toMap
-    def timedRun(name: String): Double = {
-      val sec = runOnce(fns(name))
-      spark.catalog.clearCache()
-      samplesSoFar(name) = samplesSoFar.getOrElse(name, Vector.empty) :+ sec
-      cpuSoFar(name) = cpuSoFar(name) :+ lastRunCpuS
-      taskCpuSoFar(name) = taskCpuSoFar(name) :+ lastRunTaskCpuS
-      compilesSoFar(name) = compilesSoFar(name) :+ lastRunCompiles
-      if (sec >= 0) recordDiagnostics(name)
-      persistPartial()
-      sec
-    }
-    // quickThresholdS: a query whose warmup came in sub-0.3 s takes one
-    // timed pass, not two — it cannot move the 2x headline bar, and the
-    // saved wall time is exactly the headroom the sf1 probe below needs
-    // to never again be budget-truncated into a noisy artifact (r13).
-    val measured = BenchCore.measure(queries.map(_._1), timedRun,
-      seed = warm, outOfBudget = outOfBudget, quickThresholdS = 0.3)
-    val results = queries.map { case (name, _) => name -> measured(name).min }
+    // bisects it. quickThresholdS: a query whose warmup came in sub-0.3
+    // s takes one timed pass, not two — it cannot move the 2x headline
+    // bar, and the saved wall time is exactly the headroom the sf1
+    // probe needs to never again be budget-truncated into a noisy
+    // artifact (r13).
+    val names = queries.map(_._1)
+    val (measured, warm) = section(queries, sfDir, corpus, () => persistPartial())(
+      (run, seed) => BenchCore.measure(names, run, seed = seed,
+        outOfBudget = outOfBudget, quickThresholdS = 0.3))
+    val results = names.map(name => name -> measured(name).min)
 
     // Value maps carry only MEASURED entries (the probe section's
     // rule, applied to the corpus too): a query whose every run
@@ -293,7 +282,6 @@ object Bench {
     // including failed (-1) ones, on purpose.
     def measuredOk(k: String): Boolean =
       !measured(k).truncated && measured(k).min >= 0
-    val names = queries.map(_._1)
     // one JSON map over the names `keep` admits, in query order
     def perQuery(keep: String => Boolean)(value: String => String): String =
       jobj(names.filter(keep).map(n => n -> value(n)))
@@ -307,117 +295,68 @@ object Bench {
     val reruns = perQuery(measured(_).reruns > 0)(n => measured(n).reruns.toString)
     val total = results.map(_._2).filter(_ >= 0).sum
 
-    // 10x scale-probe section: when the sf1 dataset exists (generated
-    // by tools/gen_sf1.py into probe_data/sf1 — NOT under target/,
-    // which sbt clean wipes) and this run isn't already at sf1,
-    // re-bench the heavy subset there so every bench JSON carries a
-    // second scale point — a superlinear plan shows up as a ratio far
-    // above the 10x input growth instead of hiding until an audit.
-    // Skipped for filtered (arg-driven A/B) runs.
-    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "probe_data/sf1")
-    // A renamed/removed query must fail loudly, not silently shrink the
-    // probe (BenchSpec enforces the same invariant at test time).
-    val probe = SparkEntry.select(probeNames)
-    def budgetLeftS: Double = (deadlineNanos - System.nanoTime()) / 1e9
-    val sf1Section =
-      if (args.nonEmpty || outOfBudget() ||
-          !new java.io.File(sf1Dir, "documents.parquet").exists() ||
-          new java.io.File(sfDir).getCanonicalPath ==
-            new java.io.File(sf1Dir).getCanonicalPath) None
-      else {
-        val budgetAtStart = budgetLeftS
-        // Probe warmups seed the probe measure too, and the SAME
-        // deadline governs every probe run — the probe is a ratio
-        // check, so a budget-truncated probe (fewer entries) is still
-        // useful where a blown driver timeout is not. Gated per entry
-        // (not takeWhile: on a strict Seq the predicates all evaluate
-        // before the first warmup runs).
-        val pCpu = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-          .withDefaultValue(Vector.empty)
-        val pTaskCpu = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-          .withDefaultValue(Vector.empty)
-        val pWarm = probe.flatMap { case (name, fn) =>
-          if (outOfBudget()) None
-          else {
-            val t = runOnce(fn, sf1Dir); spark.catalog.clearCache()
-            if (t >= 0) {
-              pCpu(name) = Vector(lastRunCpuS)
-              pTaskCpu(name) = Vector(lastRunTaskCpuS)
-            }
-            Some(name -> t)
-          }
-        }.toMap
-        val pFns = probe.toMap
-        def probeRun(name: String): Double = {
-          val sec = runOnce(pFns(name), sf1Dir)
+    val sf1Section = sf1.filterNot(_ => outOfBudget()).map { case (dir, probe) =>
+      val budgetAtStart = budgetLeftS
+      // Probe warmups seed the probe measure too, and the SAME deadline
+      // governs every probe run — the probe is a ratio check, so a
+      // budget-truncated probe (fewer entries) is still useful where a
+      // blown driver timeout is not. Warmup + 1 timed pass per entry;
+      // any entry whose best still exceeds 10x its same-run corpus min
+      // gets confirmation passes (BenchCore.probeMeasure) — a
+      // superlinear number in this artifact has survived
+      // re-measurement, and every sample, spread and pass count is
+      // persisted so a reader can tell box noise from plan drift (the
+      // r13 40.5x lesson).
+      val probeRuns = new Runs
+      val (pMeasured, _) = section(probe, dir, probeRuns, () => ())((run, seed) =>
+        BenchCore.probeMeasure(probe.map(_._1), run, baseline = results.toMap,
+          ratioAlarm = 10.0, outOfBudget = outOfBudget, seed = seed))
+      // Output-row count per entry (one count() job each, budget-
+      // gated): a wall ratio alone cannot distinguish "superlinear
+      // plan" from "the OUTPUT grew superlinearly" — q88's standing
+      // 3.2x is pair-output growth, and cost-per-output-row is the
+      // machine-readable way the artifact says so instead of a prose
+      // re-explanation each round.
+      val pRows = probe.flatMap { case (name, fn) =>
+        if (outOfBudget()) None
+        else {
+          val n = try fn(spark, dir).count() catch { case _: Throwable => -1L }
           spark.catalog.clearCache()
-          pCpu(name) = pCpu(name) :+ lastRunCpuS
-          pTaskCpu(name) = pTaskCpu(name) :+ lastRunTaskCpuS
-          sec
+          if (n >= 0) Some(name -> n) else None
         }
-        // warmup + 1 timed pass per entry; any entry whose best still
-        // exceeds 10x its same-run sf0.1 min gets confirmation passes
-        // (BenchCore.probeMeasure) — a superlinear number in this
-        // artifact has survived re-measurement, and every sample,
-        // spread and pass count is persisted so a reader can tell box
-        // noise from plan drift (the r13 40.5x lesson).
-        val pMeasured = BenchCore.probeMeasure(probe.map(_._1), probeRun,
-          baseline = results.toMap, ratioAlarm = 10.0,
-          outOfBudget = outOfBudget, seed = pWarm)
-        // Output-row count per entry (one count() job each, budget-
-        // gated): a wall ratio alone cannot distinguish "superlinear
-        // plan" from "the OUTPUT grew superlinearly" — q88's standing
-        // 3.2x is pair-output growth, and cost-per-output-row is the
-        // machine-readable way the artifact says so instead of a prose
-        // re-explanation each round.
-        val pRows = probe.flatMap { case (name, fn) =>
-          if (outOfBudget()) None
-          else {
-            val n = try fn(spark, sf1Dir).count() catch { case _: Throwable => -1L }
-            spark.catalog.clearCache()
-            if (n >= 0) Some(name -> n) else None
-          }
-        }.toMap
-        // Value fields carry only MEASURED entries: a probe whose
-        // every run failed (min = -1) is named in "failed", a probe
-        // the budget cut before any sample in "truncated" — neither
-        // may leak a -1 into the queries/ratio maps unmarked.
-        def pOk(n: String): Boolean =
-          !pMeasured(n).truncated && pMeasured(n).min >= 0
-        def pField(f: (String, BenchCore.ProbeResult) => String): String =
-          jobj(probe.collect { case (n, _) if pOk(n) => n -> f(n, pMeasured(n)) })
-        val pq = pField((_, r) => r.min.toString)
-        val pRatio = pField((_, r) => jnum(r.ratio, 2))
-        // "spread_all", not "spread": unlike the corpus section's
-        // spread (timed passes only, seed excluded), the probe spread
-        // includes the seeded warmup — the probe runs in a warm JVM,
-        // so its seed is a real sample; the name records the
-        // difference in semantics.
-        val pSpread = pField((_, r) => jnum(r.spread, 3))
-        val pPasses = pField((_, r) => r.samples.size.toString)
-        val pSamples = pField((_, r) => jarr(r.samples.map(_.toString)))
-        val pCpuOfMin = pField((n, r) =>
-          jnum(BenchCore.cpuOfMin(r.samples, pCpu(n)), 3))
-        val pTaskCpuOfMin = pField((n, r) =>
-          jnum(BenchCore.cpuOfMin(r.samples, pTaskCpu(n)), 3))
-        val pTrunc = jarr(probe.collect {
-          case (n, _) if pMeasured(n).truncated => jstr(n) })
-        val pFailed = jarr(probe.collect {
-          case (n, _) if !pMeasured(n).truncated && pMeasured(n).min < 0 => jstr(n) })
-        // rows_out obeys the same measured-entries invariant as every
-        // other value field: a probe whose timed runs all failed or
-        // were truncated must not surface a successful count() as if
-        // it had been measured.
-        val pRowsJson = jobj(probe.collect {
-          case (n, _) if pRows.contains(n) && pOk(n) => n -> pRows(n).toString })
-        Some(jobj(Seq("dir" -> jstr(sf1Dir),
-          "budget_left_start_s" -> jnum(budgetAtStart, 1),
-          "queries" -> pq, "ratio" -> pRatio, "spread_all" -> pSpread,
-          "passes" -> pPasses, "samples" -> pSamples, "cpu" -> pCpuOfMin,
-          "cpu_task" -> pTaskCpuOfMin, "rows_out" -> pRowsJson,
-          "truncated" -> pTrunc, "failed" -> pFailed,
-          "budget_left_end_s" -> jnum(budgetLeftS, 1))))
-      }
+      }.toMap
+      // Value fields carry only MEASURED entries: a probe whose
+      // every run failed (min = -1) is named in "failed", a probe
+      // the budget cut before any sample in "truncated" — neither
+      // may leak a -1 into the queries/ratio maps unmarked.
+      def pOk(n: String): Boolean =
+        !pMeasured(n).truncated && pMeasured(n).min >= 0
+      def pField(f: (String, BenchCore.ProbeResult) => String): String =
+        jobj(probe.collect { case (n, _) if pOk(n) => n -> f(n, pMeasured(n)) })
+      def pMin(n: String): Option[Run] = minRun(probeRuns.getOrElse(n, Vector.empty))
+      // "spread_all", not "spread": unlike the corpus section's
+      // spread (timed passes only, seed excluded), the probe spread
+      // includes the seeded warmup — the probe runs in a warm JVM,
+      // so its seed is a real sample; the name records the
+      // difference in semantics. rows_out obeys the same
+      // measured-entries invariant as every other value field.
+      jobj(Seq("dir" -> jstr(dir),
+        "budget_left_start_s" -> jnum(budgetAtStart, 1),
+        "queries" -> pField((_, r) => r.min.toString),
+        "ratio" -> pField((_, r) => jnum(r.ratio, 2)),
+        "spread_all" -> pField((_, r) => jnum(r.spread, 3)),
+        "passes" -> pField((_, r) => r.samples.size.toString),
+        "samples" -> pField((_, r) => jarr(r.samples.map(_.toString))),
+        "cpu" -> pField((n, _) => jnum(pMin(n).fold(-1.0)(_.cpu), 3)),
+        "cpu_task" -> pField((n, _) => jnum(pMin(n).fold(-1.0)(_.taskCpu), 3)),
+        "rows_out" -> jobj(probe.collect {
+          case (n, _) if pRows.contains(n) && pOk(n) => n -> pRows(n).toString }),
+        "truncated" -> jarr(probe.collect {
+          case (n, _) if pMeasured(n).truncated => jstr(n) }),
+        "failed" -> jarr(probe.collect {
+          case (n, _) if !pMeasured(n).truncated && pMeasured(n).min < 0 => jstr(n) }),
+        "budget_left_end_s" -> jnum(budgetLeftS, 1)))
+    }
 
     // Budget-truncated queries (no samples at all) are UNMEASURED, not
     // broken — named separately so a -1 never masquerades as a failure.
@@ -426,74 +365,72 @@ object Bench {
     // from the value maps above, named here.
     val failed = jarr(names.filter(n =>
       !measured(n).truncated && measured(n).min < 0).map(jstr))
-    // Per-query process-CPU seconds of the pass that produced the min
+    // Per-query process-CPU seconds of the run that produced the min
     // (cpu ≈ wall × busy-cores → plan compute; cpu ≪ that → box/IO),
-    // plus every per-pass CPU sample aligned with "passes".
-    val cpuMin = perQuery(measuredOk)(n =>
-      jnum(BenchCore.cpuOfMin(measured(n).samples, cpuSoFar(n)), 3))
-    val cpuPasses = perQuery(_ => true)(n => jarr(cpuSoFar(n).map(jnum(_, 3))))
-    // Task-metric CPU of the min pass + every pass, aligned exactly
-    // like cpu/cpu_passes. On local[n] cpu_task ≈ cpu minus harness
-    // threads; under a forked-executor master cpu_task is the ONLY
-    // valid plan-CPU attribution (cpu collapses to driver overhead).
-    val cpuTaskMin = perQuery(measuredOk)(n =>
-      jnum(BenchCore.cpuOfMin(measured(n).samples, taskCpuSoFar(n)), 3))
+    // plus every run's CPU in "passes" order. cpu_task/cpu_task_passes
+    // are the same from the task metrics: on local[n] cpu_task ≈ cpu
+    // minus harness threads; under a forked-executor master cpu_task
+    // is the ONLY valid plan-CPU attribution (cpu collapses to driver
+    // overhead).
+    val cpuMin = perQuery(measuredOk)(n => jnum(minRun(runsOf(n)).fold(-1.0)(_.cpu), 3))
+    val cpuPasses = perQuery(_ => true)(n => jarr(runsOf(n).map(r => jnum(r.cpu, 3))))
+    val cpuTaskMin =
+      perQuery(measuredOk)(n => jnum(minRun(runsOf(n)).fold(-1.0)(_.taskCpu), 3))
     val cpuTaskPasses =
-      perQuery(_ => true)(n => jarr(taskCpuSoFar(n).map(jnum(_, 3))))
-    // Generated classes compiled in each pass, aligned like
-    // cpu_task_passes (-1 for a failed run). The count is this JVM's
-    // (CodegenMetrics is per JVM): complete on local[n], driver-side
-    // compiles only under a forked-executor master.
+      perQuery(_ => true)(n => jarr(runsOf(n).map(r => jnum(r.taskCpu, 3))))
+    // Generated classes compiled in each run (-1 for a failed run). The
+    // count is this JVM's (CodegenMetrics is per JVM): complete on
+    // local[n], driver-side compiles only under a forked-executor
+    // master.
     val compilePasses =
-      perQuery(_ => true)(n => jarr(compilesSoFar(n).map(_.toString)))
+      perQuery(_ => true)(n => jarr(runsOf(n).map(_.compiles.toString)))
     // The q84-class race, machine-visible (r16 verdict #4): queries
-    // whose warm CPU passes spread >1.5x (gap >5s) WITH a
-    // multi-consumer cache in the plan. Since pinCaches runs in every
-    // timed pass, a firing here is box contention or a pinning gap —
-    // the shortlist for an isolated re-measure. "unpinned_caches"
-    // records which query plans REQUIRED pinning (pure cores whose
-    // caches pinCaches built); RaceDisciplineSpec asserts the pinned
-    // plans are race-free for every query. BOTH cpu series feed the
-    // flag: under a forked-executor master the process clock collapses
-    // to driver overhead (a race there would be invisible to it), so
-    // the task-metric series carries the detection; in local mode the
+    // whose warm CPU passes (the seeded warmup dropped) spread >1.5x
+    // (gap >5s) WITH a multi-consumer cache in the plan of their last
+    // successful run. Since pinCaches runs in every timed pass, a
+    // firing here is box contention or a pinning gap — the shortlist
+    // for an isolated re-measure. "unpinned_caches" records which
+    // query plans REQUIRED pinning (pure cores whose caches pinCaches
+    // built); RaceDisciplineSpec asserts the pinned plans are
+    // race-free for every query. BOTH cpu series feed the flag: under
+    // a forked-executor master the process clock collapses to driver
+    // overhead (a race there would be invisible to it), so the
+    // task-metric series carries the detection; in local mode the
     // process series additionally sees driver-side compute.
-    val raceFlags = jarr(names.filter(n =>
-      Seq(cpuSoFar(n), taskCpuSoFar(n)).exists(series =>
-        BenchCore.cpuRaceFlag(
-          if (seeded(n)) series.drop(1) else series, multiUse(n)))).map(jstr))
-    val unpinnedJson = jobj(unpinned.map { case (n, caches) =>
-      n -> jarr(caches.map(jstr)) })
+    val raceFlags = jarr(names.filter { n =>
+      val rs = runsOf(n)
+      val multiUse = rs.filter(_.ok).lastOption.exists(_.multiUse)
+      Seq(rs.map(_.cpu), rs.map(_.taskCpu)).exists(series => BenchCore.cpuRaceFlag(
+        if (warm.get(n).exists(_ >= 0)) series.drop(1) else series, multiUse))
+    }.map(jstr))
+    val unpinnedJson = jobj(names.flatMap(n =>
+      runsOf(n).filter(_.ok).map(_.unpinned).filter(_.nonEmpty).lastOption
+        .map(caches => n -> jarr(caches.map(jstr)))))
     // Whole-run shuffle transport totals (all passes, warmups and the
     // probe included): remote vs local read bytes split by the
     // BlockManager locality of the fetch. remote_mb > 0 is the
     // machine-readable attestation that this run moved shuffle blocks
     // between executor JVMs over the wire — impossible on local[n],
     // expected under local-cluster.
-    TaskMetricsProbe.drain(spark)
-    val tmTotal = taskMetrics.snapshot()
+    val whole = ledger.snapshot() - start
     val shuffle = jobj(Seq(
-      "remote_mb" -> jnum(tmTotal.remoteShuffleBytes / 1048576.0, 1),
-      "local_mb" -> jnum(tmTotal.localShuffleBytes / 1048576.0, 1),
-      "tasks" -> tmTotal.tasks.toString))
+      "remote_mb" -> jnum(whole.remoteShuffleBytes / 1048576.0, 1),
+      "local_mb" -> jnum(whole.localShuffleBytes / 1048576.0, 1),
+      "tasks" -> whole.tasksEnded.toString))
     // reruns, truncated, failed, cpu_race_flags and unpinned_caches
     // appear only when non-empty
     def ifAny(key: String, v: String): Option[(String, String)] =
       if (v == "{}" || v == "[]") None else Some(key -> v)
     val json = jobj(Seq("metric" -> jstr("total"), "value" -> total.toString,
-      "unit" -> jstr("sec"), "master" -> jstr(master), "queries" -> qs,
-      "passes" -> ps, "spread" -> spreads, "cpu" -> cpuMin,
+      "unit" -> jstr("sec"), "master" -> jstr(spark.sparkContext.master),
+      "queries" -> qs, "passes" -> ps, "spread" -> spreads, "cpu" -> cpuMin,
       "cpu_passes" -> cpuPasses, "cpu_task" -> cpuTaskMin,
       "cpu_task_passes" -> cpuTaskPasses, "codegen_compiles" -> compilePasses) ++
       ifAny("reruns", reruns) ++ ifAny("truncated", truncated) ++
       ifAny("failed", failed) ++ ifAny("cpu_race_flags", raceFlags) ++
       ifAny("unpinned_caches", unpinnedJson) ++
       Seq("shuffle" -> shuffle, "sf" -> jstr(sfDir)) ++ sf1Section.map("sf1" -> _))
-    println(json)
-    // The console line can be lost to log-tail truncation (one line per
-    // 114 queries is long); persist the identical JSON where the driver
-    // and later rounds can always read it.
     java.nio.file.Files.write(out, json.getBytes("UTF-8"))
-    SessionDefaults.stopAndReap(spark)
+    json
   }
 }

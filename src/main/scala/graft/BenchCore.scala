@@ -102,22 +102,6 @@ object BenchCore {
       valid.max / valid.min > ratio && valid.max - valid.min > floorS
   }
 
-  /** The CPU sample paired with the minimum VALID wall sample — the
-    * pass the headline min came from. Pairs are positional; if THAT
-    * pass's CPU sample is missing or invalid (the recording loop can
-    * be cut short by a budget trip), the answer is -1 (unattributable)
-    * — substituting a different pass's CPU would silently mislabel the
-    * artifact, attributing the min wall to compute it didn't do.
-    */
-  def cpuOfMin(walls: Seq[Double], cpus: Seq[Double]): Double = {
-    val validWalls = walls.zipWithIndex.filter(_._1 >= 0)
-    if (validWalls.isEmpty) -1.0
-    else {
-      val minIdx = validWalls.minBy(_._1)._2
-      cpus.lift(minIdx).filter(_ >= 0).getOrElse(-1.0)
-    }
-  }
-
   /** One query's measurement: best wall seconds, raw-pass spread
     * (max/min of the timed passes, excluding any seeded warmup sample,
     * before any rerun; 1.0 when all passes agree or fewer than two

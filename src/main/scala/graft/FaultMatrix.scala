@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerExecutorAdded, SparkListenerExecutorRemoved, SparkListenerSpeculativeTaskSubmitted, SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import BenchCore.{jarr, jnum, jobj, jstr}
@@ -41,9 +40,10 @@ import BenchCore.{jarr, jnum, jobj, jstr}
   * Every scenario guards against vacuous passes (the
   * ThetaTransportSpec rule): the fault must demonstrably land while
   * the work is in flight, or the pass is retried (up to three times)
-  * or fails. Evidence comes from one listener ([[Fleet]]) whose
-  * counters are reset and read only behind a listener-bus drain, so
-  * a previous pass's late events can never count as this pass's.
+  * or fails. Evidence comes from the session's [[Ledger]]: each pass
+  * reads a window from a snapshot taken at its start, and snapshots
+  * drain the listener bus, so a previous pass's late events can never
+  * count as this pass's.
   * Each scenario prints one JSON line per query plus a summary line
   * (or a single line), and the run exits 1 unless it attested.
   */
@@ -113,71 +113,6 @@ object FaultMatrix {
     (h, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Fleet counters from the listener bus: tasks started, ended, failed
-    * and killed, executors added and removed, stage re-attempts,
-    * `shuffle_`/`rdd_` block updates, and speculatable marks and
-    * speculative launches. `rdd_` updates count only after
-    * [[rddFence]], so plain caching before a decommission signal is
-    * not mistaken for migration.
-    */
-  private final class Fleet extends SparkListener {
-    val tasksStarted, tasksEnded, tasksFailed, tasksKilled = new AtomicInteger
-    val executorsAdded, executorsRemoved, stageReattempts = new AtomicInteger
-    val shuffleBlocks, rddBlocks = new AtomicInteger
-    val speculatableMarked, speculativeLaunched = new AtomicInteger
-    @volatile var rddFence: Long = Long.MaxValue
-
-    def inFlight: Int = tasksStarted.get() - tasksEnded.get()
-
-    /** Zero every counter behind the listener-bus barrier: late events
-      * of the previous pass must not count as the next pass's evidence.
-      */
-    def reset(spark: SparkSession): Unit = {
-      TaskMetricsProbe.drain(spark)
-      Seq(tasksStarted, tasksEnded, tasksFailed, tasksKilled, executorsAdded,
-        executorsRemoved, stageReattempts, shuffleBlocks, rddBlocks,
-        speculatableMarked, speculativeLaunched).foreach(_.set(0))
-      rddFence = Long.MaxValue
-    }
-
-    override def onTaskStart(e: SparkListenerTaskStart): Unit = {
-      tasksStarted.incrementAndGet()
-      if (e.taskInfo.speculative) speculativeLaunched.incrementAndGet()
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      tasksEnded.incrementAndGet()
-      if (e.reason != org.apache.spark.Success) tasksFailed.incrementAndGet()
-      if (e.reason.isInstanceOf[org.apache.spark.TaskKilled]) tasksKilled.incrementAndGet()
-    }
-    override def onExecutorAdded(e: SparkListenerExecutorAdded): Unit =
-      executorsAdded.incrementAndGet()
-    override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =
-      executorsRemoved.incrementAndGet()
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      if (e.stageInfo.attemptNumber() > 0) stageReattempts.incrementAndGet()
-    override def onSpeculativeTaskSubmitted(e: SparkListenerSpeculativeTaskSubmitted): Unit =
-      speculatableMarked.incrementAndGet()
-    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
-      val id = e.blockUpdatedInfo.blockId.name
-      // shuffle_* through the master = decommission migration, the only
-      // writer of that path — the LOAD-BEARING evidence. rdd_* after
-      // the signal = cached blocks re-homed by the decommissioner;
-      // plain caching posts the same event class, so this count is
-      // time-fenced on listener PROCESSING time — an approximation
-      // (bus lag can leak a few pre-signal cache events past the
-      // fence), reported as color, never guarded on.
-      if (id.startsWith("shuffle_")) shuffleBlocks.incrementAndGet()
-      else if (id.startsWith("rdd_") && System.nanoTime() > rddFence)
-        rddBlocks.incrementAndGet()
-    }
-  }
-
-  private def installFleet(spark: SparkSession): Fleet = {
-    val f = new Fleet
-    spark.sparkContext.addSparkListener(f)
-    f
-  }
-
   /** Worker (= executor JVM) count encoded in a local-cluster URL. */
   private def fleetSize(master: String): Int =
     master.drop("local-cluster[".length).takeWhile(_ != ',').toInt
@@ -237,8 +172,8 @@ object FaultMatrix {
     (last, attempts)
   }
 
-  private final case class KillPass(equal: Boolean, pid: Long, removed: Int,
-      failed: Int, reatt: Int, wall: Double) {
+  private final case class KillPass(equal: Boolean, pid: Long, removed: Long,
+      failed: Long, reatt: Long, wall: Double) {
     // two-factor: the kill registered (removal event, grace-waited)
     // AND left in-run task evidence — a kill landing after the job
     // finished removes an executor with zero failed tasks
@@ -255,17 +190,17 @@ object FaultMatrix {
     val n = fleetSize(r.master)
     val preexisting = executorPids().toSet
     val spark = r.session()
-    val fleet = installFleet(spark)
+    val ledger = Ledger.of(spark)
     waitForFleet(preexisting, n)
     val results = r.queries.map { case (name, fn) =>
       spark.catalog.clearCache()
       val (healthy, wallHealthy) = timedHash(spark, fn, r.sfDir)
       spark.catalog.clearCache()
       val (p, attempts) = untilLanded[KillPass](_.landed) { _ =>
-        fleet.reset(spark)
+        val start = ledger.snapshot()
         val killed = new AtomicLong(-1L)
         val killer = daemon(s"chaos-killer-$name") {
-          awaitUntil(30, 5)(fleet.inFlight >= 2 * n)
+          awaitUntil(30, 5)((ledger.live() - start).inFlight >= 2 * n)
           fleetPids(preexisting).headOption.foreach { pid =>
             ProcessHandle.of(pid).ifPresent { h =>
               if (h.destroyForcibly()) killed.set(pid)
@@ -277,16 +212,15 @@ object FaultMatrix {
         // drain, THEN read: in-run failure events may still be queued
         // at collect return; a post-job kill generates none, so the
         // drained counters are exact in-run evidence either way
-        TaskMetricsProbe.drain(spark)
-        val failed = fleet.tasksFailed.get()
-        val reatt = fleet.stageReattempts.get()
+        val run = ledger.snapshot() - start
         // the master's executor-removed event is asynchronous — a
         // kill in the job's last second reports a beat after collect
-        awaitUntil(15, 200)(killed.get() <= 0 || fleet.executorsRemoved.get() > 0)
+        def removed = (ledger.live() - start).executorsRemoved
+        awaitUntil(15, 200)(killed.get() <= 0 || removed > 0)
         spark.catalog.clearCache()
         waitForFleet(preexisting, n) // re-provision
-        KillPass(healthy == chaos, killed.get(), fleet.executorsRemoved.get(),
-          failed, reatt, wall)
+        KillPass(healthy == chaos, killed.get(), removed, run.tasksFailed,
+          run.stageReattempts, wall)
       }
       println(jobj(Seq("query" -> jstr(name), "equal" -> p.equal.toString,
         "killed_pid" -> p.pid.toString, "executors_removed" -> p.removed.toString,
@@ -304,8 +238,8 @@ object FaultMatrix {
     failed.isEmpty
   }
 
-  private final case class DecomPass(equal: Boolean, pid: Long, removed: Int,
-      migrated: Int, rddMig: Int, failed: Int, reatt: Int, inFlight: Boolean,
+  private final case class DecomPass(equal: Boolean, pid: Long, removed: Long,
+      migrated: Long, rddMig: Long, failed: Long, reatt: Long, inFlight: Boolean,
       healthyHash: String, wallHealthy: Double, wall: Double) {
     def landed: Boolean = pid > 0 && inFlight && removed > 0 && migrated > 0 &&
       failed == 0 && reatt == 0
@@ -345,25 +279,32 @@ object FaultMatrix {
           "spark.storage.decommission.rddBlocks.enabled" -> "true",
           "spark.storage.decommission.shuffleBlocks.enabled" -> "true"))
         try {
-          val fleet = installFleet(spark)
+          val ledger = Ledger.of(spark)
           waitForFleet(preexisting, n)
           // the reference hash is deterministic and session-independent:
           // a retry re-paying the full healthy run attests nothing extra
           val (healthy, wallHealthy) = prev.map(p => (p.healthyHash, p.wallHealthy))
             .getOrElse(timedHash(spark, fn, r.sfDir))
           spark.catalog.clearCache()
-          fleet.reset(spark)
+          val start = ledger.snapshot()
           val victim = new AtomicLong(-1L)
           val delivered = new AtomicLong(Long.MaxValue)
+          val atSignal = new AtomicReference[Ledger.Counts]()
           val drainer = daemon(s"decommissioner-$name") {
             // busy fleet AND at least one finished wave: the victim must
             // plausibly HOLD map outputs for migration to attest anything
-            awaitUntil(30, 5)(fleet.inFlight >= 2 * n && fleet.tasksEnded.get() >= 2 * n)
+            awaitUntil(30, 5) {
+              val c = ledger.live() - start
+              c.inFlight >= 2 * n && c.tasksEnded >= 2 * n
+            }
             fleetPids(preexisting).headOption.foreach { pid =>
-              // rdd-event fence opens BEFORE the signal can possibly
-              // deliver (counting wants the earliest bound) …
-              fleet.rddFence = System.nanoTime()
+              // `rdd_` blocks count from a snapshot taken BEFORE the
+              // signal can possibly deliver (counting wants the earliest
+              // bound): plain caching posts the same event class, and
+              // the drained snapshot holds every update posted before it …
+              val fence = ledger.snapshot()
               if (sigpwr(pid)) {
+                atSignal.set(fence)
                 victim.set(pid)
                 // … but the IN-FLIGHT check wants the latest bound:
                 // kill(2) delivers during the kill process's syscall,
@@ -372,7 +313,7 @@ object FaultMatrix {
                 // collectEnd` can then never hold for a signal that
                 // actually landed after the job finished
                 delivered.set(System.nanoTime())
-              } else fleet.rddFence = Long.MaxValue // a failed kill fences nothing
+              }
             }
           }
           val (decom, wall) = timedHash(spark, fn, r.sfDir)
@@ -381,19 +322,17 @@ object FaultMatrix {
           // a signal after collect returned drains leftover blocks of a
           // FINISHED job and attests nothing (retried)
           val inFlight = victim.get() > 0 && delivered.get() < collectEnd
-          TaskMetricsProbe.drain(spark)
-          val failed = fleet.tasksFailed.get()
-          val reatt = fleet.stageReattempts.get()
+          val run = ledger.snapshot() - start
           // the drain ends in a real executor exit — grace-wait for the
           // master's asynchronous removal event, and only THEN read the
           // migration counters: the block handoff finishes before the
           // executor exits, so reading at collect-return would
           // undercount a drain still in flight
-          awaitUntil(30, 200)(victim.get() <= 0 || fleet.executorsRemoved.get() > 0)
-          TaskMetricsProbe.drain(spark)
-          DecomPass(healthy == decom, victim.get(), fleet.executorsRemoved.get(),
-            fleet.shuffleBlocks.get(), fleet.rddBlocks.get(), failed, reatt,
-            inFlight, healthy, wallHealthy, wall)
+          awaitUntil(30, 200)(victim.get() <= 0 || (ledger.live() - start).executorsRemoved > 0)
+          val end = ledger.snapshot()
+          DecomPass(healthy == decom, victim.get(), (end - start).executorsRemoved,
+            (end - start).shuffleBlocks, Option(atSignal.get).fold(0L)(s => (end - s).rddBlocks),
+            run.tasksFailed, run.stageReattempts, inFlight, healthy, wallHealthy, wall)
         } finally SessionDefaults.stopAndReap(spark)
       }
       println(jobj(Seq("query" -> jstr(name), "equal" -> p.equal.toString,
@@ -451,21 +390,21 @@ object FaultMatrix {
       // with the gate on NOTHING clones on a quiet box. Off = the
       // classic runtime-quantile rule.
       "spark.speculation.efficiency.enabled" -> "false"))
-    val fleet = installFleet(spark)
+    val ledger = Ledger.of(spark)
     waitForFleet(preexisting, n)
     val results = r.queries.map { case (name, fn) =>
       spark.catalog.clearCache()
-      fleet.reset(spark)
+      val start = ledger.snapshot()
       val (h, wall) = timedHash(spark, fn, r.sfDir)
-      TaskMetricsProbe.drain(spark)
+      val run = ledger.snapshot() - start
       val (refHash, refWall) = ref(name)
       val equal = h == refHash
       println(jobj(Seq("query" -> jstr(name), "equal" -> equal.toString,
-        "speculatable_marked" -> fleet.speculatableMarked.get().toString,
-        "speculative_tasks_launched" -> fleet.speculativeLaunched.get().toString,
-        "killed_tasks" -> fleet.tasksKilled.get().toString,
+        "speculatable_marked" -> run.speculatableMarked.toString,
+        "speculative_tasks_launched" -> run.speculativeLaunched.toString,
+        "killed_tasks" -> run.tasksKilled.toString,
         "wall_ref_s" -> jnum(refWall, 2), "wall_spec_s" -> jnum(wall, 2))))
-      (name, equal, fleet.speculatableMarked.get())
+      (name, equal, run.speculatableMarked)
     }
     val failed = results.collect { case (name, false, _) => name }
     val totalMarked = results.map(_._3).sum
@@ -498,8 +437,9 @@ object FaultMatrix {
     val preexisting = executorPids().toSet
     val spark = r.session()
     import spark.implicits._
-    val fleet = installFleet(spark)
+    val ledger = Ledger.of(spark)
     waitForFleet(preexisting, n)
+    val start = ledger.snapshot()
 
     val src = Files.createTempDirectory("schaos_src")
     val ckpt = Files.createTempDirectory("schaos_ckpt")
@@ -540,7 +480,7 @@ object FaultMatrix {
           if (h.destroyForcibly()) killed += 1
         }
       }
-      awaitUntil(60, 200)(fleet.executorsRemoved.get() >= killed)
+      awaitUntil(60, 200)((ledger.live() - start).executorsRemoved >= killed)
       // the master re-provisions; wait so batch 2 runs on FRESH JVMs
       waitForFleet(preexisting ++ victims, n)
 
@@ -559,7 +499,7 @@ object FaultMatrix {
     val keys = rows.map(_._1)
     val exactlyOnce = keys == keys.distinct && keys.sorted == Seq("A", "B", "C", "D")
     val dupDropped = rows.toMap.get("A").contains(1L)
-    val removed = fleet.executorsRemoved.get()
+    val removed = (ledger.snapshot() - start).executorsRemoved
     println(jobj(Seq("metric" -> jstr("stream_chaos"), "killed" -> killed.toString,
       "executors_removed" -> removed.toString, "keys" -> keys.size.toString,
       "dup_dropped" -> dupDropped.toString, "exactly_once" -> exactlyOnce.toString)))
@@ -590,7 +530,9 @@ object FaultMatrix {
       "spark.dynamicAllocation.executorIdleTimeout" -> "4s",
       "spark.dynamicAllocation.shuffleTracking.timeout" -> "8s",
       "spark.dynamicAllocation.schedulerBacklogTimeout" -> "1s"))
-    val fleet = installFleet(spark)
+    // counted from the ledger's install on this fresh context, so the
+    // initial executor's registration counts
+    val ledger = Ledger.of(spark)
 
     // 1. plan-time width gap, measured BEFORE any load ramps the fleet
     val dp0 = spark.sparkContext.defaultParallelism
@@ -604,26 +546,25 @@ object FaultMatrix {
     // ramp evidence snapshots HERE (behind the bus barrier): adds
     // counted later — the requery's own ramp — must not satisfy the
     // "scaled up during the ramp query" claim
-    TaskMetricsProbe.drain(spark)
-    val addedDuringRamp = fleet.executorsAdded.get()
+    val addedDuringRamp = ledger.snapshot().executorsAdded
     spark.catalog.clearCache()
     val steadyHash = timedHash(spark, fn, r.sfDir)._1
     spark.catalog.clearCache()
     val hashEqual = rampHash == steadyHash
 
     // 3. let the fleet decay below max, then demand work again
-    awaitUntil(45, 500)(fleet.executorsRemoved.get() > 0)
+    awaitUntil(45, 500)(ledger.live().executorsRemoved > 0)
     val requeryOk = timedHash(spark, fn, r.sfDir)._1 == steadyHash
 
-    TaskMetricsProbe.drain(spark)
+    val end = ledger.snapshot()
     val ramped = addedDuringRamp >= 2 // beyond the single initial executor
-    val decayed = fleet.executorsRemoved.get() > 0
+    val decayed = end.executorsRemoved > 0
     println(jobj(Seq("metric" -> jstr("dynalloc_probe"), "dp_at_start" -> dp0.toString,
       "compute_width" -> width.toString, "spread_partitions" -> spreadParts.toString,
       "width_pinned" -> widthPinned.toString,
       "execs_added_ramp" -> addedDuringRamp.toString,
-      "execs_added" -> fleet.executorsAdded.get().toString,
-      "execs_removed" -> fleet.executorsRemoved.get().toString,
+      "execs_added" -> end.executorsAdded.toString,
+      "execs_removed" -> end.executorsRemoved.toString,
       "ramped" -> ramped.toString, "decayed" -> decayed.toString,
       "hash_equal" -> hashEqual.toString, "requery_ok" -> requeryOk.toString)))
     SessionDefaults.stopAndReap(spark)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Ledger
+
 /** Connected components over a near-duplicate PAIR list — the step
   * between pair detection (q24/q25/q26/q34) and actual corpus dedup:
   * group transitively-linked documents into one cluster, elect the
@@ -77,22 +79,11 @@ object Components {
   def defaultLoopWidth(s: SparkSession): Int =
     math.max(8, graft.SessionDefaults.computeWidth(s) / 4)
 
-  /** Diagnostics from the most recent `minLabelComponents` call on
-    * the CALLING THREAD — probe/bench ATTRIBUTION only, not part of
-    * the result contract: whether the fast-path budget tripped into
-    * the star escalation, and how many alternating star rounds it
-    * took (-1 = the fast path converged, no escalation ran;
-    * meaningful only together with `lastEscalated`). ThreadLocal so
-    * concurrent library callers sharing the session can't
-    * cross-attribute each other's runs (r16 advice); the harness
-    * reader (ComponentsSpec) calls and reads on one thread.
+  /** The [[Ledger.DecisionKey]] value of the star escalation's jobs,
+    * as `<this>:<round>`: the ledger shows whether a call escalated
+    * and in how many rounds.
     */
-  private val lastEscalatedTL = ThreadLocal.withInitial[java.lang.Boolean](() => false)
-  private val lastStarRoundsTL = ThreadLocal.withInitial[java.lang.Integer](() => -1)
-  def lastEscalated: Boolean = lastEscalatedTL.get()
-  def lastStarRounds: Int = lastStarRoundsTL.get()
-  private def lastEscalated_=(v: Boolean): Unit = lastEscalatedTL.set(v)
-  private def lastStarRounds_=(v: Int): Unit = lastStarRoundsTL.set(v)
+  val StarEscalation = "components.star_escalation"
 
   /** Eagerly free a SUPERSEDED round's checkpoint blocks — the loop
     * discipline now shared via [[Checkpoints.free]]: without it the
@@ -123,8 +114,6 @@ object Components {
     val s = edges.sparkSession
     import s.implicits._
     val w = if (width > 0) width else defaultLoopWidth(s)
-    lastEscalated = false
-    lastStarRounds = -1
     // Mirror each pair in ONE pass over the caller's (typically
     // expensive — LSH candidate + verify) edge plan: the explode
     // emits both directions row-by-row, where a two-branch union
@@ -201,7 +190,6 @@ object Components {
       if (converged) (labels, ckpt)
       else {
         freeCheckpoint(ckpt) // fast-path labels are abandoned wholesale
-        lastEscalated = true
         val st = starComponents(s, und, w) // id-order-resistant escalation
         (st, st)
       }
@@ -220,69 +208,77 @@ object Components {
     */
   private def starComponents(s: SparkSession, und: DataFrame,
       w: Int, maxRounds: Int = 2048): DataFrame = {
-    import s.implicits._
-    // Symmetric, distinct, loop-free edge set; every round keeps this
-    // representation. dropDuplicates after the keyed repartition runs
-    // exchange-free (HashPartitioning(a) satisfies the (a,b) dedup).
-    def canon(df: DataFrame): DataFrame = df
-      .filter($"a" =!= $"b")
-      .repartition(w, $"a")
-      .dropDuplicates(Seq("a", "b"))
-    var cur = canon(und).transform(Checkpoints.stable(_))
-    var curCount = cur.count()
-    var round = 0
-    var converged = curCount == 0 // edge-less input: nothing to do
-    while (round < maxRounds && !converged) {
-      // LARGE-STAR: reducer at `a` over its full neighborhood emits
-      // (b, min(a, N(a))) for every LARGER neighbor b.
-      val mL = cur.groupBy($"a")
-        .agg(least($"a", min($"b")).as("m"))
-      val lsHalf = cur.filter($"b" > $"a").join(mL, Seq("a"))
-        .select($"b".as("x"), $"m".as("y"))
-      val ls = canon(
-        lsHalf.select($"x".as("a"), $"y".as("b"))
-          .unionByName(lsHalf.select($"y".as("a"), $"x".as("b"))))
+    // every job of the escalation names it and its round on the
+    // ledger; the output's jobs carry the final round count
+    val sc = s.sparkContext
+    val caller = sc.getLocalProperty(Ledger.DecisionKey)
+    def inRound(r: Int): Unit = sc.setLocalProperty(Ledger.DecisionKey, s"$StarEscalation:$r")
+    try {
+      import s.implicits._
+      // Symmetric, distinct, loop-free edge set; every round keeps this
+      // representation. dropDuplicates after the keyed repartition runs
+      // exchange-free (HashPartitioning(a) satisfies the (a,b) dedup).
+      def canon(df: DataFrame): DataFrame = df
+        .filter($"a" =!= $"b")
+        .repartition(w, $"a")
+        .dropDuplicates(Seq("a", "b"))
+      inRound(0)
+      var cur = canon(und).transform(Checkpoints.stable(_))
+      var curCount = cur.count()
+      var round = 0
+      var converged = curCount == 0 // edge-less input: nothing to do
+      while (round < maxRounds && !converged) {
+        inRound(round + 1)
+        // LARGE-STAR: reducer at `a` over its full neighborhood emits
+        // (b, min(a, N(a))) for every LARGER neighbor b.
+        val mL = cur.groupBy($"a")
+          .agg(least($"a", min($"b")).as("m"))
+        val lsHalf = cur.filter($"b" > $"a").join(mL, Seq("a"))
+          .select($"b".as("x"), $"m".as("y"))
+        val ls = canon(
+          lsHalf.select($"x".as("a"), $"y".as("b"))
+            .unionByName(lsHalf.select($"y".as("a"), $"x".as("b"))))
+          .transform(Checkpoints.stable(_))
+        // SMALL-STAR: orient each edge to its larger endpoint; reducer
+        // at `a` over its smaller neighbors S(a) emits (v, min(S(a)))
+        // for v ∈ S(a) ∪ {a}.
+        val oriented = ls.filter($"b" < $"a")
+        val mS = oriented.groupBy($"a").agg(min($"b").as("m"))
+        val ssHalf = oriented.join(mS, Seq("a"))
+          .select($"b".as("x"), $"m".as("y"))
+          .unionByName(mS.select($"a".as("x"), $"m".as("y")))
+        val ss = canon(
+          ssHalf.select($"x".as("a"), $"y".as("b"))
+            .unionByName(ssHalf.select($"y".as("a"), $"x".as("b"))))
+          .transform(Checkpoints.stable(_))
+        // ss is materialized; the large-star intermediate is dead.
+        freeCheckpoint(ls)
+        // Fixed point: the round left the edge set unchanged. Count
+        // compare first (one cheap aggregate per round — the previous
+        // round's count is carried); equal counts plus an empty
+        // one-sided difference imply set equality, and the anti-join is
+        // exchange-free (both sides share the (a)-keyed partitioning).
+        val nNew = ss.count()
+        converged = curCount == nNew &&
+          ss.join(cur, Seq("a", "b"), "left_anti").limit(1).count() == 0
+        freeCheckpoint(cur) // the convergence probe was its last reader
+        cur = ss
+        curCount = nNew
+        round += 1
+      }
+      require(converged,
+        s"star rounds did not converge in $maxRounds — raise maxRounds")
+      // At the fixed point every component is a star centered on its
+      // min id: oriented edges are (leaf, center); centers map to
+      // themselves.
+      val oriented = cur.filter($"b" < $"a")
+      val out = oriented.select($"a".as("id"), $"b".as("comp"))
+        .unionByName(
+          oriented.select($"b".as("id"), $"b".as("comp"))
+            .repartition(w, $"id").dropDuplicates(Seq("id")))
         .transform(Checkpoints.stable(_))
-      // SMALL-STAR: orient each edge to its larger endpoint; reducer
-      // at `a` over its smaller neighbors S(a) emits (v, min(S(a)))
-      // for v ∈ S(a) ∪ {a}.
-      val oriented = ls.filter($"b" < $"a")
-      val mS = oriented.groupBy($"a").agg(min($"b").as("m"))
-      val ssHalf = oriented.join(mS, Seq("a"))
-        .select($"b".as("x"), $"m".as("y"))
-        .unionByName(mS.select($"a".as("x"), $"m".as("y")))
-      val ss = canon(
-        ssHalf.select($"x".as("a"), $"y".as("b"))
-          .unionByName(ssHalf.select($"y".as("a"), $"x".as("b"))))
-        .transform(Checkpoints.stable(_))
-      // ss is materialized; the large-star intermediate is dead.
-      freeCheckpoint(ls)
-      // Fixed point: the round left the edge set unchanged. Count
-      // compare first (one cheap aggregate per round — the previous
-      // round's count is carried); equal counts plus an empty
-      // one-sided difference imply set equality, and the anti-join is
-      // exchange-free (both sides share the (a)-keyed partitioning).
-      val nNew = ss.count()
-      converged = curCount == nNew &&
-        ss.join(cur, Seq("a", "b"), "left_anti").limit(1).count() == 0
-      freeCheckpoint(cur) // the convergence probe was its last reader
-      cur = ss
-      curCount = nNew
-      round += 1
-    }
-    require(converged,
-      s"star rounds did not converge in $maxRounds — raise maxRounds")
-    lastStarRounds = round
-    // At the fixed point every component is a star centered on its
-    // min id: oriented edges are (leaf, center); centers map to
-    // themselves.
-    val oriented = cur.filter($"b" < $"a")
-    val out = oriented.select($"a".as("id"), $"b".as("comp"))
-      .unionByName(
-        oriented.select($"b".as("id"), $"b".as("comp"))
-          .repartition(w, $"id").dropDuplicates(Seq("id")))
-      .transform(Checkpoints.stable(_))
-    freeCheckpoint(cur) // out is materialized; the edge set is dead
-    out
+      freeCheckpoint(cur) // out is materialized; the edge set is dead
+      out
+    } finally sc.setLocalProperty(Ledger.DecisionKey, caller)
   }
 }

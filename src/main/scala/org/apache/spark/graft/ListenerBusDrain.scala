@@ -4,9 +4,9 @@ import org.apache.spark.SparkContext
 
 /** The one `private[spark]` doorway the bench needs (hence this
   * file's package): block until the asynchronous listener bus has
-  * delivered every queued event, so a task-metrics snapshot taken at
-  * a query boundary ([[graft.TaskMetricsProbe]]) attributes tail
-  * events to the query that produced them, not the next one.
+  * delivered every queued event, so a [[graft.Ledger]] snapshot taken
+  * at a query boundary attributes tail events to the query that
+  * produced them, not the next one.
   *
   * Public alternatives considered and rejected: SparkStatusTracker
   * exposes no task metrics at all, and polling the listener's own

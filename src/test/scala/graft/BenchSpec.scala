@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench harness's noise defenses, exercised with injected fake
-  * runners — no Spark session needed.
+  * runners, and one real measurement of both sections in the shared
+  * session.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -219,23 +220,22 @@ class BenchSpec extends AnyFunSuite {
     assert(t("cut").truncated && t("cut").min == -1.0)
   }
 
-  test("cpuOfMin pairs the CPU sample with the winning wall pass") {
-    // min wall is the 3rd pass -> its cpu (2.0) is the answer, not the
-    // min cpu (0.5, which belongs to a failed-wall slot)
-    assert(BenchCore.cpuOfMin(Seq(3.0, -1.0, 1.0), Seq(9.0, 0.5, 2.0)) == 2.0)
-    // the MIN-WALL pass's cpu sample is invalid: the answer is -1
-    // (unattributable), NOT the next-best pass's cpu — substituting a
-    // slower pass's cpu would silently mislabel the artifact
-    assert(BenchCore.cpuOfMin(Seq(1.0, 2.0), Seq(-1.0, 4.0)) == -1.0)
-    // same when the recording loop was cut short and the min-wall pass
-    // simply has no cpu slot at all
-    assert(BenchCore.cpuOfMin(Seq(2.0, 1.0, 0.1), Seq(5.0, 3.0)) == -1.0)
-    // ...but a short cpu list still resolves when the min-wall pass is
-    // inside the recorded prefix
-    assert(BenchCore.cpuOfMin(Seq(2.0, 1.0, 5.0), Seq(5.0, 3.0)) == 3.0)
-    // nothing valid -> -1 sentinel
-    assert(BenchCore.cpuOfMin(Seq(-1.0), Seq(1.0)) == -1.0)
-    assert(BenchCore.cpuOfMin(Nil, Nil) == -1.0)
+  test("minRun pairs the CPU sample with the winning wall run") {
+    def run(wall: Double, cpu: Double) =
+      Bench.Run(wall, cpu, None, 0L, multiUse = false, Nil)
+    // min wall is the 3rd run -> its cpu (2.0) is the answer, not the
+    // min cpu (0.5, which belongs to a failed run)
+    assert(Bench.minRun(Seq(run(3.0, 9.0), run(-1.0, 0.5), run(1.0, 2.0)))
+      .map(_.cpu).contains(2.0))
+    // the MIN-WALL run's cpu is invalid: the answer is -1
+    // (unattributable), NOT the next-best run's cpu — substituting a
+    // slower run's cpu would silently mislabel the artifact
+    assert(Bench.minRun(Seq(run(1.0, -1.0), run(2.0, 4.0))).map(_.cpu).contains(-1.0))
+    // equal walls: the first run taken is the min
+    assert(Bench.minRun(Seq(run(1.0, 5.0), run(1.0, 6.0))).map(_.cpu).contains(5.0))
+    // nothing valid -> no run
+    assert(Bench.minRun(Seq(run(-1.0, 1.0))).isEmpty)
+    assert(Bench.minRun(Nil).isEmpty)
   }
 
   test("jnum renders fixed decimals independent of the default locale") {
@@ -272,6 +272,43 @@ class BenchSpec extends AnyFunSuite {
     val c1 = BenchCore.processCpuSeconds()
     assert(c1 >= c0)
     assert(c1 - c0 > 0.0) // the busy loop is attributed
+  }
+
+  test("Bench.measure reports one entry per run of each query in both sections") {
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("bench").resolve("bench_full.json")
+    val q = SparkEntry.select(Seq("q10_resample_ohlc_1h"))
+    val json = Bench.measure(TestSpark.spark, "/root/testdata/sf0.001", q,
+      Some("/root/testdata/sf0.01" -> q), budgetS = 600, out)
+    assert(new String(java.nio.file.Files.readAllBytes(out), "UTF-8") == json)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    def keys(n: com.fasterxml.jackson.databind.JsonNode) = n.fieldNames().asScala.toSet
+    // these appear only when non-empty
+    val optional = Set("reruns", "truncated", "failed", "cpu_race_flags", "unpinned_caches")
+    assert(keys(root) -- optional == Set("metric", "value", "unit", "master", "queries",
+      "passes", "spread", "cpu", "cpu_passes", "cpu_task", "cpu_task_passes",
+      "codegen_compiles", "shuffle", "sf", "sf1"))
+    assert(keys(root.get("shuffle")) == Set("remote_mb", "local_mb", "tasks"))
+    assert(root.get("shuffle").get("tasks").asLong() > 0)
+    val name = "q10_resample_ohlc_1h"
+    def series(field: String) = root.get(field).get(name).elements().asScala
+      .map(_.asDouble()).toSeq
+    val passes = series("passes")
+    assert(passes.size >= 2 && passes.forall(_ >= 0), passes) // warmup + timed passes
+    Seq("cpu_passes", "cpu_task_passes", "codegen_compiles").foreach { f =>
+      assert(series(f).size == passes.size, f)
+    }
+    val minAt = passes.indexOf(passes.min)
+    assert(root.get("cpu_task").get(name).asDouble() == series("cpu_task_passes")(minAt))
+    assert(root.get("cpu").get(name).asDouble() == series("cpu_passes")(minAt))
+    assert(series("cpu_task_passes").forall(_ > 0))
+    val sf1 = root.get("sf1")
+    assert(keys(sf1) == Set("dir", "budget_left_start_s", "queries", "ratio",
+      "spread_all", "passes", "samples", "cpu", "cpu_task", "rows_out", "truncated",
+      "failed", "budget_left_end_s"))
+    val samples = sf1.get("samples").get(name).elements().asScala.map(_.asDouble()).toSeq
+    assert(samples.size >= 2 && sf1.get("passes").get(name).asInt() == samples.size)
+    assert(sf1.get("cpu_task").get(name).asDouble() > 0)
   }
 
   test("every sf1 probe name resolves to a registered query") {

@@ -36,13 +36,24 @@ class ComponentsSpec extends AnyFunSuite {
     // rounds — the star escalation must deliver the exact clustering
     // anyway, never a partial one
     val path = (1L to 200L).sliding(2).map(s => (s(0), s(1))).toSeq
-    assert(comps(path, iters = 2).values.toSet == Set(1L))
-    // the diagnostic slots record the
-    // escalation: tripped, and a positive star-round count
-    assert(Components.lastEscalated && Components.lastStarRounds > 0)
-    // ...and a fast-path-converged call resets them
-    assert(comps(Seq((7L, 8L))) == Map(7L -> 7L, 8L -> 7L))
-    assert(!Components.lastEscalated && Components.lastStarRounds == -1)
+    val ledger = Ledger.of(spark)
+    // the star rounds each call's jobs ran under, from the ledger
+    def starRounds(call: => Any): Seq[Int] = {
+      val before = ledger.snapshot()
+      call
+      (ledger.snapshot() - before).decisions.collect {
+        case d if d.startsWith(Components.StarEscalation + ":") =>
+          d.drop(Components.StarEscalation.length + 1).toInt
+      }
+    }
+    val rounds = starRounds(assert(comps(path, iters = 2).values.toSet == Set(1L)))
+    // the ledger records the escalation: tripped, and a positive
+    // star-round count
+    assert(rounds.nonEmpty && rounds.max > 0, rounds)
+    // the caller's local property is restored
+    assert(spark.sparkContext.getLocalProperty(Ledger.DecisionKey) == null)
+    // ...and a fast-path-converged call shows none
+    assert(starRounds(assert(comps(Seq((7L, 8L))) == Map(7L -> 7L, 8L -> 7L))).isEmpty)
   }
 
   test("long ascending chain resolves (doubling covers it within the fast budget)") {

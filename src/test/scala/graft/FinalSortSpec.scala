@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.QueryExecution
@@ -17,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * input within a quarter of the advisory partition size shuffles to a
   * single partition and runs no range-bounds sampling job; a larger
   * input, a row-multiplying map side and `repartitionByRange` keep
-  * their range exchange. Jobs are counted with a listener, as in [[PlanPurity]].
+  * their range exchange. Jobs are counted in a [[Ledger]] window, as in [[PlanPurity]].
   */
 class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
@@ -44,19 +40,12 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * partitionings of the shuffles its final plan ran.
     */
   private def run(build: => DataFrame): (Seq[Row], Int, Seq[(Partitioning, Any)]) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    val ledger = Ledger.of(spark)
     // built first: the fixture writes and the reader's schema job are not the query's
     val df = build
-    ListenerBusDrain.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = df.collect().toSeq
-      ListenerBusDrain.drain(spark.sparkContext)
-      (rows, jobs.get(), shuffles(df.queryExecution.executedPlan))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val before = ledger.snapshot()
+    val rows = df.collect().toSeq
+    (rows, (ledger.snapshot() - before).jobs.toInt, shuffles(df.queryExecution.executedPlan))
   }
 
   private def shuffles(plan: org.apache.spark.sql.execution.SparkPlan) =
@@ -155,7 +144,7 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.listenerManager.register(listener)
     try {
       graft.sources.Store.writeZClustered(small, s"$dir/z", "k", "v", 4)
-      ListenerBusDrain.drain(spark.sparkContext)
+      Ledger.of(spark).snapshot() // drains the bus the plans arrive on
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val parts = plans.asScala.toSeq.flatMap(qe => shuffles(qe.executedPlan))
