@@ -12,7 +12,11 @@ import BenchCore.{jarr, jnum, jobj, jstr}
   * total; sub-0.3 s-warmup queries take one — they cannot move the 2×
   * bar), outlier re-measure via [[BenchCore]], a hard wall-clock
   * budget (SPARK_GRAFT_BENCH_BUDGET_S, default 1400 s), and
-  * incremental JSON persistence after every sample. Every run also
+  * incremental JSON persistence after every sample. A corpus query's
+  * per-query arrays thus hold 1 warmup + 1 timed pass (warmup under
+  * 0.3 s) or 2 + 0-2 reruns (spread over 3x), budget permitting: their
+  * length can differ between runs of the same code, so a parity check
+  * compares that rule, not raw lengths. Every run also
   * records its process-CPU delta: the JSON carries per-query "cpu"
   * (the CPU seconds of the pass that produced the min) and
   * "cpu_passes", so a slow entry is attributable to plan compute vs

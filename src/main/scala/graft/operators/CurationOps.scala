@@ -195,46 +195,28 @@ object CurationOps {
     * size, and the chunk count per row is bounded by n/stride so the
     * row amplification is a fixed ~`chunkWords/stride`×.
     *
-    * Output: (doc_id, chunk_id, start_word, chunk_words, chunk_text).
+    * Output: (doc_id, chunk_id, start_word, chunk_words, chunk_text):
+    * [[chunkWordSlices]]'s grid with each slice joined back into text.
     */
   def chunkDocuments(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       chunkWords: Int = 32,
-      stride: Int = 24): DataFrame = {
-    require(chunkWords >= 1 && stride >= 1 && stride <= chunkWords,
-      s"chunkDocuments needs 1 <= stride <= chunkWords, got $stride/$chunkWords")
-    // A null document has no chunks (greatest(NULL - C, 0) would
-    // otherwise resolve to 0 — Spark's greatest skips nulls — and
-    // fabricate one null chunk).
-    val base = docs.select(
-      col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("__w"))
-      .where(col("__w").isNotNull)
-      .withColumn("__n", size(col("__w")))
-    val nChunks = (floor(
-      (greatest(col("__n") - chunkWords, lit(0)) + lit(stride - 1)) /
-        lit(stride.toDouble)).cast("int") + 1)
-    val start = lit(1) + col("chunk_id") * stride
-    base
-      .withColumn("chunk_id", explode(sequence(lit(0), nChunks - 1)))
-      .withColumn("chunk_id", col("chunk_id").cast("long"))
-      .withColumn("start_word", start.cast("long"))
-      .withColumn("chunk_words",
-        size(slice(col("__w"), start.cast("int"), lit(chunkWords))).cast("long"))
-      .withColumn("chunk_text",
-        array_join(slice(col("__w"), start.cast("int"), lit(chunkWords)), " "))
-      .select("doc_id", "chunk_id", "start_word", "chunk_words", "chunk_text")
-  }
+      stride: Int = 24): DataFrame =
+    chunkWordSlices(docs, idCol, textCol, chunkWords, stride)
+      .select(col("doc_id"), col("chunk_id"),
+        (lit(1L) + col("chunk_id") * stride).as("start_word"), col("chunk_words"),
+        array_join(col("wslice"), " ").as("chunk_text"))
 
-  /** [[chunkDocuments]] emitting the chunk's WORD SLICE instead of the
-    * joined `chunk_text` string (r21, for q125): the retrieval layer
+  /** The chunk grid of [[chunkDocuments]] with each chunk's WORD SLICE
+    * instead of its joined text (r21, for q125): the retrieval layer
     * only ever re-split `chunk_text` back into words, so building,
     * caching and re-parsing the string per chunk was pure overhead —
     * `split(array_join(ws, " "), " ") ≡ ws` because `split` tokens
-    * cannot contain the separator. Same chunk grid (ids, starts,
-    * word counts) as [[chunkDocuments]].
+    * cannot contain the separator.
+    *
+    * Output: (doc_id, chunk_id, chunk_words, wslice).
     */
   def chunkWordSlices(
       docs: DataFrame,
@@ -243,7 +225,10 @@ object CurationOps {
       chunkWords: Int = 32,
       stride: Int = 24): DataFrame = {
     require(chunkWords >= 1 && stride >= 1 && stride <= chunkWords,
-      s"chunkWordSlices needs 1 <= stride <= chunkWords, got $stride/$chunkWords")
+      s"word chunking needs 1 <= stride <= chunkWords, got $stride/$chunkWords")
+    // A null document has no chunks (greatest(NULL - C, 0) would
+    // otherwise resolve to 0 — Spark's greatest skips nulls — and
+    // fabricate one null chunk).
     val base = docs.select(
       col(idCol).as("doc_id"),
       split(col(textCol), " ").as("__w"))

@@ -302,7 +302,7 @@ object PipelineQueries {
   /** C6/C8/C9 — the environment-catalog lifecycle as a registry-
     * rewrite pipeline: seed a deterministic registry from `nation`,
     * register one new database + one already-registered name
-    * (INSERT-IGNOREd), diff environments (anti-join), refuse a
+    * (INSERT-IGNOREd), diff environments, refuse a
     * protected-environment delete, then soft-delete the 'dev'
     * environment. The physical DROP/CREATE side (C5/C7 DDL) is
     * spec-tested in StoreSpec; this query oracle-checks every registry
@@ -325,7 +325,7 @@ object PipelineQueries {
     val reg1 = new EnvCatalog(reg0, prot)
       .register("orders_main_dev", "orders_main", "dev", "builder")
     // ARGENTINA (nationkey 1) seeds 'argentina_test' — re-register is
-    // ignored, the K2 INSERT-IGNORE path
+    // ignored (INSERT IGNORE)
     val reg2 = new EnvCatalog(reg1, prot)
       .register("argentina_test", "argentina", "test", "builder")
     val cat2 = new EnvCatalog(reg2, prot)

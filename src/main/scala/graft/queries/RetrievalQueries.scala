@@ -42,17 +42,28 @@ object RetrievalQueries {
 
   private val S = 1000000L
 
-  /** Fixed-point BM25 over pre-filtered postings — q86's arithmetic
-    * (k1 = 1.2, b = 0.75, raw (N+1)/(df+1) idf; see bm25TopK's
-    * overflow notes) parameterized by the carried grouping column.
+  /** Fixed-point BM25 (k1 = 1.2, b = 0.75, raw (N+1)/(df+1) idf) of
+    * posting rows carrying `dl`, `tf`, `df`, `n_docs` and `total_len`:
+    * the one scoring of q86, q122 and q125. All arithmetic is 1e6
+    * fixed-point integer division, mirrored exactly by DuckDB `//`.
+    * Every intermediate is bounded independently of tf: the tf
+    * component divides numerator and denominator by tf up front, and
+    * the final idf×tf product is split quotient/remainder so it stays
+    * in range even for df=1 terms on a 10^10-document corpus.
     */
-  private def bm25ScoreFx(scored: DataFrame): DataFrame =
+  private[queries] def bm25ScoreFx(scored: DataFrame): DataFrame =
     scored
       .withColumn("avgdl_fx", expr(s"(total_len * ${S}L) DIV n_docs"))
       .withColumn("norm_fx", expr(s"250000 + (750000 * dl * ${S}L) DIV avgdl_fx"))
+      // tf·(k1+1)/(tf + k1·norm) with num and den divided by tf: the
+      // numerator is the CONSTANT 2200·S² (the tf-scaled form
+      // overflowed Long at tf ≈ 4,200).
       .withColumn("tf_comp_fx",
         expr(s"(2200 * ${S}L * ${S}L) DIV (1000 * ${S}L + (1200 * norm_fx) DIV tf)"))
       .withColumn("idf_fx", expr(s"((n_docs + 1) * ${S}L) DIV (df + 1)"))
+      // floor(idf·tf_comp/S) split exactly as q·tf_comp + floor(r·tf_comp/S)
+      // with idf = q·S + r, so neither factor pair can overflow even
+      // for df=1 terms at 10^10 docs.
       .withColumn("score_fx",
         expr(s"(idf_fx DIV ${S}L) * tf_comp_fx + ((idf_fx % ${S}L) * tf_comp_fx) DIV ${S}L"))
 

@@ -522,13 +522,8 @@ object TextQueries {
     * bit-reproducible across engines — the idf here is the raw
     * (N+1)/(df+1) variant (log-damping omitted; identical for the
     * single-term queries used here, which only need per-term monotone
-    * scores), and ALL arithmetic is 1e6 fixed-point integer division
-    * mirrored exactly by DuckDB `//`. Every intermediate is bounded
-    * independently of tf: the tf component divides numerator and
-    * denominator by tf up front (`2200·S²` is a constant; the old
-    * `tf·2200·S²` overflowed Long at tf ≈ 4,200), and the final
-    * idf×tf product is split quotient/remainder so it stays in range
-    * even for df=1 terms on a 10^10-document corpus.
+    * scores), and ALL arithmetic is fixed-point integer division
+    * ([[RetrievalQueries.bm25ScoreFx]], with its overflow bounds).
     *
     * Scale shape (round-16 rework): postings = one explode + one
     * (doc_id, term) count agg, STAGED once; the query terms, their
@@ -546,7 +541,6 @@ object TextQueries {
   def bm25TopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.plans.BoundedTopK.boundedTopK
-    val S = 1000000L
     val docs = Tables.loadSpread(s, dir, "documents")
     val w = words($"text")
     // r21 (guide §2.3 taken to its limit): the corpus-VOCABULARY
@@ -591,23 +585,10 @@ object TextQueries {
     val st = Tables.load(s, dir, "documents")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(words($"text")).cast("long")).as("total_len")).collect()(0)
-    val scored = postings
+    val scored = RetrievalQueries.bm25ScoreFx(postings
       .withColumn("df", element_at(typedLit(dfMap), $"term"))
       .withColumn("n_docs", lit(st.getLong(0)))
-      .withColumn("total_len", lit(st.getLong(1)))
-      .withColumn("avgdl_fx", expr(s"(total_len * ${S}L) DIV n_docs"))
-      .withColumn("norm_fx", expr(s"250000 + (750000 * dl * ${S}L) DIV avgdl_fx"))
-      // tf·(k1+1)/(tf + k1·norm) with num and den divided by tf: the
-      // numerator is the CONSTANT 2200·S² (the tf-scaled form
-      // overflowed Long at tf ≈ 4,200).
-      .withColumn("tf_comp_fx",
-        expr(s"(2200 * ${S}L * ${S}L) DIV (1000 * ${S}L + (1200 * norm_fx) DIV tf)"))
-      .withColumn("idf_fx", expr(s"((n_docs + 1) * ${S}L) DIV (df + 1)"))
-      // floor(idf·tf_comp/S) split exactly as q·tf_comp + floor(r·tf_comp/S)
-      // with idf = q·S + r, so neither factor pair can overflow even
-      // for df=1 terms at 10^10 docs.
-      .withColumn("score_fx",
-        expr(s"(idf_fx DIV ${S}L) * tf_comp_fx + ((idf_fx % ${S}L) * tf_comp_fx) DIV ${S}L"))
+      .withColumn("total_len", lit(st.getLong(1))))
     scored.groupBy($"term")
       .agg(boundedTopK(struct((-$"score_fx").as("negs"), $"doc_id", $"tf", $"score_fx"), 10).as("top"))
       .select($"term", posexplode($"top").as(Seq("pos", "r")))

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Write-path operators (SURVEY §2.1 K2-K7) restated as pure
   * DataFrame rewrites. The reference does these as SQL side effects
@@ -257,14 +260,23 @@ object PaginatedSource {
 /** Environment-aware logical→physical catalog (SURVEY §2.8 R7 +
   * §2.11; reference db_utils.py:40-164, db_management.py).
   *
-  * The registry is itself a table (`database_configs` fixture schema,
-  * FIXTURES.md §3); resolution rules mirror the reference exactly:
-  * `master_config` is never environment-suffixed, prod resolves to
-  * the base name, anything else goes through the registry with an
-  * (env, base) cache. Lifecycle verbs (clone C5 / sync C7 / protected
-  * delete C8) operate on the Spark session catalog plus the registry;
-  * registry mutations return the next registry version (immutable
-  * rewrite, like every Store operator).
+  * The registry (`database_configs` fixture schema, FIXTURES.md §3) is
+  * metadata: a few rows per database, which the reference reads whole.
+  * The catalog reads it the same way, with at most one `collect` per
+  * instance, and every registry verb is plain Scala over those driver
+  * rows. A verb that returns the next registry version returns it as a
+  * local frame of the registry's schema, so a catalog built over it runs
+  * no job. Kept as a lazy plan instead, each mutation nested the previous
+  * one (INSERT IGNORE reads its target twice) and three verbs collected
+  * the result anyway: q65's final plan scanned `nation` 11 times.
+  *
+  * Resolution mirrors the reference: `master_config` is never
+  * environment-suffixed, prod resolves to the base name, and anything
+  * else to the smallest active `database_name` of its (environment,
+  * base) rows. A null `is_active` or `environment` counts as inactive;
+  * names compare as in SQL, so a null matches nothing. Lifecycle verbs
+  * (clone C5 / sync C7 / protected delete C8) act on the Spark session
+  * catalog plus the registry.
   *
   * `protectedEnvs` mirrors `DB_PROTECTED_ENVIRONMENTS`
   * (db_management.py:59-107): environments that refuse deletion.
@@ -272,57 +284,57 @@ object PaginatedSource {
 final class EnvCatalog(registry: DataFrame,
     protectedEnvs: Seq[String] = Seq.empty) {
 
-  private val cache = scala.collection.concurrent.TrieMap[(String, String), Option[String]]()
+  private lazy val rows: Vector[Row] = registry.collect().toVector
+  private def ix(c: String): Int = registry.schema.fieldIndex(c)
+  private def str(r: Row, c: String): String = r.getString(ix(c))
+  private def is(r: Row, c: String, v: String): Boolean = v != null && v == str(r, c)
+  private def live(r: Row, env: String): Boolean =
+    r.get(ix("is_active")) == true && is(r, "environment", env)
+  private def inactive(r: Row): Row = Row.fromSeq(r.toSeq.updated(ix("is_active"), false))
+  private def frame(rs: Seq[Row], of: DataFrame = registry): DataFrame =
+    registry.sparkSession.createDataFrame(rs.asJava, of.schema)
 
   /** R7 — resolve a logical base name in an environment. */
-  def resolve(baseName: String, environment: String): Option[String] = {
-    if (baseName == "master_config") return Some(baseName)
-    if (environment == "prod") return Some(baseName)
-    cache.getOrElseUpdate((environment, baseName), {
-      registry
-        .filter(col("base_name") === baseName &&
-          col("environment") === environment && col("is_active"))
-        .orderBy(col("database_name"))
-        .limit(1)
-        .collect()
-        .headOption
-        .map(_.getAs[String]("database_name"))
-    })
+  def resolve(baseName: String, environment: String): Option[String] =
+    if (baseName == "master_config" || environment == "prod") Some(baseName)
+    else rows.filter(r => live(r, environment) && is(r, "base_name", baseName))
+      .map(str(_, "database_name"))
+      .minByOption(Option(_).map(UTF8String.fromString)) // Spark's order, nulls first
+
+  /** Base names of `source`'s active rows, one per row, absent from
+    * `target`'s active rows (a null base is never present).
+    */
+  private def missingBases(source: String, target: String): Vector[String] = {
+    val have = rows.filter(live(_, target)).map(str(_, "base_name")).toSet
+    rows.filter(live(_, source)).map(str(_, "base_name"))
+      .filter(b => b == null || !have(b))
   }
 
   /** C6 — environment diff (db_management.py:186-228): active base
     * names present in `source` but missing from `target`.
     */
-  def diffEnvironments(source: String, target: String): DataFrame = {
-    val s = registry.filter(col("environment") === source && col("is_active"))
-      .select(col("base_name"))
-    val t = registry.filter(col("environment") === target && col("is_active"))
-      .select(col("base_name"))
-    s.join(t, Seq("base_name"), "left_anti")
-  }
+  def diffEnvironments(source: String, target: String): DataFrame =
+    frame(missingBases(source, target).map(Row(_)), registry.select("base_name"))
 
-  /** C9 — register / soft-delete lifecycle as registry rewrites. */
+  /** C9 — register / soft-delete lifecycle as registry rewrites;
+    * registering a name already present leaves the rows as they are
+    * (INSERT IGNORE).
+    */
+  private def registered(rs: Vector[Row], databaseName: String, baseName: String,
+      environment: String, createdBy: String): Vector[Row] =
+    if (rs.exists(is(_, "database_name", databaseName))) rs
+    else rs :+ Row.fromSeq(registry.schema.fieldNames.toSeq.map(Map(
+      "database_name" -> databaseName, "base_name" -> baseName,
+      "environment" -> environment, "branch_name" -> null,
+      "created_by" -> createdBy, "is_active" -> true)))
+
   def register(databaseName: String, baseName: String, environment: String,
-      createdBy: String): DataFrame = {
-    val spark = registry.sparkSession
-    import spark.implicits._
-    val row = Seq((databaseName, baseName, environment,
-      Option.empty[String], createdBy, true))
-      .toDF("database_name", "base_name", "environment", "branch_name",
-        "created_by", "is_active")
-    Store.insertIgnore(registry, row, Seq("database_name"))
-  }
+      createdBy: String): DataFrame =
+    frame(registered(rows, databaseName, baseName, environment, createdBy))
 
   def softDelete(databaseName: String): DataFrame =
-    Store.batchUpdate(registry, col("database_name") === databaseName,
-      Map("is_active" -> lit(false)))
+    frame(rows.map(r => if (is(r, "database_name", databaseName)) inactive(r) else r))
 
-  /** C5 — clone a database's schema (optionally data) into a new
-    * database (db_management.py:349-509). The mysqldump/restore round
-    * trip becomes `CREATE TABLE ... LIKE` per table (CTAS when
-    * `withData`); the source is never dropped. Returns cloned table
-    * names.
-    */
   /** Persistent tables of a database — listTables also returns the
     * session's temp views, which are not part of any database's
     * schema and must not be cloned/synced.
@@ -333,6 +345,12 @@ final class EnvCatalog(registry: DataFrame,
       .filterNot(_.isTemporary).map(_.name).toSeq.sorted
   }
 
+  /** C5 — clone a database's schema (optionally data) into a new
+    * database (db_management.py:349-509). The mysqldump/restore round
+    * trip becomes `CREATE TABLE ... LIKE` per table (CTAS when
+    * `withData`); the source is never dropped. Returns cloned table
+    * names.
+    */
   def cloneSchema(sourceDb: String, targetDb: String,
       withData: Boolean = false): Seq[String] = {
     EnvCatalog.validateName(sourceDb)
@@ -380,27 +398,25 @@ final class EnvCatalog(registry: DataFrame,
       apply: Boolean = false): (DataFrame, Seq[(String, String)]) = {
     EnvCatalog.validateName(source)
     EnvCatalog.validateName(target)
-    // registry = catalog metadata, O(#databases) rows — collect is the
-    // reference's own access pattern (LIMIT-1 lookups / full env maps)
-    val missing = diffEnvironments(source, target)
-      .join(registry.filter(col("environment") === source && col("is_active")),
-        Seq("base_name"))
-      .select(col("base_name"), col("database_name"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sortBy(_._1)
+    // one pair per (diff row, source row) of its base: the inner join
+    // of the diff with the source rows
+    val missing = (for (b <- missingBases(source, target);
+        r <- rows if live(r, source) && is(r, "base_name", b))
+      yield b -> str(r, "database_name")).sortBy(_._1)
     val plan = missing.map { case (base, _) => base -> s"${base}_$target" }
     if (!apply) return (registry, plan)
-    val next = missing.foldLeft(registry) { case (reg, (base, sourceDb)) =>
+    val next = missing.foldLeft(rows) { case (rs, (base, sourceDb)) =>
       val targetDb = s"${base}_$target"
       cloneSchema(sourceDb, targetDb)
-      new EnvCatalog(reg, protectedEnvs).register(targetDb, base, target, "sync")
+      registered(rs, targetDb, base, target, "sync")
     }
-    (next, plan)
+    (frame(next), plan)
   }
 
   /** C8 — delete every database of the given environments
     * (db_management.py:682-768): refuse protected environments, DROP
-    * each physical database, soft-delete its registry row (audit
-    * trail). Returns the next registry.
+    * each active database, soft-delete its registry row (audit
+    * trail); inactive rows stay as they are. Returns the next registry.
     */
   def deleteEnvironment(environments: Seq[String]): DataFrame = {
     environments.foreach(EnvCatalog.validateName)
@@ -408,13 +424,10 @@ final class EnvCatalog(registry: DataFrame,
     if (blocked.nonEmpty)
       throw new IllegalArgumentException(
         s"Cannot delete protected environment(s): ${blocked.mkString(", ")}")
-    val spark = registry.sparkSession
-    val doomed = registry
-      .filter(col("environment").isin(environments: _*) && col("is_active"))
-      .select("database_name").collect().map(_.getString(0))
-    doomed.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE"))
-    Store.batchUpdate(registry, col("environment").isin(environments: _*),
-      Map("is_active" -> lit(false)))
+    def doomed(r: Row) = environments.exists(live(r, _))
+    rows.filter(doomed).foreach(r => registry.sparkSession.sql(
+      s"DROP DATABASE IF EXISTS `${str(r, "database_name")}` CASCADE"))
+    frame(rows.map(r => if (doomed(r)) inactive(r) else r))
   }
 }
 

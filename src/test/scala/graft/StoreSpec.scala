@@ -94,6 +94,62 @@ class StoreSpec extends AnyFunSuite {
     assert(new EnvCatalog(reg3).resolve("y", "dev").isEmpty)
   }
 
+  test("EnvCatalog reads a parquet registry once; the next registry is local") {
+    val dir = java.nio.file.Files.createTempDirectory("registry").toString
+    Seq(("a_dev", "a", "dev", null.asInstanceOf[String], "me", true),
+      ("b_test", "b", "test", null.asInstanceOf[String], "me", true))
+      .toDF("database_name", "base_name", "environment", "branch_name",
+        "created_by", "is_active")
+      .write.mode("overwrite").parquet(dir)
+    val reg0 = Tables.readParquet(spark, dir) // footer read, no job
+    var missing, reg3: org.apache.spark.sql.DataFrame = null
+    val jobs = PlanPurity.jobsDuringConstruction(spark) {
+      val reg1 = new EnvCatalog(reg0).register("c_dev", "c", "dev", "me")
+      val reg2 = new EnvCatalog(reg1).register("c_dev", "c", "dev", "me")
+      missing = new EnvCatalog(reg2).diffEnvironments("test", "dev")
+      reg3 = new EnvCatalog(reg2).deleteEnvironment(Seq("dev"))
+      missing.queryExecution.optimizedPlan
+      reg3
+    }
+    assert(jobs == 1, s"the lifecycle ran $jobs jobs; only the first registry read may run one")
+    for (df <- Seq(missing, reg3)) {
+      val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        df.queryExecution.optimizedPlan.treeString)
+    }
+    assert(missing.as[String].collect().toSeq == Seq("b"))
+    assert(reg3.orderBy("database_name").select("database_name", "is_active")
+      .as[(String, Boolean)].collect().toSeq ==
+      Seq(("a_dev", false), ("b_test", true), ("c_dev", false)))
+  }
+
+  test("EnvCatalog: null is_active or environment is inactive and survives delete") {
+    val reg = Seq(
+      ("n_dev", "n", "dev", null.asInstanceOf[String], "me", Option.empty[Boolean]),
+      ("e_none", "e", null.asInstanceOf[String], null.asInstanceOf[String], "me", Some(true)),
+      ("z_dev", "z", "dev", null.asInstanceOf[String], "me", Some(true)),
+      ("y_dev", "z", "dev", null.asInstanceOf[String], "me", Some(true)),
+      ("x_dev", "z", "dev", null.asInstanceOf[String], "me", Some(false)),
+      ("d1_test", "d", "test", null.asInstanceOf[String], "me", Some(true)),
+      ("d2_test", "d", "test", null.asInstanceOf[String], "me", Some(true))
+    ).toDF("database_name", "base_name", "environment", "branch_name",
+      "created_by", "is_active")
+    val cat = new EnvCatalog(reg)
+    assert(cat.resolve("n", "dev").isEmpty)
+    assert(cat.resolve("e", "dev").isEmpty && cat.resolve("e", null).isEmpty)
+    assert(cat.resolve("z", "dev").contains("y_dev")) // smallest ACTIVE name
+    // left-anti multiplicities: one row per active source row
+    assert(cat.diffEnvironments("test", "dev").as[String].collect().toSeq == Seq("d", "d"))
+    // an existing name registers as a no-op, whatever the other fields say
+    assert(cat.register("z_dev", "other", "stage", "you").collect().toSeq ==
+      reg.collect().toSeq)
+    val next = cat.deleteEnvironment(Seq("dev"))
+      .select("database_name", "is_active").as[(String, Option[Boolean])].collect().toMap
+    assert(next == Map("n_dev" -> None, "e_none" -> Some(true), "z_dev" -> Some(false),
+      "y_dev" -> Some(false), "x_dev" -> Some(false), "d1_test" -> Some(true),
+      "d2_test" -> Some(true)))
+  }
+
   test("jdbcScan reads, partitions, and pushes filters into Derby") {
     val url = "jdbc:derby:memory:graftdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
