@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution._
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -21,8 +21,16 @@ import org.apache.spark.sql.internal.SQLConf
   * bounds before the shuffle: one job and one stage more per query,
   * whatever its size. `SinglePartition` also satisfies the sort's
   * `OrderedDistribution` and needs no bounds, so when the sorted input
-  * is small the rule swaps the exchange's partitioning. The map side
-  * stays as parallel as before; only the reduce side becomes one task.
+  * is small the rule swaps the exchange's partitioning: the map side
+  * stays as parallel as before and only the reduce side becomes one
+  * task. When the sort's input reads nothing but materialized shuffle
+  * stages that `EnsureRequirements` planned (and broadcast stages), the
+  * rule drops the exchange instead and reads each of those stages as one
+  * partition ([[readAsOne]]): the final aggregate, window or join then
+  * runs in the sort's own task, with no exchange job or stage between
+  * them. A sort over a scan, or over a user-specified spread
+  * (`repartition`, `rebalance`), keeps the `SinglePartition` exchange,
+  * so the stage below it keeps its width.
   *
   * The rule fires only on an exchange that `EnsureRequirements`
   * inserted directly under a global `SortExec`; `repartitionByRange`
@@ -34,7 +42,9 @@ import org.apache.spark.sql.internal.SQLConf
   * size (no sampling pass), but more wall time once the sort outweighs
   * the sampling job it saves: `tools/final_sort_crossover.scala` put
   * that crossover at 12-16 MB of parquet with 4 reduce tasks and at
-  * about 16 MB with 2, on a 4-core machine (DESIGN.md "Final ordering").
+  * about 16 MB with 2, and the fused path's (an aggregate over a hash
+  * shuffle) at about 16 MB of map output, on a 4-core machine
+  * (DESIGN.md "Final ordering").
   * AQE re-applies its preparation rules each time a stage materializes,
   * so a sort whose input is not yet measured is decided again once it is.
   */
@@ -45,7 +55,33 @@ object FinalSortToSinglePartition extends Rule[SparkPlan] {
         e @ ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
         if streamedBytes(child).exists(
           _ <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) / 4) =>
-      s.copy(child = e.copy(outputPartitioning = SinglePartition))
+      s.copy(child = readAsOne(child).getOrElse(e.copy(outputPartitioning = SinglePartition)))
+  }
+
+  /** `plan` with each of its shuffle stages read as one partition, so
+    * that it runs in one task with the sort above it and needs no
+    * exchange. Only when every leaf is a materialized shuffle stage that
+    * `EnsureRequirements` planned, or a broadcast stage, with at least
+    * one shuffle stage and no shuffle read already in place (a skew
+    * split or a local read): one partition per input satisfies any
+    * clustering and co-partitions both sides of a join. A scan, an
+    * unmeasured exchange or a user-specified spread (`repartition`,
+    * `rebalance`) keeps its width, and so does a plan whose rewritten
+    * output is still more than one partition (a union).
+    */
+  private def readAsOne(plan: SparkPlan): Option[SparkPlan] = {
+    val leaves = plan.collectLeaves()
+    val fusable = leaves.exists(_.isInstanceOf[ShuffleQueryStageExec]) && leaves.forall {
+      case q: ShuffleQueryStageExec =>
+        q.isMaterialized && q.mapStats.isDefined && q.shuffle.shuffleOrigin == ENSURE_REQUIREMENTS
+      case _: BroadcastQueryStageExec => true
+      case _ => false
+    } && !plan.exists(_.isInstanceOf[AQEShuffleReadExec])
+    if (!fusable) None
+    else Some(plan.transformUp { case q: ShuffleQueryStageExec =>
+      val bytes = q.mapStats.get.bytesByPartitionId
+      AQEShuffleReadExec(q, Seq(CoalescedPartitionSpec(0, bytes.length, bytes.sum)))
+    }).filter(_.outputPartitioning.numPartitions == 1)
   }
 
   /** The bytes the map side streams into the exchange, from sizes that

@@ -11,9 +11,11 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `row_number()/rank()/dense_rank() <= k` window idiom (including
   * conjunctive filters and `= c` equality bounds) into the bounded
   * aggregate plans, plus the [[FinalSortToSinglePartition]] AQE
-  * query-stage preparation rule that shuffles a global sort over an
-  * input known to be small (a quarter of the advisory partition size)
-  * to a single partition, with no range-bounds sampling job.
+  * query-stage preparation rule that runs a global sort over an input
+  * known to be small (a quarter of the advisory partition size) on a
+  * single partition, with no range-bounds sampling job, and with no
+  * exchange at all when the input reads only materialized shuffle
+  * stages.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -398,11 +398,9 @@ final class EnvCatalog(registry: DataFrame,
       apply: Boolean = false): (DataFrame, Seq[(String, String)]) = {
     EnvCatalog.validateName(source)
     EnvCatalog.validateName(target)
-    // one pair per (diff row, source row) of its base: the inner join
-    // of the diff with the source rows
-    val missing = (for (b <- missingBases(source, target);
-        r <- rows if live(r, source) && is(r, "base_name", b))
-      yield b -> str(r, "database_name")).sortBy(_._1)
+    // one clone per missing base, from the database `resolve` picks
+    val missing = missingBases(source, target).filter(_ != null).distinct.sorted
+      .flatMap(b => resolve(b, source).map(b -> _))
     val plan = missing.map { case (base, _) => base -> s"${base}_$target" }
     if (!apply) return (registry, plan)
     val next = missing.foldLeft(rows) { case (rs, (base, sourceDb)) =>

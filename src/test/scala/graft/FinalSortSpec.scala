@@ -1,19 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning, RoundRobinPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, QueryExecution, ShufflePartitionSpec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, Cost, CostEvaluator, SimpleCost}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.plans.FinalSortToSinglePartition]]: a global sort over an
-  * input within a quarter of the advisory partition size shuffles to a
-  * single partition and runs no range-bounds sampling job; a larger
-  * input, a row-multiplying map side and `repartitionByRange` keep
-  * their range exchange. Jobs are counted in a [[Ledger]] window, as in [[PlanPurity]].
+  * input within a quarter of the advisory partition size runs on a
+  * single partition and runs no range-bounds sampling job. Over
+  * materialized shuffle stages it reads each stage as one partition with
+  * no exchange; over a scan or a user-specified spread it shuffles to a
+  * single partition. A larger input, a row-multiplying map side and
+  * `repartitionByRange` keep their range exchange. Jobs are counted in a
+  * [[Ledger]] window, as in [[PlanPurity]].
   */
 class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
@@ -48,8 +51,18 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (rows, (ledger.snapshot() - before).jobs.toInt, shuffles(df.queryExecution.executedPlan))
   }
 
-  private def shuffles(plan: org.apache.spark.sql.execution.SparkPlan) =
+  private def shuffles(plan: SparkPlan) =
     collect(plan) { case e: ShuffleExchangeExec => (e.outputPartitioning, e.shuffleOrigin) }
+
+  /** The partition specs of each shuffle read in `df`'s final plan. */
+  private def reads(df: DataFrame): Seq[Seq[ShufflePartitionSpec]] =
+    collect(df.queryExecution.executedPlan) { case r: AQEShuffleReadExec => r.partitionSpecs }
+
+  /** Whether a read covers its whole shuffle as one partition. */
+  private def readsAsOne(specs: Seq[ShufflePartitionSpec]) = specs match {
+    case Seq(CoalescedPartitionSpec(0, _, _)) => true
+    case _ => false
+  }
 
   private def withConf[T](kv: (String, String))(body: => T): T = {
     val (k, v) = kv
@@ -60,26 +73,66 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def aggSorted = small.groupBy("k").agg(sum("v").as("s")).orderBy($"s".desc, $"k")
 
-  test("a small global sort shuffles to one partition and runs no sampling job") {
-    val (rows, jobs, parts) = run(aggSorted)
-    assert(parts.map(_._1).exists(_ == SinglePartition), parts)
-    assert(!parts.exists(_._1.isInstanceOf[RangePartitioning]), parts)
+  test("a small aggregate sort reads its shuffle as one partition: no exchange, no sampling job") {
+    val df = aggSorted
+    val (rows, jobs, parts) = run(df)
+    // only the aggregate's own shuffle; the sort runs in the final aggregate's task
+    assert(parts == Seq((parts.head._1, ENSURE_REQUIREMENTS)) &&
+      parts.head._1.isInstanceOf[HashPartitioning], parts)
+    assert(reads(df).size == 1 && reads(df).forall(readsAsOne), reads(df))
+    // the single-partition exchange path: AQE kept from taking a plan with fewer exchanges
+    val (singleRows, singleJobs, singleParts) = withConf(
+        "spark.sql.adaptive.customCostEvaluatorClass" -> classOf[KeepExchanges].getName)(
+      run(aggSorted))
+    assert(singleParts.exists(_ == ((SinglePartition, ENSURE_REQUIREMENTS))), singleParts)
+    assert(jobs == singleJobs - 1, s"fused: $jobs jobs, single-partition exchange: $singleJobs")
     // the existing range path: the same query with the bound below its input
     val (rangeRows, rangeJobs, rangeParts) =
       withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(run(aggSorted))
     assert(rangeParts.exists(_._1.isInstanceOf[RangePartitioning]), rangeParts)
-    assert(jobs == rangeJobs - 1, s"rule: $jobs jobs, range path: $rangeJobs")
+    assert(singleJobs == rangeJobs - 1, s"single: $singleJobs jobs, range path: $rangeJobs")
     // the reference without AQE (range partitioning, no stage rules)
     val (plainRows, _, plainParts) =
       withConf("spark.sql.adaptive.enabled" -> "false")(run(aggSorted))
     assert(plainParts.exists(_._1.isInstanceOf[RangePartitioning]), plainParts)
-    assert(rows.size == 37 && rows == plainRows && rows == rangeRows)
+    assert(rows.size == 37 && rows == plainRows && rows == rangeRows && rows == singleRows)
+  }
+
+  test("a shuffled join of two small stages reads both sides as one partition") {
+    val byK = small.groupBy("k").agg(max("v").as("m"))
+    def joined = small.join(byK, "k").orderBy($"m".desc, $"v")
+    val (plainRows, _, _) = withConf("spark.sql.adaptive.enabled" -> "false")(run(joined))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = joined
+      val (rows, _, parts) = run(df)
+      assert(parts.nonEmpty && parts.forall { case (p, o) =>
+        p.isInstanceOf[HashPartitioning] && o == ENSURE_REQUIREMENTS }, parts)
+      assert(reads(df).size == 2 && reads(df).forall(readsAsOne), reads(df))
+      assert(rows.size == 400 && rows == plainRows)
+      // with AQE coalescing on, as under the fleet tuning, the result is the same
+      withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "true") {
+        val (coalescedRows, _, _) = run(joined)
+        assert(coalescedRows == plainRows)
+      }
+    }
+  }
+
+  test("a repartition(n) spread under the sort keeps its n-way stage and the exchange") {
+    val df = small.repartition(3).select(($"v" * 2).as("x"), $"k").orderBy($"x".desc)
+    val (rows, _, parts) = run(df)
+    assert(parts.toSet == Set((RoundRobinPartitioning(3), REPARTITION_BY_NUM),
+      (SinglePartition, ENSURE_REQUIREMENTS)), parts)
+    assert(reads(df).isEmpty, reads(df))
+    assert(rows.map(_.getLong(0)) == (798L to 0L by -2L))
   }
 
   test("a scan-only sort is decided from the file sizes before any stage runs") {
     val df = small.orderBy($"v".desc)
     assert(shuffles(df.queryExecution.executedPlan).map(_._1) == Seq(SinglePartition))
-    val (rows, _, _) = run(df)
+    val (rows, _, parts) = run(df)
+    // the final plan keeps the exchange: the scan stays as wide as its files
+    assert(parts == Seq((SinglePartition, ENSURE_REQUIREMENTS)), parts)
+    assert(reads(df).isEmpty, reads(df))
     assert(rows.map(_.getLong(1)) == (399L to 0L by -1L))
   }
 
@@ -127,8 +180,11 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(parts.exists(_._1.isInstanceOf[RangePartitioning]), parts)
         assert(!parts.exists(_._1 == SinglePartition), parts)
         assert(rows.size == 160000)
+        // one partition: a single-partition exchange over the broadcast
+        // join's scan, one-partition reads of the sort-merge join's stages
         val (oneRows, _, oneParts) = run(oneToOne)
-        assert(oneParts.exists(_._1 == SinglePartition), oneParts)
+        assert(oneParts.exists(_._1 == SinglePartition) || reads(oneToOne).exists(readsAsOne),
+          oneParts)
         assert(!oneParts.exists(_._1.isInstanceOf[RangePartitioning]), oneParts)
         assert(oneRows.map(_.getLong(0)) == (0L until 800L))
       }
@@ -168,4 +224,13 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .groupBy("k").count().orderBy("k"))
     assert(agg.isEmpty)
   }
+}
+
+/** Rates a plan with more exchanges cheaper, so AQE keeps its current
+  * plan rather than re-plan one with an exchange fewer: the final sort
+  * keeps the single-partition exchange it was first planned with.
+  */
+class KeepExchanges extends CostEvaluator {
+  override def evaluateCost(plan: SparkPlan): Cost =
+    SimpleCost(-plan.collect { case s: ShuffleExchangeLike => s }.size)
 }

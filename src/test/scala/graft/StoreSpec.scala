@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{EnvCatalog, PaginatedSource, Store}
@@ -281,6 +283,39 @@ class StoreSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists("envsync_a_stage.q"))
     assert(new EnvCatalog(nextReg).resolve("envsync_a", "stage")
       .contains("envsync_a_stage"))
+  }
+
+  test("syncEnvironments plans and clones a base shared by two rows once") {
+    Seq("envsync_b_dev1", "envsync_b_dev2", "envsync_b_stage").foreach(resetDb)
+    spark.sql("CREATE DATABASE envsync_b_dev1")
+    spark.sql("CREATE DATABASE envsync_b_dev2")
+    Seq((1L, 1.5)).toDF("k", "px").write.saveAsTable("envsync_b_dev1.t1")
+    Seq((2L, 2.5)).toDF("k", "px").write.saveAsTable("envsync_b_dev2.t2")
+    val reg = Seq(
+      ("envsync_b_dev2", "envsync_b", "dev", null.asInstanceOf[String], "me", true),
+      ("envsync_b_dev1", "envsync_b", "dev", null.asInstanceOf[String], "me", true)
+    ).toDF("database_name", "base_name", "environment", "branch_name",
+      "created_by", "is_active")
+    val cat = new EnvCatalog(reg)
+    assert(cat.syncEnvironments("dev", "stage")._2 == Seq("envsync_b" -> "envsync_b_stage"))
+    val creates = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.nodeName.startsWith("CreateTableLike")) creates.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (nextReg, plan) = try cat.syncEnvironments("dev", "stage", apply = true) finally {
+      Ledger.of(spark).snapshot() // drains the bus the executions arrive on
+      spark.listenerManager.unregister(listener)
+    }
+    assert(plan == Seq("envsync_b" -> "envsync_b_stage"))
+    // one clone, from envsync_b_dev1: the database resolve picks for the base
+    assert(cat.resolve("envsync_b", "dev").contains("envsync_b_dev1"))
+    assert(creates.get == 1)
+    assert(spark.catalog.listTables("envsync_b_stage").collect()
+      .filterNot(_.isTemporary).map(_.name).toSeq == Seq("t1"))
+    assert(new EnvCatalog(nextReg).resolve("envsync_b", "stage").contains("envsync_b_stage"))
   }
 
   test("deleteEnvironment refuses protected envs, drops + soft-deletes others") {
