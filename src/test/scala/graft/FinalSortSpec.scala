@@ -73,6 +73,28 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def aggSorted = small.groupBy("k").agg(sum("v").as("s")).orderBy($"s".desc, $"k")
 
+  /** `aggSorted` on the single-partition exchange path: AQE kept from
+    * taking the plan with fewer exchanges.
+    */
+  private def withSingleExchange[T](body: => T): T = withConf(
+    "spark.sql.adaptive.customCostEvaluatorClass" -> classOf[KeepExchanges].getName)(body)
+
+  test("a small global sort shuffles to one partition and runs no sampling job") {
+    val (rows, jobs, parts) = withSingleExchange(run(aggSorted))
+    assert(parts.exists(_ == ((SinglePartition, ENSURE_REQUIREMENTS))), parts)
+    assert(!parts.exists(_._1.isInstanceOf[RangePartitioning]), parts)
+    // the existing range path: the same query with the bound below its input
+    val (rangeRows, rangeJobs, rangeParts) =
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(run(aggSorted))
+    assert(rangeParts.exists(_._1.isInstanceOf[RangePartitioning]), rangeParts)
+    assert(jobs == rangeJobs - 1, s"single: $jobs jobs, range path: $rangeJobs")
+    // the reference without AQE (range partitioning, no stage rules)
+    val (plainRows, _, plainParts) =
+      withConf("spark.sql.adaptive.enabled" -> "false")(run(aggSorted))
+    assert(plainParts.exists(_._1.isInstanceOf[RangePartitioning]), plainParts)
+    assert(rows.size == 37 && rows == plainRows && rows == rangeRows)
+  }
+
   test("a small aggregate sort reads its shuffle as one partition: no exchange, no sampling job") {
     val df = aggSorted
     val (rows, jobs, parts) = run(df)
@@ -80,22 +102,11 @@ class FinalSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(parts == Seq((parts.head._1, ENSURE_REQUIREMENTS)) &&
       parts.head._1.isInstanceOf[HashPartitioning], parts)
     assert(reads(df).size == 1 && reads(df).forall(readsAsOne), reads(df))
-    // the single-partition exchange path: AQE kept from taking a plan with fewer exchanges
-    val (singleRows, singleJobs, singleParts) = withConf(
-        "spark.sql.adaptive.customCostEvaluatorClass" -> classOf[KeepExchanges].getName)(
-      run(aggSorted))
-    assert(singleParts.exists(_ == ((SinglePartition, ENSURE_REQUIREMENTS))), singleParts)
+    // one job fewer than the single-partition exchange path
+    val (singleRows, singleJobs, _) = withSingleExchange(run(aggSorted))
     assert(jobs == singleJobs - 1, s"fused: $jobs jobs, single-partition exchange: $singleJobs")
-    // the existing range path: the same query with the bound below its input
-    val (rangeRows, rangeJobs, rangeParts) =
-      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(run(aggSorted))
-    assert(rangeParts.exists(_._1.isInstanceOf[RangePartitioning]), rangeParts)
-    assert(singleJobs == rangeJobs - 1, s"single: $singleJobs jobs, range path: $rangeJobs")
-    // the reference without AQE (range partitioning, no stage rules)
-    val (plainRows, _, plainParts) =
-      withConf("spark.sql.adaptive.enabled" -> "false")(run(aggSorted))
-    assert(plainParts.exists(_._1.isInstanceOf[RangePartitioning]), plainParts)
-    assert(rows.size == 37 && rows == plainRows && rows == rangeRows && rows == singleRows)
+    val (plainRows, _, _) = withConf("spark.sql.adaptive.enabled" -> "false")(run(aggSorted))
+    assert(rows.size == 37 && rows == singleRows && rows == plainRows)
   }
 
   test("a shuffled join of two small stages reads both sides as one partition") {
