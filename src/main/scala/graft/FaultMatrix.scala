@@ -106,10 +106,10 @@ object FaultMatrix {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Run a query to completion: its canonical hash and wall seconds. */
-  private def timedHash(spark: SparkSession, fn: Query, sfDir: String): (String, Double) = {
+  /** Run a frame to completion: its canonical hash and wall seconds. */
+  private def timedHash(df: => DataFrame): (String, Double) = {
     val t0 = System.nanoTime()
-    val h = canonicalHash(fn(spark, sfDir).collect())
+    val h = canonicalHash(df.collect())
     (h, (System.nanoTime() - t0) / 1e9)
   }
 
@@ -194,7 +194,7 @@ object FaultMatrix {
     waitForFleet(preexisting, n)
     val results = r.queries.map { case (name, fn) =>
       spark.catalog.clearCache()
-      val (healthy, wallHealthy) = timedHash(spark, fn, r.sfDir)
+      val (healthy, wallHealthy) = timedHash(fn(spark, r.sfDir))
       spark.catalog.clearCache()
       val (p, attempts) = untilLanded[KillPass](_.landed) { _ =>
         val start = ledger.snapshot()
@@ -207,7 +207,7 @@ object FaultMatrix {
             }
           }
         }
-        val (chaos, wall) = timedHash(spark, fn, r.sfDir)
+        val (chaos, wall) = timedHash(fn(spark, r.sfDir))
         killer.join(90000)
         // drain, THEN read: in-run failure events may still be queued
         // at collect return; a post-job kill generates none, so the
@@ -284,8 +284,14 @@ object FaultMatrix {
           // the reference hash is deterministic and session-independent:
           // a retry re-paying the full healthy run attests nothing extra
           val (healthy, wallHealthy) = prev.map(p => (p.healthyHash, p.wallHealthy))
-            .getOrElse(timedHash(spark, fn, r.sfDir))
+            .getOrElse(timedHash(fn(spark, r.sfDir)))
           spark.catalog.clearCache()
+          // caches pinned before the window, as Bench and Verify run a
+          // query: the signal then reaches tasks that read finished
+          // caches, never one storing a cache block (a decommissioning
+          // BlockManager refuses it and the task fails)
+          val df = fn(spark, r.sfDir)
+          graft.operators.Staging.pinCaches(df)
           val start = ledger.snapshot()
           val victim = new AtomicLong(-1L)
           val delivered = new AtomicLong(Long.MaxValue)
@@ -316,7 +322,7 @@ object FaultMatrix {
               }
             }
           }
-          val (decom, wall) = timedHash(spark, fn, r.sfDir)
+          val (decom, wall) = timedHash(df)
           val collectEnd = System.nanoTime()
           drainer.join(90000)
           // a signal after collect returned drains leftover blocks of a
@@ -327,8 +333,12 @@ object FaultMatrix {
           // master's asynchronous removal event, and only THEN read the
           // migration counters: the block handoff finishes before the
           // executor exits, so reading at collect-return would
-          // undercount a drain still in flight
-          awaitUntil(30, 200)(victim.get() <= 0 || (ledger.live() - start).executorsRemoved > 0)
+          // undercount a drain still in flight. The executor exits only
+          // after a migration round that starts once its last task has
+          // ended, and rounds are 30 s apart (Spark's
+          // replicationReattemptInterval): over pinned caches the
+          // collect ends seconds after the signal, so wait out a round
+          awaitUntil(60, 200)(victim.get() <= 0 || (ledger.live() - start).executorsRemoved > 0)
           val end = ledger.snapshot()
           DecomPass(healthy == decom, victim.get(), (end - start).executorsRemoved,
             (end - start).shuffleBlocks, Option(atSignal.get).fold(0L)(s => (end - s).rddBlocks),
@@ -374,7 +384,7 @@ object FaultMatrix {
       waitForFleet(preexisting, n)
       val hashes = r.queries.map { case (name, fn) =>
         spark.catalog.clearCache()
-        name -> timedHash(spark, fn, r.sfDir)
+        name -> timedHash(fn(spark, r.sfDir))
       }.toMap
       SessionDefaults.stopAndReap(spark)
       hashes
@@ -395,7 +405,7 @@ object FaultMatrix {
     val results = r.queries.map { case (name, fn) =>
       spark.catalog.clearCache()
       val start = ledger.snapshot()
-      val (h, wall) = timedHash(spark, fn, r.sfDir)
+      val (h, wall) = timedHash(fn(spark, r.sfDir))
       val run = ledger.snapshot() - start
       val (refHash, refWall) = ref(name)
       val equal = h == refHash
@@ -542,19 +552,19 @@ object FaultMatrix {
     val widthPinned = spreadParts == width
 
     // 2. shuffle-heavy query during ramp-up vs at steady state
-    val rampHash = timedHash(spark, fn, r.sfDir)._1
+    val rampHash = timedHash(fn(spark, r.sfDir))._1
     // ramp evidence snapshots HERE (behind the bus barrier): adds
     // counted later — the requery's own ramp — must not satisfy the
     // "scaled up during the ramp query" claim
     val addedDuringRamp = ledger.snapshot().executorsAdded
     spark.catalog.clearCache()
-    val steadyHash = timedHash(spark, fn, r.sfDir)._1
+    val steadyHash = timedHash(fn(spark, r.sfDir))._1
     spark.catalog.clearCache()
     val hashEqual = rampHash == steadyHash
 
     // 3. let the fleet decay below max, then demand work again
     awaitUntil(45, 500)(ledger.live().executorsRemoved > 0)
-    val requeryOk = timedHash(spark, fn, r.sfDir)._1 == steadyHash
+    val requeryOk = timedHash(fn(spark, r.sfDir))._1 == steadyHash
 
     val end = ledger.snapshot()
     val ramped = addedDuringRamp >= 2 // beyond the single initial executor

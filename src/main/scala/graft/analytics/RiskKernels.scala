@@ -3,26 +3,32 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The reference's analytics-enrichment pipeline (§3.2 /
-  * Organizers.py:125-292 `Calc_Risks`) as one declarative Spark
-  * transform: per price basis (close, midpoint, weighted midpoint,
-  * bid, ask) compute BS IV, binomial IV and greeks, then the
-  * ±inf/NaN→0 cleanup.
+/** The reference's analytics enrichment (§3.2 / Organizers.py:125-292
+  * `Calc_Risks`, with the missing-vol rescue of lines 172-185) as two
+  * per-row kernels over the same input columns (right ('C'/'P'),
+  * underlier_price, strike, year_frac, rf_rate, div_yield, and a price
+  * column):
   *
-  * The kernels are deterministic Scala UDFs — the one place the
-  * engine leaves codegen, exactly as SURVEY §2.9 prescribes (no Spark
-  * built-in exists). The UDF returns ONE struct per price basis so
-  * each row pays a single kernel invocation per basis, not one per
-  * output column; Catalyst expands the struct into columns for free.
+  *  - [[riskVerifiedOf]] ([[calcRisksVerified]], q43/q75/q81): BS IV,
+  *    binomial IV, greeks and Dollar_Delta after the ±inf/NaN→0
+  *    cleanup, plus the [[RiskCheck]] self-verification booleans;
+  *  - [[bsIvOf]] ([[bsIv]], q89 and its [[rescueMissingVol]]): the BS
+  *    IV alone, equal to `riskOf(...).bs_iv` by construction.
   *
-  * Per row and basis the cost is dominated by the binomial IV solve:
-  * about 7 CRR trees of 100 steps, each `2·steps+1` `pow` calls plus
+  * They are deterministic Scala UDFs, the one place the engine leaves
+  * codegen, exactly as SURVEY §2.9 prescribes (no Spark built-in
+  * exists); every Scala UDF of the engine is defined here. The full
+  * kernel returns ONE struct per row, so each row pays a single kernel
+  * invocation, not one per output column; Catalyst expands the struct
+  * into columns for free.
+  *
+  * The full kernel's cost is dominated by the binomial IV solve: about
+  * 7 CRR trees of 100 steps, each `2·steps+1` `pow` calls plus
   * O(steps²) multiply-adds (see [[BlackScholes.binomialPrice]]). The
   * solve is seeded with the row's BS IV, which brackets the tree's root
   * in two trees; Brent steps close the bracket
   * ([[BlackScholes.impliedVol]]). The BS solve and greeks are
-  * closed-form by comparison. The missing-vol rescue reads only the BS
-  * IV, so it calls [[bsIvOf]] and builds no tree.
+  * closed-form by comparison, so the BS-only kernel builds no tree.
   */
 object RiskKernels {
 
@@ -68,8 +74,30 @@ object RiskKernels {
     if (anyNull(right, price, s, k, t, r, q)) 0.0
     else z(bsImpliedVol(isCallRight(right), price, s, k, t, r, q))
 
-  private val riskUdf = udf(riskOf _)
+  /** The BS roundtrip rule: a nonzero `iv` prices back to `price`
+    * within 1e-6; a zero `iv` (unsolved) passes. */
+  def bsRoundtripOk(right: String, iv: Double, price: Double, s: Double,
+      k: Double, t: Double, r: Double, q: Double): Boolean =
+    iv == 0.0 || math.abs(bsPrice(isCallRight(right), s, k, t, r, q, iv) - price) < 1e-6
+
   private val bsIvUdf = udf(bsIvOf _)
+  private val bsRoundtripUdf = udf(bsRoundtripOk _)
+
+  private def inputs(price: Column): Seq[Column] =
+    Seq(col("right"), price, col("underlier_price"), col("strike"),
+      col("year_frac"), col("rf_rate"), col("div_yield"))
+
+  /** [[bsIvOf]] of each row at `priceCol`. */
+  def bsIv(priceCol: String): Column = bsIvUdf(inputs(col(priceCol)): _*)
+
+  /** [[bsRoundtripOk]] of each row's `iv` at `price`. */
+  def bsRoundtrip(iv: Column, price: Column): Column =
+    bsRoundtripUdf(col("right") +: iv +: inputs(price).tail: _*)
+
+  /** Intrinsic value: max(S − K, 0) for a call, max(K − S, 0) for a put. */
+  def intrinsic: Column =
+    greatest(when(col("right") === "C", col("underlier_price") - col("strike"))
+      .otherwise(col("strike") - col("underlier_price")), lit(0.0))
 
   /** Self-verification of the risk kernel, per row: each boolean holds
     * whenever the kernels are internally consistent, independent of
@@ -98,8 +126,7 @@ object RiskKernels {
   def verifyRisk(right: String, price: Double, s: Double, k: Double,
       t: Double, r: Double, q: Double, risk: Risk): RiskCheck = {
     val isCall = isCallRight(right)
-    val bsOk = risk.bs_iv == 0.0 ||
-      math.abs(bsPrice(isCall, s, k, t, r, q, risk.bs_iv) - price) < 1e-6
+    val bsOk = bsRoundtripOk(right, risk.bs_iv, price, s, k, t, r, q)
     val binOk = risk.binomial_iv == 0.0 ||
       math.abs(binomialPrice(isCall, s, k, t, r, q, risk.binomial_iv) - price) < 1e-6
     val solved = risk.bs_iv > 0.0
@@ -127,60 +154,23 @@ object RiskKernels {
 
   private val riskVerifiedUdf = udf(riskVerifiedOf _)
 
-  /** [[calcRisks]] for one un-prefixed basis, plus the [[RiskCheck]]
-    * self-verification booleans — one kernel invocation per row. */
-  def calcRisksVerified(df: DataFrame, priceCol: String): DataFrame = {
-    val v = riskVerifiedUdf(col("right"), col(priceCol),
-      col("underlier_price"), col("strike"), col("year_frac"),
-      col("rf_rate"), col("div_yield"))
-    val riskCols = Seq("bs_iv", "binomial_iv", "delta", "gamma", "theta",
-      "vega", "rho", "dollar_delta").map(f => f -> col(s"__v.risk.$f"))
-    val checkCols = Seq("bs_roundtrip_ok", "binomial_roundtrip_ok",
-      "delta_in_range", "gamma_nonneg", "vega_nonneg", "dollar_delta_exact")
-      .map(f => f -> col(s"__v.check.$f"))
-    (riskCols ++ checkCols)
-      .foldLeft(df.withColumn("__v", v)) { case (d, (n, c)) => d.withColumn(n, c) }
+  /** The [[Risk]] columns and the [[RiskCheck]] self-verification
+    * booleans of each row at `priceCol`, appended to `df` in field
+    * order: one kernel invocation per row. */
+  def calcRisksVerified(df: DataFrame, priceCol: String): DataFrame =
+    df.withColumn("__v", riskVerifiedUdf(inputs(col(priceCol)): _*))
+      .select(col("*"), col("__v.risk.*"), col("__v.check.*"))
       .drop("__v")
-  }
 
   /** U4 — missing-vol rescue (Organizers.py:172-185): rows whose
     * primary-price IV solved to 0 are re-solved with a fallback price
     * column (the reference retries with the midpoint). Declarative
     * `when` over a second kernel call on the SAME row — no second
     * pass over the data, no union. The re-solve is BS-only
-    * ([[bsIvOf]]): it yields exactly `riskOf(...).bs_iv` without the
-    * binomial solve and greeks nobody reads.
+    * ([[bsIv]]), like the primary IV it replaces.
     */
   def rescueMissingVol(df: DataFrame, ivCol: String,
-      fallbackPriceCol: String): DataFrame = {
-    val rescued = bsIvUdf(col("right"), col(fallbackPriceCol),
-      col("underlier_price"), col("strike"), col("year_frac"),
-      col("rf_rate"), col("div_yield"))
+      fallbackPriceCol: String): DataFrame =
     df.withColumn(ivCol,
-      when(col(ivCol) === 0.0, rescued).otherwise(col(ivCol)))
-  }
-
-  /** Enrich `df` with IV/greeks columns for each (prefix → price
-    * column) basis, like Organizers' close/midpoint/weighted-midpoint/
-    * bid/ask passes (Organizers.py:162-271).
-    *
-    * Expects columns: right ('C'/'P'), underlier_price, strike,
-    * year_frac, rf_rate, div_yield.
-    */
-  def calcRisks(df: DataFrame, bases: Map[String, String]): DataFrame =
-    bases.foldLeft(df) { case (d, (prefix, priceCol)) =>
-      val r = riskUdf(col("right"), col(priceCol), col("underlier_price"),
-        col("strike"), col("year_frac"), col("rf_rate"), col("div_yield"))
-      val tag = if (prefix.isEmpty) "" else s"${prefix}_"
-      d.withColumn(s"__r_$prefix", r)
-        .withColumn(s"${tag}bs_iv", col(s"__r_$prefix.bs_iv"))
-        .withColumn(s"${tag}binomial_iv", col(s"__r_$prefix.binomial_iv"))
-        .withColumn(s"${tag}delta", col(s"__r_$prefix.delta"))
-        .withColumn(s"${tag}gamma", col(s"__r_$prefix.gamma"))
-        .withColumn(s"${tag}theta", col(s"__r_$prefix.theta"))
-        .withColumn(s"${tag}vega", col(s"__r_$prefix.vega"))
-        .withColumn(s"${tag}rho", col(s"__r_$prefix.rho"))
-        .withColumn(s"${tag}dollar_delta", col(s"__r_$prefix.dollar_delta"))
-        .drop(s"__r_$prefix")
-    }
+      when(col(ivCol) === 0.0, bsIv(fallbackPriceCol)).otherwise(col(ivCol)))
 }

@@ -202,12 +202,8 @@ final class BulkApi(
       .withColumn("option_tick", graft.functions.OccSymbol.generate(
         concat(lit("R"), col("root").cast("string")),
         col("expiration"), col("right"), col("strike")))
-      .withColumn("price",
-        greatest(
-          when(col("right") === "C", col("underlier_price") - col("strike"))
-            .otherwise(col("strike") - col("underlier_price")), lit(0.0)) +
-          col("underlier_price") *
-            (lit(0.08) + (dayofmonth(col("datetime")) % 11).cast("double") / 200.0))
+      .withColumn("price", RiskKernels.intrinsic + col("underlier_price") *
+        (lit(0.08) + (dayofmonth(col("datetime")) % 11).cast("double") / 200.0))
     // Explicit pre-kernel spread (round-16 cluster-profile lesson):
     // the IV solves + greeks below are expensive PER ROW at any width,
     // and without this the kernel rides whatever partitioning the
@@ -279,11 +275,8 @@ final class BulkApi(
         datediff(col("expiration"), to_date(col("ts"))).cast("double") / 365.0)
       .withColumn("rf_rate", lit(rfRate))
       .withColumn("div_yield", lit(divYield))
-      .withColumn("price",
-        greatest(
-          when(col("right") === "C", col("underlier_price") - col("strike"))
-            .otherwise(col("strike") - col("underlier_price")), lit(0.0)) +
-          col("underlier_price") * (lit(0.02) + (col("seq") % 11).cast("double") / 200.0))
+      .withColumn("price", RiskKernels.intrinsic +
+        col("underlier_price") * (lit(0.02) + (col("seq") % 11).cast("double") / 200.0))
     RiskKernels.calcRisksVerified(snap, "price")
       .select(col("root") +: cidCols :+ col("ts").as("datetime") :+
         col("underlier_price") :+ col("year_frac") :+ col("price") :+

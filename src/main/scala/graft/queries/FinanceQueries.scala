@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.analytics.{BlackScholes, RiskKernels}
+import graft.analytics.RiskKernels
 import graft.functions.OccSymbol
 import graft.operators.CoreOps._
 import graft.operators.{Patches, TickerSplice}
@@ -199,11 +199,8 @@ object FinanceQueries {
       .withColumn("year_frac", lit(0.05) + ($"o_orderkey" % 24).cast("double") / 24.0)
       .withColumn("rf_rate", lit(0.045))
       .withColumn("div_yield", lit(0.012))
-      .withColumn("price",
-        greatest(
-          when($"right" === "C", $"underlier_price" - $"strike")
-            .otherwise($"strike" - $"underlier_price"), lit(0.0)) +
-          $"underlier_price" * (lit(0.02) + ($"o_orderkey" % 11).cast("double") / 200.0))
+      .withColumn("price", RiskKernels.intrinsic +
+        $"underlier_price" * (lit(0.02) + ($"o_orderkey" % 11).cast("double") / 200.0))
     RiskKernels.calcRisksVerified(c, "price")
       .select($"o_orderkey",
         OccSymbol.generate($"root", $"expiration", $"right", $"strike").as("option_tick"),
@@ -242,21 +239,10 @@ object FinanceQueries {
       |FROM p
       |ORDER BY o_orderkey""".stripMargin
 
-  /** When the final IV is nonzero, pricing it back must recover the
-    * price the solve actually used (the fallback for rescued rows) —
-    * the same roundtrip contract [[RiskKernels.verifyRisk]] applies
-    * to the primary pass.
-    */
-  private val rescueRoundtripUdf = udf(
-    (right: String, iv: Double, px: Double, s: Double, k: Double,
-     t: Double, r: Double, q: Double) => {
-      val isCall = right != null && right.nonEmpty &&
-        Character.toUpperCase(right.charAt(0)) == 'C'
-      iv == 0.0 || math.abs(BlackScholes.bsPrice(isCall, s, k, t, r, q, iv) - px) < 1e-6
-    })
-
   /** U4 — missing-vol rescue (Organizers.py:172-185): rows whose
-    * primary-price IV solved to 0 are re-solved from the midpoint via
+    * primary-price IV ([[RiskKernels.bsIv]], BS-only: nothing here
+    * reads the binomial IV or greeks) solved to 0 are re-solved from
+    * the midpoint via
     * [[RiskKernels.rescueMissingVol]] — a declarative `when` over a
     * second kernel call on the same row, no second pass and no union.
     * Here the broken primary is a dead price of 0.0 (the reference's
@@ -267,7 +253,8 @@ object FinanceQueries {
     * self-verification booleans TRUE (q43/q75 pattern):
     * primary IV was 0 where rescued, rescued rows solved, untouched
     * rows kept their IV bit-for-bit, and the final IV roundtrips
-    * through bsPrice at whichever price the solve used.
+    * through bsPrice at whichever price the solve used (the
+    * `bs_roundtrip_ok` rule, [[RiskKernels.bsRoundtripOk]]).
     */
   def missingVolRescue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -284,16 +271,15 @@ object FinanceQueries {
         $"underlier_price" * (lit(0.02) + ($"o_orderkey" % 11).cast("double") / 200.0))
       .withColumn("needs_rescue", $"o_orderkey" % 4 === 0)
       .withColumn("price", when($"needs_rescue", lit(0.0)).otherwise($"mid_price"))
-    val enriched = RiskKernels.calcRisks(c, Map("" -> "price"))
+    val enriched = c.withColumn("bs_iv", RiskKernels.bsIv("price"))
       .withColumn("iv_before", $"bs_iv")
     RiskKernels.rescueMissingVol(enriched, "bs_iv", "mid_price")
       .withColumn("primary_zero_ok", !$"needs_rescue" || $"iv_before" === 0.0)
       .withColumn("rescued_solved_ok", !$"needs_rescue" || $"bs_iv" > 0.0)
       .withColumn("untouched_ok", $"needs_rescue" || $"bs_iv" === $"iv_before")
       .withColumn("rescue_roundtrip_ok",
-        rescueRoundtripUdf($"right", $"bs_iv",
-          when($"needs_rescue", $"mid_price").otherwise($"price"),
-          $"underlier_price", $"strike", $"year_frac", $"rf_rate", $"div_yield"))
+        RiskKernels.bsRoundtrip($"bs_iv",
+          when($"needs_rescue", $"mid_price").otherwise($"price")))
       .select($"o_orderkey", $"right", $"underlier_price", $"strike",
         $"year_frac", $"price", $"mid_price", $"needs_rescue",
         $"primary_zero_ok", $"rescued_solved_ok", $"untouched_ok",

@@ -73,7 +73,7 @@ class FormattingSpec extends AnyFunSuite {
       ("C", 100.0, 60.0, 1.0, 0.05, 0.0, 1.0, 43.5)
     ).toDF("right", "underlier_price", "strike", "year_frac", "rf_rate",
       "div_yield", "price", "mid_price")
-    val base = RiskKernels.calcRisks(rows, Map("" -> "price"))
+    val base = rows.withColumn("bs_iv", RiskKernels.bsIv("price"))
     val rescued = RiskKernels.rescueMissingVol(base, "bs_iv", "mid_price")
       .select($"strike", $"bs_iv").orderBy($"strike").collect()
     assert(rescued(0).getDouble(1) > 0.0) // rescued from midpoint

@@ -1,5 +1,7 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.BlackScholes._
@@ -56,6 +58,53 @@ class RiskKernelsSpec extends AnyFunSuite {
         assert(iv == 0.0 && evals <= evalCap, s"$row $name guess=$guess: iv=$iv evals=$evals")
       }
     }
+  }
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  test("bsIvOf and bsRoundtripOk agree with riskOf and verifyRisk, ordinary and degenerate rows") {
+    def orDegenerate(g: Gen[Double]) = Gen.frequency(1 -> Gen.oneOf(degenerate), 5 -> g)
+    val args = for {
+      // both rights, in the spellings the kernels read by first letter
+      right <- Gen.oneOf("C", "P", "c", "put", null)
+      s <- orDegenerate(Gen.choose(20.0, 400.0))
+      // K/S: ITM, ATM and OTM for either right
+      m <- Gen.oneOf(Gen.oneOf(0.8, 1.0, 1.25), Gen.choose(0.5, 1.5))
+      k <- orDegenerate(Gen.const((if (s > 0.0 && java.lang.Double.isFinite(s)) s else 100.0) * m))
+      t <- orDegenerate(Gen.choose(1e-3, 2.5))
+      sg <- Gen.choose(0.05, 1.5)
+      u <- Gen.choose(0.0, 1.0)
+      kind <- Gen.choose(0, 3)
+      bad <- Gen.oneOf(degenerate)
+    } yield {
+      val isCall = right != null && right.toUpperCase.startsWith("C")
+      // a degenerate price, one below intrinsic, one above the
+      // no-arbitrage cap, or the BS price at σ
+      val price = kind match {
+        case 0 => bad
+        case 1 => math.max(if (isCall) s - k else k - s, 0.0) * u
+        case 2 => (if (isCall) s else k) * (1.0 + u)
+        case _ => bsPrice(isCall, s, k, t, r, q, sg)
+      }
+      (right, price, s, k, t, sg)
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(500).withInitialSeed(Seed(20261022L)),
+      Prop.forAllNoShrink(args) { case (right, price, s, k, t, sg) =>
+        val risk = riskOf(right, price, s, k, t, r, q)
+        val bsIv = bsIvOf(right, price, s, k, t, r, q)
+        val checks = Seq(
+          s"bsIvOf $bsIv != riskOf.bs_iv ${risk.bs_iv}" -> (bits(bsIv) == bits(risk.bs_iv))) ++
+          Seq(risk.bs_iv, sg, 0.0).map { iv =>
+            val rule = bsRoundtripOk(right, iv, price, s, k, t, r, q)
+            val check = verifyRisk(right, price, s, k, t, r, q, risk.copy(bs_iv = iv))
+            s"iv=$iv: rule $rule != bs_roundtrip_ok ${check.bs_roundtrip_ok}" ->
+              (rule == check.bs_roundtrip_ok)
+          }
+        val why = checks.collect { case (msg, false) => msg }
+        Prop(why.isEmpty) :| s"$right price=$price s=$s k=$k t=$t: ${why.mkString("; ")}"
+      })
+    assert(res.passed, res.status.toString)
   }
 
   test("an out-of-range guess falls back to the unseeded solve") {
