@@ -281,17 +281,22 @@ object FaultMatrix {
         try {
           val ledger = Ledger.of(spark)
           waitForFleet(preexisting, n)
-          // the reference hash is deterministic and session-independent:
-          // a retry re-paying the full healthy run attests nothing extra
-          val (healthy, wallHealthy) = prev.map(p => (p.healthyHash, p.wallHealthy))
-            .getOrElse(timedHash(fn(spark, r.sfDir)))
-          spark.catalog.clearCache()
           // caches pinned before the window, as Bench and Verify run a
           // query: the signal then reaches tasks that read finished
           // caches, never one storing a cache block (a decommissioning
-          // BlockManager refuses it and the task fails)
-          val df = fn(spark, r.sfDir)
-          graft.operators.Staging.pinCaches(df)
+          // BlockManager refuses it and the task fails). Both walls time
+          // only the collect of a pinned frame.
+          def pinned(): DataFrame = {
+            val df = fn(spark, r.sfDir)
+            graft.operators.Staging.pinCaches(df)
+            df
+          }
+          // the reference hash is deterministic and session-independent:
+          // a retry re-paying the full healthy run attests nothing extra
+          val (healthy, wallHealthy) = prev.map(p => (p.healthyHash, p.wallHealthy))
+            .getOrElse { val df = pinned(); timedHash(df) }
+          spark.catalog.clearCache()
+          val df = pinned()
           val start = ledger.snapshot()
           val victim = new AtomicLong(-1L)
           val delivered = new AtomicLong(Long.MaxValue)

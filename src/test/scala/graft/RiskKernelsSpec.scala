@@ -62,7 +62,7 @@ class RiskKernelsSpec extends AnyFunSuite {
 
   private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
 
-  test("bsIvOf and bsRoundtripOk agree with riskOf and verifyRisk, ordinary and degenerate rows") {
+  test("bsIvOf matches riskOf bit for bit and bsRoundtripOk matches bsPrice, ordinary and degenerate rows") {
     def orDegenerate(g: Gen[Double]) = Gen.frequency(1 -> Gen.oneOf(degenerate), 5 -> g)
     val args = for {
       // both rights, in the spellings the kernels read by first letter
@@ -86,21 +86,22 @@ class RiskKernelsSpec extends AnyFunSuite {
         case 2 => (if (isCall) s else k) * (1.0 + u)
         case _ => bsPrice(isCall, s, k, t, r, q, sg)
       }
-      (right, price, s, k, t, sg)
+      (right, isCall, price, s, k, t, sg)
     }
     val res = Test.check(Test.Parameters.default
       .withMinSuccessfulTests(500).withInitialSeed(Seed(20261022L)),
-      Prop.forAllNoShrink(args) { case (right, price, s, k, t, sg) =>
+      Prop.forAllNoShrink(args) { case (right, isCall, price, s, k, t, sg) =>
         val risk = riskOf(right, price, s, k, t, r, q)
         val bsIv = bsIvOf(right, price, s, k, t, r, q)
+        // the rule against the BS price of the right read from its
+        // first letter: a call/put mix-up fails ITM and OTM rows
+        val atSg = math.abs(bsPrice(isCall, s, k, t, r, q, sg) - price) < 1e-6
         val checks = Seq(
-          s"bsIvOf $bsIv != riskOf.bs_iv ${risk.bs_iv}" -> (bits(bsIv) == bits(risk.bs_iv))) ++
-          Seq(risk.bs_iv, sg, 0.0).map { iv =>
-            val rule = bsRoundtripOk(right, iv, price, s, k, t, r, q)
-            val check = verifyRisk(right, price, s, k, t, r, q, risk.copy(bs_iv = iv))
-            s"iv=$iv: rule $rule != bs_roundtrip_ok ${check.bs_roundtrip_ok}" ->
-              (rule == check.bs_roundtrip_ok)
-          }
+          s"bsIvOf $bsIv != riskOf.bs_iv ${risk.bs_iv}" -> (bits(bsIv) == bits(risk.bs_iv)),
+          s"no roundtrip at the solved iv $bsIv" ->
+            bsRoundtripOk(right, bsIv, price, s, k, t, r, q),
+          s"roundtrip at sigma=$sg != bsPrice within 1e-6 ($atSg)" ->
+            (bsRoundtripOk(right, sg, price, s, k, t, r, q) == atSg))
         val why = checks.collect { case (msg, false) => msg }
         Prop(why.isEmpty) :| s"$right price=$price s=$s k=$k t=$t: ${why.mkString("; ")}"
       })

@@ -1,22 +1,20 @@
 // Build-rule probe: how much of a query's frame build is Catalyst rule
-// work. Each named query is built (its `SparkEntry.queries` function
-// called, which analyses every Dataset step; nothing is executed) a few
-// times to warm up, then N times with the rule metering reset before each
-// build. The session is the engine's own (SessionDefaults.session on
-// local[n]).
+// work. Each of the four risk queries (q43, q75, q81, q89; edit `names`
+// to probe others) is built (its `SparkEntry.queries` function called,
+// which analyses every Dataset step; nothing is executed) 3 times to warm
+// up, then 10 times with the rule metering reset before each build. The
+// session is the engine's own (SessionDefaults.session on local[4]).
 //
 //   sbt compile
 //   SPARK_GRAFT_SF_DIR=<test tables> $SPARK_HOME/bin/spark-shell --master 'local[1]' \
 //     --driver-memory 2g --driver-class-path target/scala-2.13/classes \
 //     --conf spark.ui.enabled=false -I tools/build_rules_probe.scala
 //
-// Env: SPARK_GRAFT_SF_DIR (the tables, required), PROBE_QUERIES (comma
-// list, default the four risk queries q43, q75, q81, q89), PROBE_CPUS
-// (n, default 4), PROBE_WARMUPS (default 3), PROBE_BUILDS (default 10).
-// Prints one `build` line per timed build (wall ms of the build, rule
-// runs and rule ms from RuleExecutor.getCurrentMetrics(), effective runs
-// being those that changed the plan) and one `build_median` line per
-// query. The rule meter is process-wide, so run nothing else in the JVM.
+// SPARK_GRAFT_SF_DIR names the tables (required). Prints one `build`
+// line per timed build (wall ms of the build, rule runs and rule ms from
+// RuleExecutor.getCurrentMetrics(), effective runs being those that
+// changed the plan) and one `build_median` line per query (the mean of
+// the two middle builds). The rule meter is process-wide, so run nothing else in the JVM.
 
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 
@@ -24,15 +22,16 @@ object BuildRulesProbe {
   def main(): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a directory of test tables"))
-    val names = sys.env.getOrElse("PROBE_QUERIES", "q43_risk_enrichment," +
-      "q75_snapshot_greeks,q81_option_data_to_save,q89_missing_vol_rescue")
-      .split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("PROBE_CPUS", "4")
-    val warmups = sys.env.getOrElse("PROBE_WARMUPS", "3").toInt
-    val builds = sys.env.getOrElse("PROBE_BUILDS", "10").toInt
-    val s = graft.SessionDefaults.session(s"local[$cpus]", cpus)
+    val names = Seq("q43_risk_enrichment", "q75_snapshot_greeks",
+      "q81_option_data_to_save", "q89_missing_vol_rescue")
+    val warmups = 3
+    val builds = 10
+    val s = graft.SessionDefaults.session("local[4]", "4")
 
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    def median(xs: Seq[Double]): Double = {
+      val v = xs.sorted
+      (v((v.size - 1) / 2) + v(v.size / 2)) / 2
+    }
     for ((name, fn) <- graft.SparkEntry.select(names)) {
       (0 until warmups).foreach(_ => fn(s, dir))
       val rows = (0 until builds).map { i =>
